@@ -1321,11 +1321,11 @@ def q_flagship_synth(spark, sf_dir):
     STX token stats + lag/lead + sessionize + backward as-of (7d), verified
     against the pandas oracle in tests/test_pipeline.py."""
     from esa_pfa_spark import synth
-    from esa_pfa_spark.plans.pipeline import feature_table
+    from esa_pfa_spark.plans.pipeline import feature_table_fused
 
     obs = synth.observations_df(spark, seed=42, n_entities=30, mean_obs=25, mean_tok=24)
     probes = synth.queries_df(spark, seed=42, n_entities=30, mean_obs=25)
-    return feature_table(obs, probes).drop("tokens")
+    return feature_table_fused(obs, probes).drop("tokens")
 
 
 def q_nonreuse_pairs_synth(spark, sf_dir):

@@ -1,22 +1,17 @@
 #!/usr/bin/env python
 """Benchmark harness.
 
-Default mode: runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] plus the flagship
-synthetic as-of + window feature build, and prints ONE JSON line:
+Runs the headline queries at $SPARK_GRAFT_SF_DIR (default: the sf0.1
+test data) on local[$SPARK_GRAFT_CPUS] (default: the CPUs this process
+may run on) plus the flagship synthetic as-of + window
+feature build (``feature_table_fused``), and prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ..., "sequences_per_sec": ...}
 
---scaling mode: runs the flagship pipeline in two fresh subprocesses at
-local[N] and local[4N] (pair from BENCH_SCALING_PAIR, default "4,16")
-on the SAME synthetic input and writes BENCH/BASELINE.md with throughput
-at both and the scaling efficiency (BASELINE.json two-cluster-size
-criterion, evidenced by parallelism levels since the sandbox has no
-multi-node cluster).  Run --calibrate first: it records each pair's
-hardware ceiling to BENCH/CALIBRATION.json, which BASELINE.md cites.
-
 Execution is forced with a noop-sink write (count() alone can prune
-projections and undercount the work).
+projections and undercount the work).  The reports under ``BENCH/``
+other than ``LAST_BENCH.json`` are frozen records of modes this script
+no longer has (see README).
 """
 
 from __future__ import annotations
@@ -24,7 +19,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
 import sys
 import time
 from pathlib import Path
@@ -249,82 +243,31 @@ def ensure_flagship_input(spark) -> None:
         probes.write.mode("overwrite").parquet(PROBES_PATH)
 
 
-FLAGSHIP_VARIANT = os.environ.get("BENCH_FLAGSHIP_VARIANT", "slim")
+def run_flagship(spark, repeats: int = 1) -> tuple[float, int]:
+    """Time the as-of + window feature build (``feature_table_fused``, the
+    plan ``cli run`` executes); returns (best sec, n_sequences).  min-of-N
+    defends against scheduler noise on a shared host."""
+    from esa_pfa_spark.plans.pipeline import feature_table_fused
 
-
-def run_flagship(spark, repeats: int = 1, variant: str | None = None) -> tuple[float, int]:
-    """Time the as-of + window feature build; returns (best sec, n_sequences).
-    min-of-N defends against scheduler noise on a shared host.
-
-    variant: "slim" (default — tokens fetched by row key AFTER the as-of,
-    so the window exchange+sorts move ~4x fewer bytes; row-identical to
-    the fused plan, tests/test_pipeline.py::test_slim_equals_fused) or
-    "fused" (r1/r2 plan: tokens ride the one exchange)."""
-    from esa_pfa_spark.plans.pipeline import feature_table_fused, feature_table_slim
-
-    fn = {"slim": feature_table_slim, "fused": feature_table_fused}[
-        variant or FLAGSHIP_VARIANT
-    ]
     obs = spark.read.parquet(TOKENS_PATH)
     probes = spark.read.parquet(PROBES_PATH)
     n_seq = obs.count()
     best = float("inf")
     for _ in range(repeats):
         t0 = time.time()
-        _force(fn(obs, probes).drop("tokens"))
+        _force(feature_table_fused(obs, probes).drop("tokens"))
         best = min(best, time.time() - t0)
     return best, n_seq
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--scaling", action="store_true")
-    ap.add_argument("--skew", action="store_true")
-    ap.add_argument("--skew-tokens", action="store_true")
-    ap.add_argument("--skew-asof", action="store_true")
-    ap.add_argument("--bpe", action="store_true")
-    ap.add_argument("--multimodal", action="store_true")
-    ap.add_argument("--skew-decay", action="store_true")
-    ap.add_argument("--flagship-only", action="store_true")
-    ap.add_argument("--calibrate", action="store_true",
-                    help="pure-CPU parallel-capacity burn: prints effective "
-                         "capacity at 1/2/4/8/16/32 pinned processes and the "
-                         "4->16 hardware ceiling the scaling gate runs under")
-    ap.add_argument("--warmup", action="store_true",
-                    help="(no-op, kept for compat: warmup+min-of-3 is now the default)")
-    args = ap.parse_args()
-
-    if args.calibrate:
-        run_calibrate()
-        return
-    if args.scaling:
-        run_scaling()
-        return
-    if args.skew:
-        run_skew()
-        return
-    if args.skew_tokens:
-        run_skew_tokens()
-        return
-    if args.skew_asof:
-        run_skew_asof()
-        return
-    if args.bpe:
-        run_bpe()
-        return
-
-    if args.multimodal:
-        run_multimodal()
-        return
-
-    if args.skew_decay:
-        run_skew_decay()
-        return
-
+    # no options: a removed mode's flag fails loudly instead of silently
+    # running the default mode
+    argparse.ArgumentParser(description=__doc__.splitlines()[0]).parse_args()
     from esa_pfa_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     # bench inputs are far smaller than production splits: shrink split
     # sizing so scan-side stages reach full parallelism (at 100 TB the
     # default 128MB splits already give ~800k tasks; here they'd give ~1)
@@ -355,51 +298,47 @@ def main() -> None:
     fsec, n_seq = run_flagship(spark, repeats=3)
     timings["flagship_asof_features"] = round(fsec, 3)
 
-    if not args.flagship_only:
-        # r1/r2 continuity: the OTHER plan variant timed in the same warm
-        # JVM (the headline variant changed to slim in r3; this keeps the
-        # cross-round plan-identical comparison honest).  Skipped in
-        # --flagship-only mode so scaling subprocesses stay lean.
-        other = "fused" if FLAGSHIP_VARIANT == "slim" else "slim"
-        osec, _ = run_flagship(spark, repeats=2, variant=other)
-        timings[f"flagship_{other}_variant"] = round(osec, 3)
-        import __spark_entry__ as entry_mod
+    import __spark_entry__ as entry_mod
 
-        qs = entry_mod.queries()
-        # one untimed pass of the first query warms JVM JIT + parquet footer
-        # caches so per-query numbers measure steady-state execution, not
-        # first-query compilation (the first query otherwise pays ~5s JIT)
-        _force(qs[HEADLINE[0]](spark, sf_dir))
-        # spawn the Python/Arrow worker pool before timing: mapInArrow /
-        # pandas_udf queries otherwise charge one-time worker startup
-        # (~8s measured for token_pack_capacity cold vs 2.5s warm) to
-        # whichever Arrow query runs first — production reuses workers
-        spark.range(1024).repartition(64).mapInArrow(
-            lambda it: it, schema="id: long"
-        ).count()
-        # min-of-2 per query (two full passes, min per query): single-shot
-        # numbers on this shared host swing 2-3x with transient load
-        # (measured flagship 5.2s vs 9.7s across two "idle" runs); the min
-        # of two spaced samples is a far better steady-state estimator and
-        # the first pass doubles as the second's warm-up
-        all_draws: dict[str, list[float]] = {}
-        for _pass in range(2):
-            for name in HEADLINE:
-                t0 = time.time()
-                _force(qs[name](spark, sf_dir))
-                dt_q = round(time.time() - t0, 3)
-                timings[name] = min(timings.get(name, dt_q), dt_q)
-                all_draws.setdefault(name, []).append(dt_q)
-            # several queries pin internal caches (pack_offsets' numbering
-            # relation, curation intermediates) and rightly never unpersist
-            # mid-query; across 2 x 156 queries those leak into the 8g
-            # driver heap.  Clearing between passes keeps each query's
-            # timing isolated (no cross-query cache wins) and the JVM
-            # healthy through the tail of the run.
-            spark.catalog.clearCache()
+    qs = entry_mod.queries()
+    # one untimed pass of the first query warms JVM JIT + parquet footer
+    # caches so per-query numbers measure steady-state execution, not
+    # first-query compilation (the first query otherwise pays ~5s JIT)
+    _force(qs[HEADLINE[0]](spark, sf_dir))
+    # spawn the Python/Arrow worker pool before timing: mapInArrow /
+    # pandas_udf queries otherwise charge one-time worker startup
+    # (~8s measured for token_pack_capacity cold vs 2.5s warm) to
+    # whichever Arrow query runs first — production reuses workers
+    spark.range(1024).repartition(64).mapInArrow(
+        lambda it: it, schema="id: long"
+    ).count()
+    # min-of-2 per query (two full passes, min per query): single-shot
+    # numbers on a shared host swing 2-3x with transient load
+    # (measured flagship 5.2s vs 9.7s across two "idle" runs); the min
+    # of two spaced samples is a far better steady-state estimator and
+    # the first pass doubles as the second's warm-up
+    all_draws: dict[str, list[float]] = {}
+    for _pass in range(2):
+        for name in HEADLINE:
+            t0 = time.time()
+            _force(qs[name](spark, sf_dir))
+            dt_q = round(time.time() - t0, 3)
+            timings[name] = min(timings.get(name, dt_q), dt_q)
+            all_draws.setdefault(name, []).append(dt_q)
+        # several queries pin internal caches (pack_offsets' numbering
+        # relation, curation intermediates) and rightly never unpersist
+        # mid-query; across 2 x 156 queries those leak into the 8g
+        # driver heap.  Clearing between passes keeps each query's
+        # timing isolated (no cross-query cache wins) and the JVM
+        # healthy through the tail of the run.
+        spark.catalog.clearCache()
 
     total = round(sum(timings.values()), 3)
-    out = {
+    # both raw draws for the 10 slowest queries: round-over-round
+    # regression calls on a noisy shared host should rest on the spread,
+    # not a single min (headline numbers stay min-of-2)
+    slowest = sorted(timings, key=lambda k: -timings[k])[:10]
+    line = json.dumps({
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
@@ -407,20 +346,10 @@ def main() -> None:
         "sf": sf_dir,
         "cpus": cpus,
         "flagship_sequences": n_seq,
-        "flagship_variant": FLAGSHIP_VARIANT,
         "sequences_per_sec": round(n_seq / fsec, 1),
-    }
-    if not args.flagship_only:
-        # both raw draws for the 10 slowest queries: round-over-round
-        # regression calls on a noisy shared host should rest on the
-        # spread, not a single min (VERDICT r4 ask; headline numbers
-        # above stay min-of-2 as before)
-        slowest = sorted(timings, key=lambda k: -timings[k])[:10]
-        out["draws"] = 2
-        out["slowest_query_draws"] = {
-            k: all_draws[k] for k in slowest if k in all_draws
-        }
-    line = json.dumps(out)
+        "draws": 2,
+        "slowest_query_draws": {k: all_draws[k] for k in slowest if k in all_draws},
+    })
     print(line)
     # truncation-proof copy: the driver captures stdout tails, which have
     # been observed cut mid-line (BENCH_r03 lost the flagship numbers) —
@@ -428,1070 +357,6 @@ def main() -> None:
     last = REPO / "BENCH" / "LAST_BENCH.json"
     last.parent.mkdir(exist_ok=True)
     last.write_text(line + "\n")
-    spark.stop()
-
-
-# N vs 4N parallelism pair for --scaling, overridable per measurement:
-# BENCH_SCALING_PAIR="1,4" | "2,8" | "4,16" | "8,32".  The pair choice is
-# informed by --calibrate: on a real cluster, 4N executors are 4x the
-# MACHINES at identical per-core throughput (hardware ceiling 1.0); on
-# this single shared host, per-core throughput degrades with total
-# occupancy (hypervisor-level, independent of WHICH vCPUs are pinned —
-# probed), so each pair has a measurable hardware ceiling that bounds any
-# software's ratio.  --scaling records every pair run into
-# BENCH/SCALING_HISTORY.json and the generated BASELINE.md shows all
-# pairs side-by-side with their calibration ceilings.
-_pair = os.environ.get("BENCH_SCALING_PAIR", "4,16").split(",")
-N_CORES, N4_CORES = int(_pair[0]), int(_pair[1])
-
-
-SCALING_ENTITIES = int(os.environ.get("BENCH_SCALING_ENTITIES", "240000"))
-
-
-def run_calibrate() -> None:
-    """Pure-CPU parallel-capacity calibration: the hardware/tenancy ceiling
-    the scaling gate runs under.  For each p in {1,2,4,8,16,32}, spawn p
-    processes pinned to cores 0..p-1 (the same pinning run_scaling uses),
-    each burning an identical fixed integer loop; effective capacity(p) =
-    p * T(1) / T(p) (T = slowest process wall).  The 4->16 ceiling —
-    capacity(16) / (4 * capacity(4)) * 4 ... reported directly as
-    capacity(16)/capacity(4) — bounds ANY software's N->4N ratio on this
-    host: a single host clocks/schedules 16 busy cores worse than 4
-    (shared tenancy, turbo), which a real 4N-executor cluster (4x the
-    machines at identical clocks) does not.  Report alongside the raw
-    scaling measurement; best-of-2 per level to shed transient noise."""
-    burn = (
-        "import time,sys\n"
-        "t0=time.time()\n"
-        "x=0\n"
-        "for i in range(15_000_000): x=(x*1103515245+12345)&0x7fffffff\n"
-        "print(time.time()-t0)\n"
-    )
-
-    def t_at(p: int) -> float:
-        best = float("inf")
-        for _ in range(2):
-            procs = []
-            for i in range(p):
-                pin = (["taskset", "-c", str(i)]
-                       if os.path.exists("/usr/bin/taskset") else [])
-                procs.append(subprocess.Popen(
-                    pin + [sys.executable, "-c", burn],
-                    stdout=subprocess.PIPE, text=True))
-            walls = [float(pr.communicate()[0].strip()) for pr in procs]
-            best = min(best, max(walls))
-        return best
-
-    levels = [1, 2, 4, 8, 16, 32]
-    t1 = t_at(1)
-    caps = {p: round(p * t1 / t_at(p), 2) for p in levels}
-    # hardware ceiling for every N->4N pair the host can express: the
-    # best N->4N ratio ANY software could measure here, because the burn
-    # is embarrassingly parallel with zero coordination.
-    ceilings = {
-        f"{n}->{n * 4}": round(caps[n * 4] / caps[n] / 4.0, 3)
-        for n in (1, 2, 4, 8)
-    }
-    sha = subprocess.run(
-        ["git", "rev-parse", "--short", "HEAD"],
-        capture_output=True, text=True, cwd=str(REPO),
-    ).stdout.strip()
-    out = {
-        "metric": "parallel_capacity", "unit": "effective_cores",
-        "capacity": caps, "t1_sec": round(t1, 2),
-        "ceiling_eff_4_to_16": ceilings["4->16"],
-        "pair_ceilings": ceilings, "sha": sha,
-        "measured_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-    }
-    hist_path = REPO / "BENCH" / "CALIBRATION.json"
-    hist_path.parent.mkdir(exist_ok=True)
-    hist = json.loads(hist_path.read_text()) if hist_path.exists() else []
-    hist.append(out)
-    hist_path.write_text(json.dumps(hist, indent=1) + "\n")
-    print(json.dumps(out))
-
-
-def run_scaling() -> None:
-    """N vs 4N parallelism (local[N_CORES] vs local[N4_CORES]) on
-    identical input.
-
-    Methodology notes:
-      * The scaling input is 4x the default bench input (~10M sequences).
-        Fixed per-run costs (job scheduling, stage barriers, Arrow worker
-        round-trips, ~1.5s) are noise at production scale but would be 25%
-        of a short 4N run — the larger input keeps the measurement about
-        the *work*, which is what scales on a real cluster.
-      * Input is pre-generated once at full parallelism, then both configs
-        read the same parquet files; generation is excluded from timing.
-      * Three alternating JVM rounds per config (N, 4N, N, 4N, ...), best
-        round kept: fresh-JVM codegen/GC state adds 10-30% run-to-run
-        noise, and alternating decorrelates transient host load from the
-        config.  ALL draws are reported in the output, not just the best —
-        the efficiency ratio divides two noisy numbers, and the honest
-        picture is the spread (measured 0.80-1.0 across sessions on this
-        shared host).
-    """
-    # The scaling headline measures the FUSED plan by default: the north
-    # rule's efficiency criterion is about the engine's one-exchange core;
-    # the slim variant is absolutely faster at every pinned level measured
-    # but its much-faster N-side drags the N->4N RATIO (see the variant
-    # comparison in BENCH/BASELINE.md).  Override with
-    # BENCH_SCALING_VARIANT=slim to measure the other plan.
-    scale_env = {
-        "BENCH_ENTITIES": str(SCALING_ENTITIES),
-        "BENCH_TOKENS_PATH": f"/tmp/esa_pfa_scaling_tokens_{SCALING_ENTITIES}.parquet",
-        "BENCH_PROBES_PATH": f"/tmp/esa_pfa_scaling_probes_{SCALING_ENTITIES}.parquet",
-        "BENCH_FLAGSHIP_VARIANT": os.environ.get("BENCH_SCALING_VARIANT", "fused"),
-    }
-    # pre-generate at full parallelism so neither timed config pays for it
-    gen_env = dict(os.environ, SPARK_GRAFT_CPUS="32", **scale_env)
-    subprocess.run(
-        [sys.executable, "-c",
-         "import bench; from esa_pfa_spark.session import get_spark; "
-         "s = get_spark(app_name='gen'); s.sparkContext.setLogLevel('ERROR'); "
-         "bench.ensure_flagship_input(s); s.stop()"],
-        capture_output=True, text=True, env=gen_env, cwd=str(REPO), check=True,
-    )
-    results = {}
-    draws: dict[int, list[float]] = {N_CORES: [], N4_CORES: []}
-    n_rounds = int(os.environ.get("BENCH_SCALING_ROUNDS", "5"))
-    round_pairs: list[tuple[float, float]] = []
-    for rnd in range(n_rounds):
-        this_round: dict[int, float] = {}
-        for cpus in (N_CORES, N4_CORES):
-            env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus), **scale_env)
-            res = None
-            # CPU affinity: pin the WHOLE process tree (JVM + Python workers)
-            # to exactly `cpus` vCPUs.  Without it, local[4]'s Arrow-stage
-            # Python workers are separate UNPINNED processes — on a 32-vCPU
-            # host the "N=4" config silently uses ~8 cores during the
-            # pipeline's dominant Python stage, overstating T_N and
-            # understating the N->4N ratio.  A real N-executor cluster has
-            # N cores TOTAL for JVM and Python; affinity makes the
-            # parallelism-level proxy faithful to that.
-            pin = ["taskset", "-c", f"0-{cpus - 1}"] if os.path.exists(
-                "/usr/bin/taskset"
-            ) else []
-            for attempt in range(2):  # transient JVM/host failures: retry once
-                proc = subprocess.run(
-                    pin + [sys.executable, __file__, "--flagship-only", "--warmup"],
-                    capture_output=True, text=True, env=env, cwd=str(REPO),
-                )
-                lines = [l for l in proc.stdout.splitlines() if l.startswith("{")]
-                if lines:
-                    res = json.loads(lines[-1])
-                    break
-                print(
-                    f"round {rnd} local[{cpus}] attempt {attempt} produced no "
-                    f"JSON (rc={proc.returncode}); stderr tail:\n"
-                    + "\n".join(proc.stderr.splitlines()[-5:]),
-                    file=sys.stderr,
-                )
-            if res is None:
-                continue  # skip this draw; the paired round is dropped below
-            draws[cpus].append(res["sequences_per_sec"])
-            this_round[cpus] = res["sequences_per_sec"]
-            prev = results.get(cpus)
-            if prev is None or res["sequences_per_sec"] > prev["sequences_per_sec"]:
-                results[cpus] = res
-            print(
-                f"round {rnd} local[{cpus}]: {res['sequences_per_sec']} seq/s",
-                file=sys.stderr,
-            )
-        if N_CORES in this_round and N4_CORES in this_round:
-            round_pairs.append((this_round[N_CORES], this_round[N4_CORES]))
-
-    t8 = results[N_CORES]["sequences_per_sec"]
-    t32 = results[N4_CORES]["sequences_per_sec"]
-    # Headline estimator: MEDIAN of per-round PAIRED ratios.  Each round
-    # runs N and 4N back-to-back under near-identical host conditions, so
-    # the per-round ratio cancels common-mode noise (transient neighbor
-    # load shifts both draws together); the cross-round ratio-of-bests
-    # mixes draws from different noise regimes — its denominator takes
-    # the luckiest N draw ever seen and divides a 4N draw from another
-    # regime (observed to understate by ~0.1 on this host).  Both are
-    # reported; the median (not max) of pairs avoids cherry-picking.
-    import statistics
-    pair_effs = [b / (4 * a) for a, b in round_pairs]  # complete rounds only
-    eff = statistics.median(pair_effs)
-    eff_best = t32 / (4 * t8)
-    sha = subprocess.run(
-        ["git", "rev-parse", "--short", "HEAD"], capture_output=True, text=True, cwd=str(REPO)
-    ).stdout.strip()
-    draws_n = ", ".join(f"{d:,.0f}" for d in draws[N_CORES])
-    draws_4n = ", ".join(f"{d:,.0f}" for d in draws[N4_CORES])
-    pairs_str = ", ".join(f"{e:.3f}" for e in pair_effs)
-
-    # persist this pair's measurement; BASELINE.md renders ALL pairs on
-    # file so a single-pair headline can never hide a weaker pair.
-    hist_path = REPO / "BENCH" / "SCALING_HISTORY.json"
-    hist_path.parent.mkdir(exist_ok=True)
-    hist = json.loads(hist_path.read_text()) if hist_path.exists() else []
-    hist.append({
-        "sha": sha, "pair": [N_CORES, N4_CORES],
-        "entities": SCALING_ENTITIES,
-        "variant": scale_env["BENCH_FLAGSHIP_VARIANT"],
-        "draws_n": draws[N_CORES], "draws_4n": draws[N4_CORES],
-        "pair_ratios": [round(e, 3) for e in pair_effs],
-        "eff_median_paired": round(eff, 3),
-        "eff_ratio_of_bests": round(eff_best, 3),
-        "measured_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-    })
-    hist_path.write_text(json.dumps(hist, indent=1) + "\n")
-
-    # latest calibration (hardware ceilings) for the generated report
-    cal_path = REPO / "BENCH" / "CALIBRATION.json"
-    cal = json.loads(cal_path.read_text())[-1] if cal_path.exists() else None
-    pair_key = f"{N_CORES}->{N4_CORES}"
-    ceiling = cal["pair_ceilings"].get(pair_key) if cal else None
-    caps_str = (
-        " / ".join(f"{cal['capacity'][str(p)]}" for p in (1, 2, 4, 8, 16, 32))
-        if cal else "n/a"
-    )
-    ceil_str = f"{ceiling:.3f}" if ceiling else "n/a"
-    sw_term = f"{eff / ceiling:.3f}" if ceiling else "n/a"
-    # most recent record per pair at any sha (latest wins), for the table
-    latest_per_pair: dict[str, dict] = {}
-    for rec in hist:
-        latest_per_pair[f"{rec['pair'][0]}->{rec['pair'][1]}"] = rec
-    pair_rows = []
-    for pk in sorted(latest_per_pair, key=lambda k: int(k.split("->")[0])):
-        rec = latest_per_pair[pk]
-        c = cal["pair_ceilings"].get(pk) if cal else None
-        c_str = f"{c:.3f}" if c is not None else "n/a"
-        s_str = f"{rec['eff_median_paired'] / c:.3f}" if c else "n/a"
-        ratios = ", ".join(f"{r:.3f}" for r in rec["pair_ratios"])
-        pair_rows.append(
-            f"| local[{rec['pair'][0]}] -> local[{rec['pair'][1]}] | "
-            f"{rec['eff_median_paired']:.3f} | {ratios} | {c_str} | {s_str} | "
-            f"{rec['entities']:,} | {rec['sha']} |"
-        )
-    pair_table = "\n".join(pair_rows)
-
-    variant_desc = {
-        "slim": (
-            "narrow-shuffle plan, `feature_table_slim`: the tokens array "
-            "never rides the window exchange/sorts — stats are computed "
-            "map-side on the scan, the as-of fill carries only scalars + "
-            "the matched row key, and tokens are fetched by ONE post-as-of "
-            "equi-join (row-identical to the fused plan, "
-            "tests/test_pipeline.py::test_slim_equals_fused)"
-        ),
-        "fused": "single-shuffle fused plan, `feature_table_fused`",
-    }[scale_env["BENCH_FLAGSHIP_VARIANT"]]
-    md = f"""# BENCH/BASELINE — measured scaling baseline
-
-Flagship pipeline ({variant_desc}):
-backward as-of join (7d tolerance) + per-row STX token stats (Arrow UDF)
-+ lag/lead + sessionization over the synthetic pre-tokenized sequence
-table ({results[N_CORES]['flagship_sequences']:,} sequences, mean
-{FLAGSHIP_MEAN_TOK} tokens), probes = 4/entity.  Same parquet input for
-both runs; generation excluded from timing (pre-generated at full
-parallelism); two warm-up passes per JVM (Python-worker spawn + JIT);
-reported time is min-of-3 within a JVM, best of three alternating JVM
-rounds per config (N, 4N, N, 4N, ... — decorrelates transient host
-load); every round's draw is listed below, not just the best.
-The scaling input is 4x the per-round bench input so fixed per-run costs
-(~1.5s of job scheduling / stage barriers) stay under ~5% of the 4N run,
-as they would be at production scale.
-
-The BASELINE.json two-cluster-size criterion (N vs 4N executors) is
-evidenced by parallelism levels on the same input — no multi-node cluster
-exists in this sandbox.  **Host topology and the hardware ceiling**:
-lscpu reports 32 single-threaded vCPUs (virtualized; earlier rounds'
-"16 physical + SMT" reading was the same phenomenon mislabeled).  A
-pure-CPU calibration burn (`python bench.py --calibrate`: p pinned
-processes, identical integer loop, zero coordination) measures effective
-parallel capacity {caps_str} at 1 / 2 / 4 / 8 / 16 / 32 processes this
-session — per-core throughput degrades as total host occupancy rises,
-and a pin-set probe showed the degradation is occupancy-dependent, not
-vCPU-specific (any 16-vCPU set yields the same capacity).  Because the
-burn is embarrassingly parallel, capacity(4N)/capacity(N)/4 is the
-hardware ceiling on ANY software's N->4N ratio for that pair — a real
-4N-executor cluster (4x the machines at identical clocks) has ceiling
-1.0, so the least-confounded proxy for the cluster criterion is the pair
-whose ceiling is closest to 1.0.  Full calibration history:
-BENCH/CALIBRATION.json.
-
-**All measured pairs** (latest measurement per pair; full history in
-BENCH/SCALING_HISTORY.json):
-
-| N -> 4N pair | median paired efficiency | per-round paired ratios | hardware ceiling (this session) | software term (raw/ceiling) | entities | sha |
-|---|---|---|---|---|---|---|
-{pair_table}
-
-This file's headline below is the most recent `--scaling` run
-(local[{N_CORES}] vs local[{N4_CORES}], hardware ceiling {ceil_str},
-software term {sw_term}).
-
-**CPU affinity (since r4):** each timed run is pinned with
-`taskset -c 0-(cpus-1)` so the WHOLE process tree — JVM task threads AND
-the separate Python/Arrow worker processes — shares exactly `cpus`
-vCPUs.  Without pinning, the "N=4" config's Arrow stage silently ran its
-4 Python workers on cores the 4 task slots did not own (~8 cores used),
-overstating N-side throughput and understating the ratio by ~0.15-0.25
-measured; a real N-executor cluster gives JVM+Python N cores TOTAL, so
-the pinned measurement is the faithful proxy for the two-cluster-size
-criterion.
-
-| parallelism | wall sec (best) | sequences/sec (best) | all draws (seq/s) |
-|---|---|---|---|
-| local[{N_CORES}]  (N)  | {results[N_CORES]['queries']['flagship_asof_features']} | {t8:,.1f} | {draws_n} |
-| local[{N4_CORES}] (4N) | {results[N4_CORES]['queries']['flagship_asof_features']} | {t32:,.1f} | {draws_4n} |
-
-**Scaling efficiency** (median of per-round paired ratios — each round
-runs N and 4N back-to-back, so the pair cancels common-mode host noise;
-per-round ratios: {pairs_str}) = **{eff:.3f}** (pass threshold: >= 0.8).
-The cross-round ratio-of-bests, {t32:,.1f} / (4 x {t8:,.1f}) =
-{eff_best:.3f}, is listed for comparison; it divides draws from
-different noise regimes and is the noisier estimator.
-
-A measured efficiency can land slightly ABOVE the pure-CPU calibration
-ceiling: the ceiling models compute-saturated cores, while the real job's
-N-run best draw still carries shared-host noise and phases that do not
-saturate 4 cores (I/O, stage barriers, GC) — both inflate T_N and with it
-the ratio.  The ratio divides two noisy numbers, so single draws scatter:
-measured 0.80-1.0 across sessions on this shared host (0.889 in round 1,
-0.993 and one 0.799 draw during round 2) — which is why all draws are
-listed, not just the best pair.
-
-Spark conf: AQE on (coalescePartitions + skewJoin), shuffle.partitions =
-cpus, autoBroadcastJoinThreshold 64MB, Arrow maxRecordsPerBatch 10000,
-bench-scale split sizing (maxPartitionBytes 8MB, AQE advisory 4MB — the
-production 128MB/64MB defaults are right for 100TB inputs, not a 700MB
-bench table), UTC session TZ.
-
-Measured at git SHA `{sha}`.
-"""
-    out_path = REPO / "BENCH" / "BASELINE.md"
-    out_path.parent.mkdir(exist_ok=True)
-    out_path.write_text(md)
-    print(json.dumps({
-        "metric": "scaling_efficiency", "value": round(eff, 3), "unit": "ratio",
-        "estimator": "median_paired", "pair": [N_CORES, N4_CORES],
-        "pair_ratios": [round(e, 3) for e in pair_effs],
-        "ratio_of_bests": round(eff_best, 3),
-        "hardware_ceiling": ceiling, "software_term": (
-            round(eff / ceiling, 3) if ceiling else None),
-        "seq_per_sec_n": t8, "seq_per_sec_4n": t32,
-    }))
-
-
-def run_skew_tokens() -> None:
-    """Hot-FINGERPRINT skew measurement for the n-gram span dedup ->
-    BENCH/SKEW_TOKENS.md.
-
-    Corpus shaped like web spam: 10% of docs are a single repeated token,
-    so every one of their 8-gram windows shares ONE fingerprint — a
-    single fp carrying millions of rows while every other window is
-    unique.  Measures dup_ngram_summary's two frequency-filter plans on
-    identical input (warm, min-of-2) and asserts output equality."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    from esa_pfa_spark.operators.tokens import dup_ngram_summary
-    from esa_pfa_spark.session import get_spark
-
-    cores = 16  # physical-core count, see BENCH/BASELINE.md
-    spark = get_spark(master=f"local[{cores}]", app_name="esa_pfa_skew_tokens")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    n_docs, doc_len, vocab = 500_000, 60, 32768
-    path = "/tmp/esa_pfa_skew_tokens.parquet"
-    idx = F.sequence(F.lit(1), F.lit(doc_len))
-    spam = F.transform(idx, lambda i: F.lit(7).cast("int"))
-    rand = F.transform(
-        idx,
-        lambda i: F.pmod(F.xxhash64(F.col("id") * 100 + i), F.lit(vocab)).cast("int"),
-    )
-    docs = spark.range(n_docs).select(
-        F.col("id").cast("string").alias("doc_id"),
-        F.when(F.col("id") % 10 == 0, spam).otherwise(rand).alias("tokens"),
-    )
-    docs.write.mode("overwrite").parquet(path)
-    df = spark.read.parquet(path)
-    n_spam = n_docs // 10
-    hot_rows = n_spam * (doc_len - 8 + 1)
-
-    timings: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    sums: dict[str, int] = {}
-    for mode, label in ((True, "skew_safe (groupBy+join)"), (False, "window count")):
-        out = dup_ngram_summary(df, n=8, skew_safe=mode)
-        out.count()  # warm: JIT + python workers + file listing
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            counts[label] = out.count()
-            best = min(best, time.time() - t0)
-        timings[label] = round(best, 2)
-        sums[label] = out.agg(
-            F.sum("n_dup_windows").cast("long")
-        ).collect()[0][0]
-    equal = counts[
-        "skew_safe (groupBy+join)"
-    ] == counts["window count"] and sums["skew_safe (groupBy+join)"] == sums["window count"]
-
-    sha = subprocess.run(
-        ["git", "rev-parse", "--short", "HEAD"], capture_output=True, text=True, cwd=str(REPO)
-    ).stdout.strip()
-    md = f"""# BENCH/SKEW_TOKENS — hot-fingerprint skew in n-gram span dedup: measured
-
-Input: {n_docs:,} docs x {doc_len} tokens; 10% are single-repeated-token
-spam docs, so ONE 8-gram fingerprint carries {hot_rows:,} window rows
-({n_spam:,} docs x {doc_len - 8 + 1} windows) while every other window
-fingerprint is unique (xxhash64-pseudorandom tokens over a {vocab}
-vocab).  Total window rows ~{n_docs * (doc_len - 8 + 1):,};
-local[{cores}], warm, min-of-2, identical parquet input.
-
-| frequency-filter plan | wall sec |
-|---|---|
-| skew_safe=True: groupBy(fp) partial-agg + join back (default) | {timings['skew_safe (groupBy+join)']} |
-| skew_safe=False: partition-by-fp window count | {timings['window count']} |
-
-Outputs identical (row count + n_dup_windows checksum): **{equal}**
-
-## Reading
-
-The honest headline: at THIS skew level the window plan still wins —
-a hot fingerprint of {hot_rows:,} rows is only ~1.6x the mean hash
-partition, and sorting already-identical keys in one task is cheaper
-than the skew-safe plan's second full derivation + shuffle of the
-window set.  Like the pairing chunk remedy (BENCH/SKEW.md), the
-skew-safe form is NOT a local-throughput optimization.
-
-What it buys is the worst case.  The window plan's hot partition is a
-single task doing an O(df log df) sort — and window skew is invisible
-to AQE, so nothing can split it; at df=10^8 (a license-header 8-gram
-over a web crawl) that is one task sort-spilling 10^8 rows while the
-cluster idles.  The skew-safe plan's hot key is a partial-agg row
-map-side plus a STREAMED join probe with no per-key state, and a
-skewed probe partition is exactly what AQE skew-join splits
-automatically.  Defaults choose the plan whose worst case degrades to
-parallel streaming rather than an unsplittable single-task sort;
-corpora with known-bounded fingerprint frequency should pass
-``skew_safe=False`` and take the ~2.8x steady-state win measured here
-(un-skewed numbers: operators/tokens.py docstring).
-
-Measured at git SHA `{sha}`.
-"""
-    Path("BENCH").mkdir(exist_ok=True)
-    Path("BENCH/SKEW_TOKENS.md").write_text(md)
-    print(md)
-    spark.stop()
-
-
-def run_skew_asof() -> None:
-    """Hot-entity skew in the AS-OF join -> BENCH/SKEW_ASOF.md.
-
-    The JVM union+window plan sorts each entity's whole timeline in ONE
-    task and AQE skew handling never applies to window sorts — so a hot
-    entity is an unsplittable straggler.  This measures, on an input where
-    one entity carries >=70% of all rows (hot_frac far beyond the judge's
-    0.3 bar), the plain JVM plan vs ``asof_join_auto`` (hot key detected
-    by a partial-agg count and routed through the chunked cogrouped path),
-    with output equality asserted."""
-    import datetime as dtm
-
-    from pyspark.sql import functions as F
-
-    from esa_pfa_spark.operators.asof import asof_join, asof_join_auto
-    from esa_pfa_spark import synth
-    from esa_pfa_spark.session import get_spark
-
-    cores = 16
-    spark = get_spark(master=f"local[{cores}]", app_name="esa_pfa_skew_asof")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    n_ent, mean_obs = 2000, 20
-    cold = synth.observations_df(
-        spark, seed=3, n_entities=n_ent, mean_obs=mean_obs, mean_tok=4
-    ).select("entity_id", "ts", F.col("n_tok").cast("double").alias("value"))
-
-    n_burst, per_burst = 50, 40_000  # 2M hot rows in 50 bursts, 30d apart
-    base = F.lit("2024-01-01 00:00:00").cast("timestamp")
-    hot = spark.range(n_burst * per_burst).select(
-        F.lit("hot_entity").alias("entity_id"),
-        (base + F.make_dt_interval(
-            days=(F.floor(F.col("id") / per_burst) * 30).cast("int"),
-            secs=(F.col("id") % per_burst) * 1.0,
-        )).alias("ts"),
-        (F.col("id") % 97).cast("double").alias("value"),
-    )
-    obs_path = "/tmp/esa_pfa_skew_asof_obs.parquet"
-    cold.unionByName(hot).write.mode("overwrite").parquet(obs_path)
-    obs = spark.read.parquet(obs_path)
-    n_obs = obs.count()
-    hot_rows = n_burst * per_burst
-
-    probes = obs.select(
-        "entity_id",
-        (F.col("ts") + F.make_dt_interval(mins=F.lit(7))).alias("query_ts"),
-    ).sample(0.05, seed=1).cache()
-    n_probes = probes.count()
-    tol = dtm.timedelta(days=7)
-
-    def timed(df):
-        df.write.format("noop").mode("overwrite").save()  # warm
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        return round(best, 2)
-
-    plain = asof_join(probes, obs, payload=["value"], tolerance=tol)
-    auto = asof_join_auto(
-        probes, obs, payload=["value"], tolerance=tol, hot_rows=200_000
-    )
-    t_plain = timed(plain)
-    t_auto = timed(auto)
-    mism = (
-        plain.select("entity_id", "query_ts", "matched_ts", "value")
-        .exceptAll(auto.select("entity_id", "query_ts", "matched_ts", "value"))
-        .count()
-    )
-    equal = mism == 0 and plain.count() == auto.count()
-
-    sha = subprocess.run(
-        ["git", "rev-parse", "--short", "HEAD"], capture_output=True, text=True, cwd=str(REPO)
-    ).stdout.strip()
-    md = f"""# BENCH/SKEW_ASOF — hot-entity as-of join: auto dispatch measured
-
-Input: {n_obs:,} observations over {n_ent + 1:,} entities; `hot_entity`
-carries {hot_rows:,} rows (hot_frac = {hot_rows / n_obs:.2f}) in {n_burst}
-dense bursts 30d apart (> tolerance, so chunking splits them exactly);
-probes = 5% sample ({n_probes:,} rows).  local[{cores}], warm, min-of-2,
-identical parquet input; tolerance 7d.
-
-| plan | wall sec |
-|---|---|
-| `asof_join` (JVM union+window; hot key = ONE sort task) | {t_plain} |
-| `asof_join_auto` (hot key -> chunked cogroup, cold keys -> JVM) | {t_auto} |
-
-Outputs identical (one-sided exceptAll + equal counts — a valid
-multiset-equality proof: zero plain∖auto differences plus |plain|=|auto|
-forces auto∖plain empty too): **{equal}**
-
-## Reading
-
-The JVM plan's hot partition is a single task sorting {hot_rows:,} rows —
-window skew is invisible to AQE, so NOTHING at runtime can split it; the
-rest of the cluster idles behind it.  `asof_join_auto` spends one
-partial-agg count pass to find keys above `hot_rows`, then routes the hot
-timeline through the time-chunked cogrouped path ({n_burst} bounded
-groups) and everything else through the unchanged JVM plan.  At this
-scale the dispatch {"wins outright" if t_auto < t_plain else "roughly breaks even — the win is the WORST CASE"}:
-the chunked path bounds the straggler at one chunk's sort instead of the
-whole timeline, and (unlike the window sort) its per-group memory is
-bounded, so a 10^9-row key degrades to more groups, not an OOM.
-
-Measured at git SHA `{sha}`.
-"""
-    (REPO / "BENCH" / "SKEW_ASOF.md").write_text(md)
-    print(json.dumps({
-        "metric": "skew_asof", "plain_s": t_plain, "auto_s": t_auto,
-        "equal": equal, "hot_frac": round(hot_rows / n_obs, 3),
-    }))
-    spark.stop()
-
-
-
-
-def run_skew_decay() -> None:
-    """Hot-entity skew in the decayed-PIT band join -> BENCH/SKEW_DECAY.md.
-
-    decayed_pit_features joins probes to observations on (key, horizon
-    bucket); a hot entity dense inside one horizon makes the join OUTPUT
-    quadratic (probes x in-horizon obs) — genuine pair work no AQE skew
-    split can remove.  This measures a corpus where one entity carries
-    ~70% of all observations vs a uniform corpus of the same total size,
-    then the decayed_pit_auto remedy (prefix-sum cogrouped path for the
-    hot key) on the skewed corpus."""
-    import datetime as dtm
-
-    from pyspark.sql import functions as F
-
-    from esa_pfa_spark.operators.pit import (
-        decayed_pit_auto,
-        decayed_pit_features,
-    )
-    from esa_pfa_spark import synth
-    from esa_pfa_spark.session import get_spark
-
-    cores = 16
-    spark = get_spark(master=f"local[{cores}]", app_name="esa_pfa_skew_decay")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    n_ent, mean_obs = 2000, 20
-    base = F.lit("2024-01-01 00:00:00").cast("timestamp")
-
-    def mk(hot_rows: int, path: str):
-        cold = synth.observations_df(
-            spark, seed=5, n_entities=n_ent, mean_obs=mean_obs, mean_tok=4
-        ).select("entity_id", "ts", F.col("n_tok").cast("double").alias("value"))
-        if hot_rows:
-            # one entity, all rows inside ~25 days (< one 30d horizon bucket)
-            hot = spark.range(hot_rows).select(
-                F.lit("hot_entity").alias("entity_id"),
-                (base + F.make_dt_interval(secs=F.col("id") * 2.0)).alias("ts"),
-                (F.col("id") % 97).cast("double").alias("value"),
-            )
-            cold = cold.unionByName(hot)
-        else:
-            # pad to the same total with extra uniform entities
-            pad = synth.observations_df(
-                spark, seed=6, n_entities=n_ent * 2, mean_obs=mean_obs * 2,
-                mean_tok=4,
-            ).select(
-                F.concat(F.lit("u_"), F.col("entity_id")).alias("entity_id"),
-                "ts", F.col("n_tok").cast("double").alias("value"),
-            )
-            cold = cold.unionByName(pad)
-        cold.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
-    hot_n = 100_000
-    skewed = mk(hot_n, "/tmp/esa_pfa_skew_decay_hot.parquet")
-    uniform = mk(0, "/tmp/esa_pfa_skew_decay_uni.parquet")
-    n_skew, n_uni = skewed.count(), uniform.count()
-
-    tau = dtm.timedelta(days=1)
-
-    def timed(obs, fn, **extra):
-        probes = obs.select(
-            "entity_id",
-            (F.col("ts") + F.make_dt_interval(mins=F.lit(11))).alias("query_ts"),
-        ).sample(0.02, seed=2).withColumn("probe_id", F.monotonically_increasing_id())
-        out = fn(
-            probes, obs, on="entity_id", probe_ts="query_ts", obs_ts="ts",
-            value="value", tau=tau, cutoff=30.0, **extra,
-        )
-        out.write.format("noop").mode("overwrite").save()  # warm
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            out.write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        return round(best, 2)
-
-    t_skew = timed(skewed, decayed_pit_features)
-    t_uni = timed(uniform, decayed_pit_features)
-    # the remedy: auto dispatch routes hot_entity through the prefix-sum
-    # cogrouped path (zero pair materialization), cold keys unchanged
-    t_auto = timed(skewed, decayed_pit_auto, hot_rows=50_000)
-
-    sha = subprocess.run(
-        ["git", "rev-parse", "--short", "HEAD"], capture_output=True, text=True,
-        cwd=str(REPO),
-    ).stdout.strip()
-    ratio = round(t_skew / t_uni, 2)
-    speedup = round(t_skew / t_auto, 2)
-    md = f"""# BENCH/SKEW_DECAY — hot-entity skew in the decayed-PIT band join
-
-Skewed input: {n_skew:,} observations; `hot_entity` carries {hot_n:,} of
-them (hot_frac = {hot_n / n_skew:.2f}), ALL inside one 30-day horizon
-bucket — the worst case for the (key, bucket) equi-join.  Uniform
-control: {n_uni:,} observations spread over {n_ent * 3:,} entities.
-Probes = 2% sample of each corpus; tau = 1d, cutoff = 30 (horizon 30d);
-local[{cores}], warm, min-of-2.
-
-| corpus / plan | wall sec |
-|---|---|
-| skewed, band join (`decayed_pit_features`) | {t_skew} |
-| uniform control, band join | {t_uni} |
-| skewed, auto dispatch (`decayed_pit_auto`, prefix-sum hot path) | {t_auto} |
-
-ratio skewed/uniform (band join): **{ratio}** —
-auto-dispatch speedup on the skewed corpus: **{speedup}x**
-
-## Reading
-
-Unlike the as-of hot-key case (one unsplittable window-sort task,
-BENCH/SKEW_ASOF.md), the band join's problem is NOT scheduling: the
-(entity, horizon-bucket) equi-join is a shape AQE's skew split CAN carve
-up, and it does — but the join OUTPUT is still probes x in-horizon
-observations per hot key.  With {hot_n:,} observations dense inside one
-30-day bucket and ~2k probes on the same key, that is ~200M genuine pair
-rows that must exist before the aggregate, which no runtime re-plan can
-remove.  Hence the {ratio}x blow-up vs the uniform control.
-
-The remedy is algorithmic, not adaptive: `decayed_pit_auto` censuses
-per-key counts (or takes a precomputed stats table) and routes Zipf-head
-keys through `decayed_pit_pandas` — per-(key, block) PREFIX SUMS of the
-block-rebased terms `v*exp((ts-block_start)/tau)`, answering each probe
-with two searchsorted lookups: O((n+m) log n) per key, zero pair
-materialization.  Cold keys keep the exact per-term-rounded decimal
-contract; hot-key sums are unrounded float64, agreeing within
-~5e-7 * n_win (parity + null-key tests in tests/test_pit.py).
-
-Measured at git SHA `{sha}`.
-"""
-    (REPO / "BENCH" / "SKEW_DECAY.md").write_text(md)
-    print(md)
-    spark.stop()
-
-
-def run_multimodal() -> None:
-    """Real-codec decode throughput -> BENCH/MULTIMODAL.md.
-
-    Synthesizes a deterministic PNG corpus with the repo's own encoder
-    (operators/codecs.encode_png — valid zlib + filter-0 scanlines),
-    ships it through the production decode path
-    (multimodal.decode_media_batch: mapInPandas, per-row ok/err), and
-    reports rows/s and input MB/s at local[N].  The number the round-3
-    verdict asked for after the unfilter was vectorized: the fixture
-    codec's honest throughput, documented as the swap-point baseline a
-    real libpng/PIL decoder would replace."""
-    import numpy as np
-
-    from esa_pfa_spark.operators.codecs import encode_png
-    from esa_pfa_spark.operators.multimodal import decode_media_batch
-    from esa_pfa_spark.session import get_spark
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    n_imgs, w, h, ch = 2000, 64, 48, 3
-    rng = np.random.default_rng(7)
-    rows = []
-    total_bytes = 0
-    for i in range(n_imgs):
-        px = rng.integers(0, 256, size=w * h * ch, dtype=np.uint8).tobytes()
-        payload = encode_png(w, h, px, channels=ch)
-        total_bytes += len(payload)
-        rows.append((i, payload, "image/png"))
-
-    spark = get_spark(master=f"local[{cpus}]", app_name="esa_pfa_bench_multimodal")
-    import pandas as pd
-
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["doc_id", "payload", "mime"])
-    ).repartition(cpus).cache()
-    df.count()
-
-    t0 = time.time()
-    out = decode_media_batch(df)
-    n_ok = out.filter("ok").count()
-    dt = time.time() - t0
-    assert n_ok == n_imgs, (n_ok, n_imgs)
-
-    rows_s = n_imgs / dt
-    mb_s = total_bytes / dt / 1e6
-    md = f"""# Multimodal decode throughput (fixture PNG codec)
-
-Corpus: {n_imgs} PNGs, {w}x{h}x{ch} random pixels (incompressible -> the
-zlib/unfilter path does full work), {total_bytes / 1e6:.1f} MB total.
-Decode: `decode_media_batch` (mapInPandas, per-row ok/err) with the
-stdlib PNG decoder (numpy-vectorized unfilter) at local[{cpus}].
-
-| metric | value |
-|---|---|
-| wall time | {dt:.2f} s |
-| images/s | {rows_s:,.0f} |
-| input MB/s | {mb_s:.1f} |
-| decode ok | {n_ok}/{n_imgs} |
-
-This is the FIXTURE codec's number — honest baseline for the documented
-swap point (a libpng/PIL decoder replaces `operators/codecs.decode_png`
-behind the same plumbing); the Spark-side batch shape, schema, and
-error channel are what production uses.
-"""
-    (REPO / "BENCH" / "MULTIMODAL.md").write_text(md)
-    print(md)
-    spark.stop()
-
-
-def run_bpe() -> None:
-    """Encode cost vs merge-table size -> BENCH/BPE_ENCODE.md.
-
-    bpe_apply (rank-order rule loop) makes one vectorized corpus sweep
-    per rule — O(n_merges) sweeps per batch, linear blow-up toward a
-    production 32k-merge vocabulary.  bpe_encode (pair->rank dict +
-    lazy min-rank heap over a linked list) does work only where merges
-    FIRE, so its cost tracks corpus size, not table size.  This measures
-    both encoders with the SAME trained table truncated to 256 vs all
-    4096 ranks (a rank prefix is itself a valid merge table), on the
-    same materialized corpus, and asserts output equality of the two
-    encoders at 4096 (one-sided exceptAll + equal counts on per-doc
-    fingerprints)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from esa_pfa_spark.operators.tokens import (
-        bpe_apply, bpe_encode, bpe_train_local, bpe_train_local_fast)
-    from esa_pfa_spark.plans.query import deterministic_sample
-    from esa_pfa_spark.session import get_spark
-
-    cores = 16
-    spark = get_spark(
-        master=f"local[{cores}]",
-        app_name="esa_pfa_bpe",
-        extra_confs={
-            # the replicated corpus is ~10s of MB; shrink splits so the
-            # map-only encode stage reaches full parallelism (see main())
-            "spark.sql.files.maxPartitionBytes": str(1 * 1024 * 1024),
-            "spark.sql.files.openCostInBytes": str(64 * 1024),
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    import __spark_entry__ as entry_mod
-
-    toks = entry_mod._tokenized_docs(spark, sf_dir).select("doc_id", "tokens")
-    # 8x the corpus (distinct doc ids) and materialize to parquet so the
-    # timings measure the encode pass, not tokenisation or generation
-    big = toks.select(
-        "doc_id", "tokens", F.explode(F.sequence(F.lit(0), F.lit(7))).alias("__rep")
-    ).select(
-        (F.col("doc_id") * 8 + F.col("__rep")).alias("doc_id"), "tokens"
-    )
-    path = "/tmp/esa_pfa_bpe_corpus.parquet"
-    big.repartition(64).write.mode("overwrite").parquet(path)
-    corpus = spark.read.parquet(path)
-    n_docs = corpus.count()
-    n_tok = corpus.select(F.sum(F.size("tokens"))).first()[0]
-
-    # train ONCE at 4096 ranks on a deterministic sample (untimed: the
-    # sampled driver-local trainer is the production shape and its cost is
-    # independent of corpus size); 256-rank table = rank prefix of the same
-    sample = deterministic_sample(toks, 2000, ["doc_id"], seed=0)
-    arrs = [
-        np.asarray(r["tokens"], dtype=np.int64)
-        for r in sample.collect()
-        if r["tokens"] is not None
-    ]
-    t0 = time.time()
-    merges = bpe_train_local_fast(arrs, 4096)
-    t_train_fast = round(time.time() - t0, 2)
-    t0 = time.time()
-    merges_rescan = bpe_train_local(arrs, 4096)
-    t_train_rescan = round(time.time() - t0, 2)
-    assert merges == merges_rescan, "trainer parity violated"
-    t0 = time.time()
-    merges_32k = bpe_train_local_fast(arrs, 32768)
-    t_train_32k = round(time.time() - t0, 2)
-    n_sample_tok = int(sum(len(a) for a in arrs))
-    tables = {256: merges[:256], 4096: merges}
-
-    def fingerprint(df):
-        s = F.array_join(F.transform(F.col("tokens"), lambda x: x.cast("string")), ",")
-        return df.select("doc_id", F.md5(s).alias("fp"))
-
-    def timed(df):
-        df.write.format("noop").mode("overwrite").save()  # warm
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        return round(best, 2)
-
-    res: dict[str, float] = {}
-    for nm, tbl in tables.items():
-        res[f"apply_{nm}"] = timed(bpe_apply(corpus, tbl))
-        res[f"encode_{nm}"] = timed(bpe_encode(corpus, tbl))
-
-    a = fingerprint(bpe_apply(corpus, tables[4096]))
-    e = fingerprint(bpe_encode(corpus, tables[4096]))
-    equal = a.exceptAll(e).count() == 0 and a.count() == e.count()
-
-    ratio_apply = round(res["apply_4096"] / res["apply_256"], 2)
-    ratio_encode = round(res["encode_4096"] / res["encode_256"], 2)
-    sha = subprocess.run(
-        ["git", "rev-parse", "--short", "HEAD"],
-        capture_output=True, text=True, cwd=str(REPO),
-    ).stdout.strip()
-    md = f"""# BENCH/BPE_ENCODE — encode cost vs merge-table size
-
-`python bench.py --bpe` @ {sha}, local[{cores}], corpus = sf0.1 documents
-tokenized and replicated 8x ({n_docs:,} docs, {n_tok:,} tokens,
-materialized parquet), merge table trained once at 4096 ranks on a
-deterministic 2,000-doc sample (untimed — the sampled driver-local
-trainer is the production shape); the 256-rank table is the rank
-PREFIX of the same table, so both sizes encode with identical
-low-rank rules.  Timings: noop-sink write, warm + min-of-2.
-
-## Trainer (driver-local, {n_sample_tok:,}-token sample)
-
-| trainer | 4096 ranks | 32768 ranks |
-|---|---|---|
-| `bpe_train_local` (per-round corpus rescan) | {t_train_rescan}s | (not run — O(N x ranks)) |
-| `bpe_train_local_fast` (pair-count deltas + lazy max-heap) | **{t_train_fast}s** | {t_train_32k}s ({len(merges_32k):,} ranks to saturation) |
-
-Tables are EXACTLY equal (asserted this run; parity also in
-tests/test_bpe.py): the incremental trainer maintains pair counts by
-deltas as merges rewrite the linked-listed sample in place, so each
-rank costs O(occurrences of the chosen pair), not O(sample).
-
-| encoder | 256 merges | 4096 merges | 4096/256 cost ratio |
-|---|---|---|---|
-| `bpe_apply` (one vectorized sweep per rule) | {res['apply_256']}s | {res['apply_4096']}s | {ratio_apply}x |
-| `bpe_encode` (min-rank heap, table-size-independent) | {res['encode_256']}s | {res['encode_4096']}s | **{ratio_encode}x** |
-
-Output equality at 4096 ranks (apply vs encode, one-sided exceptAll +
-equal counts on per-doc md5 fingerprints): **{"EQUAL" if equal else "MISMATCH"}**.
-
-Reading: `bpe_apply` pays one full-batch kernel sweep per rule — its
-cost scales with the merge-table size (~{ratio_apply}x here for 16x the
-rules) and is unusable at a production 32k vocabulary.  `bpe_encode`
-only does work where merges fire (candidate discovery is one vectorized
-pass; each merge is O(1) linked-list surgery plus at most two heap
-pushes), so growing the table 16x moves cost ~{ratio_encode}x — the
-residual slope is the extra LOW-frequency merges that genuinely fire at
-higher ranks, i.e. real work, not table-scan overhead.  At 100 TB both
-are map-only single-scan operators; the encode kernel keeps per-task
-cost bounded by task tokens regardless of vocabulary size.
-"""
-    (REPO / "BENCH").mkdir(exist_ok=True)
-    (REPO / "BENCH" / "BPE_ENCODE.md").write_text(md)
-    print(md)
-    if not equal:
-        raise SystemExit("bpe_encode output mismatch vs bpe_apply at 4096 ranks")
-    spark.stop()
-
-
-def run_skew() -> None:
-    """Hot-entity skew measurement -> BENCH/SKEW.md.
-
-    Measures, on a 10M-row hot key (100 bursts of 100k observations,
-    bursts separated by >max_tol), (a) where the hot-key cost actually
-    sits in ``applyInPandas`` operators — isolated with a TRIVIAL per-group
-    UDF — and (b) what the session-chunk remedy does to the real non-reuse
-    pairing sweep, with output equality asserted.  The honest result (the
-    remedy nets negative at single-host scale because Arrow transfer, not
-    the Python sweep, dominates) is written up in SKEW.md together with
-    when chunking IS the right tool (per-group memory feasibility).
-    """
-    import datetime as dtm
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from esa_pfa_spark.operators.pairing import find_pairs
-    from esa_pfa_spark.operators.windows import sessionize
-    from esa_pfa_spark import synth
-    from esa_pfa_spark.session import get_spark
-
-    spark = get_spark(master="local[8]", app_name="esa_pfa_skew")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    n_ent, mean_obs = 500, 20
-    cold = synth.observations_df(
-        spark, seed=7, n_entities=n_ent, mean_obs=mean_obs, mean_tok=4
-    ).select("entity_id", "ts", "doc_id", "tokens", "n_tok")
-
-    n_burst, per_burst = 100, 100_000
-    base = F.lit("2024-01-01 00:00:00").cast("timestamp")
-    hot = spark.range(n_burst * per_burst).select(
-        F.lit("hot_entity").alias("entity_id"),
-        (base + F.make_dt_interval(
-            days=(F.floor(F.col("id") / per_burst) * 30).cast("int"),
-            secs=(F.col("id") % per_burst) * 60.0,
-        )).alias("ts"),
-        F.format_string("hot_%07d", F.col("id")).alias("doc_id"),
-        F.array(
-            (F.col("id") % 7).cast("int"), (F.col("id") % 11).cast("int"),
-            F.lit(3), F.lit(5),
-        ).alias("tokens"),
-        F.lit(4).alias("n_tok"),
-    )
-    obs = cold.unionByName(hot).cache()
-    n_obs = obs.count()
-    hot_rows = n_burst * per_burst
-
-    def timed(df):
-        df.write.format("noop").mode("overwrite").save()  # warm
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 2)
-
-    # -- isolation: trivial per-group UDF => pure data-movement cost -----
-    SCH = T.StructType([
-        T.StructField("entity_id", T.StringType()), T.StructField("n", T.IntegerType())
-    ])
-
-    def trivial(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({"entity_id": [pdf["entity_id"].iloc[0]], "n": [len(pdf)]})
-
-    t_triv_plain = timed(obs.groupBy("entity_id").applyInPandas(trivial, schema=SCH))
-    sess = sessionize(obs, key="entity_id", ts="ts", gap=dtm.timedelta(days=7),
-                      session_col="__sess", with_stats=False)
-    t_triv_sess = timed(
-        sess.groupBy("entity_id", "__sess").applyInPandas(trivial, schema=SCH)
-    )
-
-    # -- the real operator, both plans, equality asserted ----------------
-    p_plain = find_pairs(obs, min_overlap=0.0)
-    p_chunk = find_pairs(obs, min_overlap=0.0, chunk="session")
-    t_plain = timed(p_plain)
-    t_chunk = timed(p_chunk)
-    key_cols = ["entity_id", "doc_id1", "doc_id2"]
-    pairs_equal = (
-        p_plain.select(*key_cols).exceptAll(p_chunk.select(*key_cols)).count() == 0
-        and p_chunk.select(*key_cols).exceptAll(p_plain.select(*key_cols)).count() == 0
-    )
-
-    sha = subprocess.run(
-        ["git", "rev-parse", "--short", "HEAD"], capture_output=True, text=True, cwd=str(REPO)
-    ).stdout.strip()
-    md = f"""# BENCH/SKEW — hot-entity skew: measured, including a negative result
-
-Input: {n_obs:,} observations, 501 entities; `hot_entity` carries
-{hot_rows:,} rows (~{hot_rows // mean_obs:,}x the median timeline) in 100
-dense bursts separated by 30d (> max_tol, so the session remedy can split
-them exactly).  local[8], warm timings, identical input everywhere.
-
-## Where the hot-key cost actually is
-
-| plan | trivial per-group UDF | real pairing sweep |
-|---|---|---|
-| one group per key (hot key = 1 task) | {t_triv_plain}s | {t_plain}s |
-| session-chunked (100 bounded groups) | {t_triv_sess}s | {t_chunk}s |
-
-Outputs of the two pairing plans are identical: **{pairs_equal}** (also
-property-tested on adversarial timelines in
-tests/test_property_pairing.py).
-
-## Reading
-
-The trivial-UDF row isolates pure data movement: it costs on the order
-of the full operator ({t_triv_plain}s vs {t_plain}s; run-to-run JVM
-variance on this host is +/-30%, see BENCH/BASELINE.md), i.e. the
-hot-key wall time is dominated by the single-task Arrow serialization of
-the group, not by the Python sweep.  Session-chunking
-redistributes that serialization 8-wide but must first pay a sessionize
-window plus a second shuffle of the full 10M rows — at single-host scale
-that overhead exceeds the recovered parallelism, so **the default plan
-stays unchunked** and chunking is NOT a local-throughput optimization.
-
-What chunking is for, at cluster scale:
-  * **memory feasibility** — `applyInPandas` materializes each group in
-    one Python worker; a 10^9-row hot key is an OOM, not a straggler.
-    Session slicing bounds the per-group footprint with ZERO semantic
-    change (equality above), which is why it exists.
-  * **straggler bound when per-row Python work dominates** — with heavier
-    pair features the sweep cost grows linearly in hot-key size while the
-    chunked wall is the largest slice.
-
-Perf-positive remedies for the commutative cases stay separate:
-`skew.salted_agg` two-phase aggregation (proven equal to a plain GROUP BY
-in the `salted_agg_by_user` oracle query) and AQE skew-join splitting
-(session-wide).  The as-of merge itself is searchsorted per probe
-(log-time), so its hot-key tolerance is orders of magnitude higher; its
-time-sliced variant (`asof_join_pandas(chunk=...)`) is result-identical
-(hypothesis-tested in tests/test_property_asof.py).
-
-Measured at git SHA `{sha}`.
-"""
-    (REPO / "BENCH" / "SKEW.md").write_text(md)
-    print(json.dumps({
-        "metric": "skew_demo",
-        "trivial_udf_plain_s": t_triv_plain, "trivial_udf_session_s": t_triv_sess,
-        "pairs_unchunked_s": t_plain, "pairs_chunked_s": t_chunk,
-        "pairs_equal": pairs_equal,
-    }))
     spark.stop()
 
 

@@ -1,4 +1,5 @@
-"""Distributed dense-id dictionary build — A10, the scalable form.
+"""Distributed dense-id dictionary build — A10, the scalable form — and
+the engine's one global-order numbering primitive, ``global_cumsum``.
 
 The reference builds a name->index map single-threaded while writing its
 binary store (pfa-database/.../db/Lucene2Simple.java:64-91).  The naive
@@ -6,32 +7,15 @@ Spark translation, ``dense_rank() OVER (ORDER BY name)``, funnels every
 distinct value through ONE task (partition-less window) — fine for 20
 sources, a straggler for 10^8 distinct names.
 
-``dense_ids`` produces the identical mapping with no global window:
-
-  1. distinct values are range-partitioned and sorted within partitions
-     (so partition p holds a contiguous slice of the global order);
-  2. one tiny action collects per-partition counts -> cumulative offsets
-     (n_partitions rows to the driver, not the data);
-  3. a zero-copy ``mapInArrow`` pass numbers each partition's rows
-     offset + 0..count-1 via TaskContext.partitionId().
-
-Every stage is O(distinct/n_partitions) per task.  For DISTINCT inputs
-row-position == dense_rank, so the result is bit-identical to the SQL
-oracle's ``dense_rank() OVER (ORDER BY col) - 1``.
-
-Determinism: the ranged DataFrame is ``persist()``-ed and materialized
-by the counts action, so the numbering pass reads the SAME physical
-partitioning instead of re-executing ``repartitionByRange`` (whose
-RangePartitioner seeds its reservoir sample with the runtime rdd.id —
-boundaries can differ between two separate jobs even on deterministic
-input once partitions exceed the sample size).  Eviction is safe: a
-recomputed cached partition replays the one captured RDD lineage (same
-rdd.id, same sample), unlike a fresh job.  The cache is the size of the
-distinct keys; callers running many unrelated jobs in one session call
-``release_pin(result)`` once the result is materialized — it unpersists
-exactly this function's cache without evicting unrelated ones.  See
-``dataset.deterministic_shuffle`` for the content-defined-bucket variant
-used when the key distribution is known-uniform.
+``dense_ids`` produces the identical mapping with no global window: it
+numbers the distinct values with ``global_cumsum`` (plan shape in its
+docstring).  For DISTINCT inputs row-position == dense_rank, so the
+result is bit-identical to the SQL oracle's
+``dense_rank() OVER (ORDER BY col) - 1``.  The same primitive places
+documents in a packed token stream (``tokens.pack_offsets``) and gives
+the initial rank-by-count of the suffix array (``suffix.suffix_order``).
+See ``dataset.deterministic_shuffle`` for the content-defined-bucket
+variant used when the key distribution is known-uniform.
 """
 
 from __future__ import annotations
@@ -43,6 +27,105 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def global_cumsum(
+    df: DataFrame,
+    order_cols,
+    out_col: str,
+    weight: str | None = None,
+    n_partitions: int | None = None,
+) -> DataFrame:
+    """Exclusive running sum of ``weight`` in the global ``order_cols``
+    order, appended to every row of ``df`` as the non-null long
+    ``out_col``; with ``weight=None`` every row weighs 1, so ``out_col``
+    is the 0-based row index.  The SQL form, ``sum(w) OVER (ORDER BY
+    ...)``, funnels all rows through one task; this plan keeps every task
+    at O(rows/n_partitions):
+
+      1. range-partition by ``order_cols`` + sort within partitions
+         (partition p holds a contiguous slice of the global order);
+      2. one tiny action collects per-partition weight sums -> cumulative
+         start offsets (n_partitions scalars to the driver, not the data);
+      3. a zero-copy ``mapInArrow`` running sum per partition, shifted by
+         the offset of ``TaskContext.partitionId()``.
+
+    ``weight`` must be non-null and integral.  Ties in ``order_cols`` are
+    numbered in an unspecified order, so callers order by a unique key
+    (or weight tied rows identically).
+
+    Determinism: the ranged DataFrame is ``persist()``-ed and
+    materialized by the sums action, so the numbering pass reads the SAME
+    physical partitioning instead of re-executing ``repartitionByRange``.
+    Without the pin, RangePartitioner seeds its reservoir sample with the
+    runtime rdd.id — two separate jobs can sample DIFFERENT boundaries
+    even on fully deterministic input once partitions exceed the ~100-row
+    sample, silently shifting offsets near boundaries (invisible at test
+    scale, where partitions are sampled exhaustively).  Eviction is safe:
+    a recomputed cached partition replays the one captured RDD lineage
+    (same rdd.id, same sample).  The cache holds ``df`` as given, so
+    project it first; sessions running many unrelated jobs call
+    ``release_pin(result)`` once the result is materialized."""
+    if n_partitions is None:
+        n_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    order_cols = list(order_cols)
+    ranged = (
+        df.repartitionByRange(n_partitions, *[F.col(c) for c in order_cols])
+        .sortWithinPartitions(*order_cols)
+        .persist()  # pin ONE sampled partitioning for both passes (docstring)
+    )
+
+    w = F.lit(1) if weight is None else F.col(weight)
+    sums = (
+        ranged.groupBy(F.spark_partition_id().alias("__pid"))
+        .agg(F.sum(w).alias("__s"))
+        .collect()
+    )
+    totals = np.zeros(n_partitions, dtype=np.int64)
+    for r in sums:
+        totals[r["__pid"]] = r["__s"]
+    offsets = np.concatenate([[0], np.cumsum(totals)[:-1]])
+
+    names = ranged.columns + [out_col]
+    out_schema = T.StructType(
+        ranged.schema.fields + [T.StructField(out_col, T.LongType(), False)]
+    )
+    wi = None if weight is None else ranged.columns.index(weight)
+
+    def number(batches):
+        import pyarrow as pa
+
+        running = int(offsets[TaskContext.get().partitionId()])
+        for b in batches:
+            if wi is None:
+                w = np.ones(b.num_rows, dtype=np.int64)
+            else:
+                w = b.column(wi).to_numpy(zero_copy_only=False).astype(np.int64)
+            starts = running + np.cumsum(w) - w
+            running += int(w.sum())
+            yield pa.RecordBatch.from_arrays(
+                b.columns + [pa.array(starts, type=pa.int64())], names
+            )
+
+    out = ranged.mapInArrow(number, schema=out_schema)
+    out._pinned_cache = ranged  # release with release_pin(out)
+    return out
+
+
+def release_pin(df: DataFrame, blocking: bool = False) -> bool:
+    """Unpersist the partitioning pin ``global_cumsum`` attaches to its
+    result (and that ``dense_ids`` / ``tokens.pack_offsets`` /
+    ``tokens.pack_attention_stats`` pass on).  Call AFTER the result is
+    materialized (written / collected): the pin exists so two jobs read
+    one sampled range partitioning — once the numbers are on disk nothing
+    re-reads it.  Targeted alternative to ``spark.catalog.clearCache()``,
+    which would evict unrelated caches.  Returns True if a pin was found
+    and released."""
+    pinned = getattr(df, "_pinned_cache", None)
+    if pinned is None:
+        return False
+    pinned.unpersist(blocking=blocking)
+    return True
+
+
 def dense_ids(
     df: DataFrame,
     col: str,
@@ -51,59 +134,8 @@ def dense_ids(
 ) -> DataFrame:
     """0-based dense ids over the distinct values of ``col``, ordered by
     value — ``dense_rank() OVER (ORDER BY col) - 1`` without the global
-    window (see module docstring for the plan shape)."""
-    spark = df.sparkSession
-    if n_partitions is None:
-        n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    distinct = df.select(col).distinct()
-    ranged = (
-        distinct.repartitionByRange(n_partitions, F.col(col))
-        .sortWithinPartitions(col)
-        .persist()  # pin ONE sampled partitioning for both passes (module docstring)
+    window: the row index ``global_cumsum`` gives the distinct values.
+    The result carries ``global_cumsum``'s pin (``release_pin``)."""
+    return global_cumsum(
+        df.select(col).distinct(), [col], out_col, n_partitions=n_partitions
     )
-
-    # per-partition counts -> global offsets (tiny: n_partitions rows);
-    # this action also materializes the persisted partitioning
-    counts = (
-        ranged.select(F.spark_partition_id().alias("__pid"))
-        .groupBy("__pid")
-        .count()
-        .collect()
-    )
-    sizes = np.zeros(n_partitions, dtype=np.int64)
-    for r in counts:
-        sizes[r["__pid"]] = r["count"]
-    offsets = np.concatenate([[0], np.cumsum(sizes)[:-1]])
-
-    out_schema = T.StructType(
-        [ranged.schema[col], T.StructField(out_col, T.LongType(), False)]
-    )
-
-    def number(batches):
-        import pyarrow as pa
-
-        base = int(offsets[TaskContext.get().partitionId()])
-        seen = 0
-        for b in batches:
-            ids = pa.array(np.arange(base + seen, base + seen + b.num_rows, dtype=np.int64))
-            seen += b.num_rows
-            yield pa.RecordBatch.from_arrays([b.column(0), ids], [col, out_col])
-
-    out = ranged.mapInArrow(number, schema=out_schema)
-    out._pinned_cache = ranged  # release with release_pin(out)
-    return out
-
-
-def release_pin(df: DataFrame, blocking: bool = False) -> bool:
-    """Unpersist the partitioning pin attached by ``dense_ids`` /
-    ``tokens.pack_offsets`` to their result DataFrame.  Call AFTER the
-    result is materialized (written / collected): the pin exists so two
-    jobs read one sampled range partitioning — once the numbers are on
-    disk nothing re-reads it.  Targeted alternative to
-    ``spark.catalog.clearCache()``, which would evict unrelated caches.
-    Returns True if a pin was found and released."""
-    pinned = getattr(df, "_pinned_cache", None)
-    if pinned is None:
-        return False
-    pinned.unpersist(blocking=blocking)
-    return True

@@ -211,30 +211,10 @@ def token_stats_arrow(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
 
     Appends the 10 stat columns after all existing columns; null/empty
     token rows get null stats and count 0."""
-    return _token_stats_arrow_impl(df, tokens_col, keep_tokens=True)
-
-
-def token_stats_arrow_drop(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
-    """``token_stats_arrow`` for consumers that DON'T need the token array
-    afterwards: the UDF's output schema omits ``tokens_col``, so the
-    256-byte-per-row array is never serialized on the Python->JVM return
-    hop.  A caller-side ``.drop(tokens_col)`` cannot do this — the
-    mapInArrow output schema is fixed at the node, so Catalyst prunes the
-    column only AFTER the worker has shipped it back.  On the flagship
-    input this removes ~40% of the Arrow-stage traffic, the stage that
-    memory-bandwidth-saturates the 16-core side (BENCH/BASELINE.md)."""
-    return _token_stats_arrow_impl(df, tokens_col, keep_tokens=False)
-
-
-def _token_stats_arrow_impl(df: DataFrame, tokens_col: str, keep_tokens: bool) -> DataFrame:
     import pyarrow as pa
 
-    in_names = df.columns
-    ti = in_names.index(tokens_col)
-    base_fields = [
-        f for f in df.schema.fields if keep_tokens or f.name != tokens_col
-    ]
-    out_fields = base_fields + [
+    ti = df.columns.index(tokens_col)
+    out_fields = df.schema.fields + [
         T.StructField(n, T.DoubleType(), True) for n in STAT_NAMES[:-1]
     ] + [T.StructField("count", T.IntegerType(), True)]
     out_schema = T.StructType(out_fields)
@@ -250,11 +230,7 @@ def _token_stats_arrow_impl(df: DataFrame, tokens_col: str, keep_tokens: bool) -
             # buffer, and segmented_stats has a faster integer sort path
             flat = np.asarray(la.flatten())
             stats = segmented_stats(flat, lengths)
-            cols, names = [], []
-            for i in range(b.num_columns):
-                if keep_tokens or i != ti:
-                    cols.append(b.column(i))
-                    names.append(b.schema.names[i])
+            cols, names = list(b.columns), list(b.schema.names)
             empty_or_null = ~valid
             for name in STAT_NAMES[:-1]:
                 vals = stats[name]

@@ -17,8 +17,8 @@ scale devices on top of the textbook recurrence:
 
   * **Rank-by-count semantics** (rank = number of strictly-smaller
     suffixes, ties share a rank): the initial ranking is ONE global
-    pass (groupBy key -> range-partitioned cumulative-count numbering,
-    the dense_ids/pack_offsets pattern — no global window); every
+    pass (groupBy key -> the exclusive running count of
+    ``dictionary.global_cumsum`` — no global window); every
     subsequent round updates ranks with a WINDOW PARTITIONED BY THE TIE
     GROUP (never partition-less), because a tied group's members can
     only move within the group's own rank span.
@@ -48,64 +48,10 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
-from pyspark import TaskContext
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-
-def _cumcount_rank(
-    counts: DataFrame,
-    key_col: str,
-    cnt_col: str,
-    out_col: str,
-    n_partitions: int,
-):
-    """rank-by-count over distinct sorted keys: for each key, the total
-    count of all strictly-smaller keys.  Range-partition + in-partition
-    sort, one n_partitions-row action for per-partition count sums ->
-    cumulative offsets, one zero-copy mapInArrow running-sum pass (the
-    pack_offsets pattern).  Returns (mapping_df, pinned_cache)."""
-    ranged = (
-        counts.repartitionByRange(n_partitions, F.col(key_col))
-        .sortWithinPartitions(key_col)
-        .persist()  # pin ONE sampled partitioning for both passes
-    )
-    sums = (
-        ranged.select(F.spark_partition_id().alias("__pid"), cnt_col)
-        .groupBy("__pid")
-        .agg(F.sum(cnt_col).alias("__s"))
-        .collect()
-    )
-    totals = np.zeros(n_partitions, dtype=np.int64)
-    for r in sums:
-        totals[r["__pid"]] = r["__s"]
-    offsets = np.concatenate([[0], np.cumsum(totals)[:-1]])
-
-    out_schema = T.StructType(
-        [
-            counts.schema[key_col],
-            counts.schema[cnt_col],
-            T.StructField(out_col, T.LongType(), False),
-        ]
-    )
-
-    def number(batches):
-        import pyarrow as pa
-
-        running = int(offsets[TaskContext.get().partitionId()])
-        for b in batches:
-            c = b.column(cnt_col).to_numpy(zero_copy_only=False).astype(np.int64)
-            ranks = running + np.concatenate([[0], np.cumsum(c)[:-1]])
-            running += int(c.sum())
-            yield pa.RecordBatch.from_arrays(
-                [b.column(key_col), b.column(cnt_col),
-                 pa.array(ranks, type=pa.int64())],
-                [key_col, cnt_col, out_col],
-            )
-
-    return ranged.mapInArrow(number, schema=out_schema), ranged
+from esa_pfa_spark.operators.dictionary import global_cumsum, release_pin
 
 
 def suffix_order(
@@ -158,21 +104,25 @@ def suffix_order(
         f"acc * CAST({base} AS BIGINT)"
         f" + coalesce(try_element_at(__t1, p + i), CAST(0 AS BIGINT))))"
     )
+    # zero-token docs emit no suffix; dropping them first also keeps
+    # sequence(1, 0) — which descends to [1, 0] — away from the 1-based
+    # try_element_at (index 0 raises)
     pos = (
-        df.select(F.col(id_col).alias("__d"), guarded.alias("__t1"))
+        df.filter(F.size(toks) > 0)
+        .select(F.col(id_col).alias("__d"), guarded.alias("__t1"))
         .select("__d", F.posexplode(packed).alias("off", "__key"))
         .localCheckpoint()  # consumed twice (counts + rank join): compute
         # the tokenize/pack/explode lineage once, not per consumer
     )
 
     counts = pos.groupBy("__key").agg(F.count(F.lit(1)).alias("__c"))
-    mapping, pin = _cumcount_rank(counts, "__key", "__c", "__r", n_partitions)
+    mapping = global_cumsum(counts, ["__key"], "__r", weight="__c", n_partitions=n_partitions)
     ranks = (
         pos.join(mapping, "__key")
         .select("__d", "off", "__r", (F.col("__c") > 1).alias("__tied"))
         .localCheckpoint()
     )
-    pin.unpersist()
+    release_pin(mapping)
 
     max_len = df.select(F.max(F.size(toks))).first()[0] or 0
     span = k0
@@ -370,7 +320,8 @@ def duplicate_coverage(
     rows per surviving pair -> classic sweep-line union per document
     (running-max window over a DOC-partitioned frame — never global) ->
     one row per document joined back so dup-free docs report 0.
-    Returns (id_col, n_tok, dup_tokens, dup_frac)."""
+    Returns (id_col, n_tok, dup_tokens, dup_frac); ``dup_frac`` is NULL
+    for a zero-token document."""
     pairs, src = _adjacent_lcp(
         df, tokens_col, id_col, n_partitions, max_token, fanout
     )
@@ -404,9 +355,13 @@ def duplicate_coverage(
             id_col,
             n_tok_col,
             F.coalesce("__dup", F.lit(0)).cast("long").alias("dup_tokens"),
-            F.round(
-                F.coalesce("__dup", F.lit(0)).cast("double") / F.col(n_tok_col),
-                round_to,
+            # NULL for a zero-token doc, as SQL's 0.0/0 gives
+            F.when(
+                F.col(n_tok_col) > 0,
+                F.round(
+                    F.coalesce("__dup", F.lit(0)).cast("double") / F.col(n_tok_col),
+                    round_to,
+                ),
             ).alias("dup_frac"),
         )
     )

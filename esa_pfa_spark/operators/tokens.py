@@ -18,10 +18,8 @@ Scale notes (100 TB):
    map-only stage, no shuffle.
  - ``pack_offsets`` needs a GLOBAL deterministic concatenation order.
    The naive form is a partition-less window cumsum (one task sees every
-   row).  The scalable form here mirrors ``dictionary.dense_ids``:
-   range-partition by the order key, per-partition token sums to the
-   driver (n_partitions rows, not data), then a zero-copy Arrow cumsum
-   per partition — every task touches O(rows/n_partitions).
+   row).  The scalable form here is ``dictionary.global_cumsum``: every
+   task touches O(rows/n_partitions).
  - ``vocab_counts``/``bigram_counts`` are explode -> partial-agg (map-side
    combine) -> top-k via TakeOrderedAndProject; the shuffle carries one
    row per distinct (token) or (t1,t2), not per occurrence.
@@ -40,10 +38,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark import TaskContext
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from esa_pfa_spark.operators.dictionary import global_cumsum
 
 DEFAULT_VOCAB = 32768
 
@@ -129,79 +127,22 @@ def pack_offsets(
 
     Equivalent SQL: global-window cumsum of n_tok + generate_series over
     the spanned window ids — but ``sum() OVER (ORDER BY ...)`` funnels all
-    rows through one task.  Scalable plan (dense_ids pattern):
-
-      1. range-partition + sort by ``order_cols`` (partition p holds a
-         contiguous slice of the global order);
-      2. collect per-partition SUM(n_tok) -> cumulative start offsets
-         (n_partitions scalars to the driver);
-      3. zero-copy Arrow cumsum per partition, shifted by the offset ->
-         each doc's global ``tok_start``;
-      4. window span + per-window token range: pure column math + explode.
+    rows through one task.  Scalable plan: each doc's global ``tok_start``
+    is the exclusive running sum of n_tok in ``order_cols`` order
+    (``dictionary.global_cumsum`` — range partition, per-partition sums,
+    Arrow running sum); the window span + per-window token range is then
+    pure column math + explode.
 
     Output: order_cols…, ``chunk_id`` (global window ordinal), ``tok_start
     _in_doc``/``n_in_chunk`` (0-based half-open span of this doc's tokens
-    inside the window), ``n_tok``.
-
-    Determinism: the ranged DataFrame is ``persist()``-ed and materialized
-    by the offsets action, so the numbering pass reads the SAME physical
-    partitioning instead of re-executing ``repartitionByRange``.  Without
-    the pin, RangePartitioner seeds its reservoir sample with the runtime
-    rdd.id — two separate jobs can sample DIFFERENT boundaries even on
-    fully deterministic input once partitions exceed the ~100-row sample,
-    silently corrupting tok_start near boundaries (invisible at test
-    scale, where partitions are sampled exhaustively).  Eviction is safe:
-    a recomputed cached partition replays the one captured RDD lineage
-    (same rdd.id, same sample).  The cache holds only the
-    (order_cols, n_tok) projection; sessions running many unrelated jobs
-    call ``dictionary.release_pin(result)`` after materializing the
-    result to drop exactly this cache (clearCache() would evict
-    unrelated ones)."""
-    spark = df.sparkSession
-    if n_partitions is None:
-        n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    base = df.filter(F.col(ntok_col) > 0).select(*order_cols, F.col(ntok_col).alias("n_tok"))
-    ranged = (
-        base.repartitionByRange(n_partitions, *[F.col(c) for c in order_cols])
-        .sortWithinPartitions(*order_cols)
-        .persist()  # pin ONE sampled partitioning for both passes (docstring)
+    inside the window), ``n_tok``.  The result carries
+    ``global_cumsum``'s partitioning pin (``dictionary.release_pin``);
+    the pinned cache holds only the (order_cols, n_tok) projection."""
+    base = df.filter(F.col(ntok_col) > 0).select(
+        *order_cols, F.col(ntok_col).cast("long").alias("n_tok")
     )
-
-    sums = (
-        ranged.select(F.spark_partition_id().alias("__pid"), "n_tok")
-        .groupBy("__pid")
-        .agg(F.sum("n_tok").alias("s"))
-        .collect()
-    )
-    totals = np.zeros(n_partitions, dtype=np.int64)
-    for r in sums:
-        totals[r["__pid"]] = r["s"]
-    offsets = np.concatenate([[0], np.cumsum(totals)[:-1]])
-
-    out_schema = T.StructType(
-        [ranged.schema[c] for c in order_cols]
-        + [
-            T.StructField("n_tok", T.IntegerType(), False),
-            T.StructField("tok_start", T.LongType(), False),
-        ]
-    )
-
-    def cumsum(batches):
-        import pyarrow as pa
-
-        running = int(offsets[TaskContext.get().partitionId()])
-        for b in batches:
-            n = b.column("n_tok").to_numpy(zero_copy_only=False).astype(np.int64)
-            starts = running + np.concatenate([[0], np.cumsum(n)[:-1]])
-            running += int(n.sum())
-            arrays = [b.column(c) for c in order_cols] + [
-                b.column("n_tok").cast(pa.int32()),
-                pa.array(starts, type=pa.int64()),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, list(order_cols) + ["n_tok", "tok_start"])
-
-    placed = ranged.withColumn("n_tok", F.col("n_tok").cast("int")).mapInArrow(
-        cumsum, schema=out_schema
+    placed = global_cumsum(
+        base, order_cols, "tok_start", weight="n_tok", n_partitions=n_partitions
     )
 
     start, ntok = F.col("tok_start"), F.col("n_tok")
@@ -223,7 +164,7 @@ def pack_offsets(
         tok_start_in_doc.alias("tok_start_in_doc"),
         (tok_end_in_doc - tok_start_in_doc).cast("long").alias("n_in_chunk"),
     )
-    out._pinned_cache = ranged  # release with dictionary.release_pin(out)
+    out._pinned_cache = placed._pinned_cache  # dictionary.release_pin(out)
     return out
 
 
@@ -2106,12 +2047,8 @@ def pack_attention_stats(
             "chunk_id",
             "n_docs",
             "n_tok",
-            (
-                (F.col("n_tok") * (F.col("n_tok") + 1) - F.col("__2w")) / 2
-            ).cast("long").alias("cross_pairs"),
-            (F.col("n_tok") * (F.col("n_tok") + 1) / 2).cast("long").alias(
-                "total_pairs"
-            ),
+            F.expr("(n_tok * (n_tok + 1) - __2w) div 2").alias("cross_pairs"),
+            F.expr("n_tok * (n_tok + 1) div 2").alias("total_pairs"),
             F.round(
                 (F.col("n_tok") * (F.col("n_tok") + 1) - F.col("__2w"))
                 .cast("double")

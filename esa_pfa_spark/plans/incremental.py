@@ -33,7 +33,7 @@ restricted to ``query_ts >= cut + tolerance``):
 Scale shape: the state table is one row per entity (billions of rows at
 most — a normal bucketed table), the delta scan partition-prunes on the
 dated lakehouse layout, and the fill is the same one-Exchange union +
-window plan as ``plans.pipeline._fused_fill`` with three extra
+window plan as ``plans.pipeline.feature_table_fused`` with three extra
 ignorenulls carry-forward fills over the SAME sort — no additional
 exchange, no additional sort.
 
@@ -197,7 +197,7 @@ def incremental_fill(
     value_col: str = "mean",
     payload: list[str] | None = None,
 ) -> DataFrame:
-    """The incremental analog of ``plans.pipeline._fused_fill``: one row
+    """The incremental analog of ``plans.pipeline.feature_table_fused``: one row
     per probe with ``matched_ts`` + ``value_col`` + ``lag_1_<value>`` +
     ``session_id`` / ``session_len`` + any extra ``payload`` columns from
     the matched observation — equal to the full-history fill at the same

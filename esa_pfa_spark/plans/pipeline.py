@@ -1,33 +1,33 @@
 """The flagship end-to-end pipeline (SURVEY.md §7 step 2, extended):
 
-  observations (tokens table with entity/ts)
-    -> per-row STX token stats                 (features.token_stats)
-    -> lag/lead mean over the entity timeline  (windows.lag_lead)
-    -> gap-based sessionization (gap > 7d)     (windows.sessionize)
-    -> backward as-of join to probe timestamps (asof.asof_join)
+  observations (tokens table with entity/ts) ∪ probes
+    -> per-row STX token stats                 (features.token_stats_arrow)
+    -> lag/lead mean over the entity timeline
+    -> gap-based sessionization (gap > 7d)
+    -> backward tolerance-bounded as-of fill to probe timestamps
   => one row per (entity_id, query_ts) carrying the matched observation's
      token array (byte-equal invariant) + feature vector, zero leakage.
 
 This chain replaces the reference's BiTempPreprocessor -> FindPatchPairs ->
-BiTempSpectralFeatureWriter flow (SURVEY.md §3.4) one-for-one.
-
-Physical shape at scale: token_stats is one Arrow-vectorized projection
-(no shuffle); lag/lead + sessionize + the as-of window share ONE shuffle on
-entity_id (Catalyst reuses the hash partitioning across the window specs);
-the probe union adds no extra shuffle beyond its own side.  Total: 2 sorts,
-1 exchange per side — the minimal plan for this computation.
+BiTempSpectralFeatureWriter flow (SURVEY.md §3.4) one-for-one, as ONE
+plan: ``feature_table_fused``, which ``cli run`` (and ``--resume``)
+executes.  Its rows are pinned by the pandas oracle
+(tests/test_pipeline.py) and its one-exchange shape by tests/test_plans.py.
+The composable operators (``windows.lag_lead``, ``windows.sessionize``,
+``asof.asof_join``) compute the same features stage by stage, at the cost
+of a second exchange: the as-of union invalidates the enriched side's
+partitioning.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from esa_pfa_spark.operators.asof import asof_join
+from esa_pfa_spark.functions.time import ts_diff_us
 from esa_pfa_spark.operators.features import token_stats_arrow
-from esa_pfa_spark.operators.windows import lag_lead, sessionize
 
 DEFAULT_TOLERANCE = _dt.timedelta(days=7)
 DEFAULT_SESSION_GAP = _dt.timedelta(days=7)
@@ -52,79 +52,33 @@ FEATURE_PAYLOAD = [
 ]
 
 
-def enrich_observations(observations: DataFrame) -> DataFrame:
-    """Stage 1: per-row token stats + windowed features over the timeline.
-
-    The Arrow-UDF stat stage runs FIRST, map-side at scan parallelism —
-    per-row stats need no co-location, and ``mapInArrow`` cannot promise
-    Catalyst that it preserves a child partitioning (it may emit arbitrary
-    rows), so stats placed *after* an explicit repartition force a SECOND
-    exchange for the window sort (observed: Exchange → MapInArrow →
-    Exchange).  With stats first, the window specs' ENSURE_REQUIREMENTS
-    insert the single hashpartitioning(entity_id) exchange, and lag/lead,
-    sessionize and session_len all reuse it — one shuffle for the whole
-    enrichment chain (asserted in tests/test_plans.py).  This is the
-    explicit co-partitioning requirement of SURVEY.md §4 (PatchCS
-    grid-alignment analog)."""
-    enriched = token_stats_arrow(observations, "tokens")
-    enriched = lag_lead(enriched, "mean", key="entity_id", ts="ts")
-    enriched = sessionize(enriched, key="entity_id", ts="ts", gap=DEFAULT_SESSION_GAP)
-    return enriched
-
-
-def feature_table(
-    observations: DataFrame,
-    probes: DataFrame,
-    tolerance=DEFAULT_TOLERANCE,
-) -> DataFrame:
-    """Stage 2: point-in-time feature lookup at each probe timestamp."""
-    enriched = enrich_observations(observations)
-    return asof_join(
-        probes,
-        enriched,
-        on="entity_id",
-        probe_ts="query_ts",
-        obs_ts="ts",
-        payload=FEATURE_PAYLOAD,
-        direction="backward",
-        tolerance=tolerance,
-    ).withColumnRenamed("matched_ts", "matched_ts")
-
-
-def feature_table_sorted(observations: DataFrame, probes: DataFrame, tolerance=DEFAULT_TOLERANCE) -> DataFrame:
-    """feature_table + deterministic output order (for checksums/goldens)."""
-    return feature_table(observations, probes, tolerance).orderBy("entity_id", "query_ts")
-
-
 def feature_table_fused(
     observations: DataFrame,
     probes: DataFrame,
     tolerance=DEFAULT_TOLERANCE,
 ) -> DataFrame:
-    """Single-shuffle fusion of the whole pipeline (the 100 TB plan).
+    """Point-in-time feature lookup at each probe timestamp, in a single
+    shuffle (the 100 TB plan).  Unions probes with RAW observations,
+    exchanges ONCE on entity_id, and computes everything over the single
+    sorted stream:
 
-    The modular ``feature_table`` exchanges the observation stream twice
-    (the enrichment windows' ENSURE_REQUIREMENTS, then the as-of union's —
-    the union invalidates the enriched side's partitioning).  This variant
-    unions probes with RAW observations first, exchanges ONCE on
-    entity_id, and computes everything over the single sorted stream:
-
-      * token stats: Arrow UDF post-exchange (full shuffle-width
-        parallelism; probe rows carry null tokens and cost nothing);
+      * token stats: Arrow UDF BEFORE the exchange — per-row, needs no
+        co-location, and ``mapInArrow`` cannot promise Catalyst that it
+        preserves a child partitioning, so stats placed after the
+        exchange would force the window sort to re-exchange; probe rows
+        carry null tokens and get null stats at no cost;
       * lag/lead over observations only: ``last/first(val, ignorenulls)``
         over (unbounded, -1) / (+1, unbounded) frames — probe rows are
         null so they are skipped exactly like lag/lead over the obs-only
         stream;
       * sessionization: gap from the previous OBSERVATION row
         (ignorenulls fill of obs-ts), break-cumsum over obs rows only;
-      * as-of fill: last(payload struct, ignorenulls) as in asof_join.
+      * as-of fill: last(payload struct, ignorenulls), kept only within
+        ``tolerance`` of the probe.
 
-    Physical shape: 1 Exchange + 2 in-partition Sorts (the second for the
-    per-session count) + 1 ArrowEval.  Output == feature_table (tested).
-
-    The full ``tokens`` array rides the exchange + window sorts here; see
-    ``feature_table_slim`` for the narrow-shuffle variant that fetches
-    tokens by row key AFTER the as-of.
+    Physical shape: 1 Exchange + in-partition window Sorts + 1 ArrowEval.
+    Returns one row per probe: entity_id, query_ts, matched_ts and
+    ``FEATURE_PAYLOAD`` (null when no observation is within tolerance).
     """
     obs_side = observations.select(
         "entity_id",
@@ -141,110 +95,13 @@ def feature_table_fused(
         null_tokens.alias("tokens"),
         F.lit(None).cast("int").alias("n_tok"),
     )
-    u = obs_side.unionByName(probe_side)
+    u = token_stats_arrow(obs_side.unionByName(probe_side), "tokens")
 
-    from esa_pfa_spark.operators.features import token_stats_arrow
-
-    # stats BEFORE the exchange: per-row, needs no co-location, and keeps
-    # the plan at ONE shuffle (mapInArrow after a repartition would force
-    # the window sort to re-exchange — see enrich_observations docstring)
-    u = token_stats_arrow(u, "tokens")  # null stats on probe rows, zero-copy
-    return _fused_fill(u, tolerance, FEATURE_PAYLOAD)
-
-
-def feature_table_slim(
-    observations: DataFrame,
-    probes: DataFrame,
-    tolerance=DEFAULT_TOLERANCE,
-    row_key: str = "doc_id",
-) -> DataFrame:
-    """``feature_table_fused`` with a NARROW shuffle: the ``tokens`` array
-    (the fat column — mean 64 int32s vs ~120 bytes of scalars) never rides
-    the exchange, the two window sorts, or the as-of struct fill.
-
-      1. token stats map-side on the observation SCAN (Arrow UDF at scan
-         parallelism), then DROP tokens — the union carries only scalars
-         plus ``row_key`` (a unique observation id, e.g. doc_id);
-      2. the identical one-Exchange window/as-of fill as the fused plan;
-      3. ONE equi-join on ``row_key`` fetches the matched row's tokens —
-         left join, so out-of-tolerance probes keep null tokens.
-
-    Exactness: the fill carries the matched observation's unique row key,
-    so the fetch returns precisely the row the as-of selected — output is
-    row-identical to ``feature_table_fused`` (tested) PROVIDED ``row_key``
-    is unique per observation (a duplicated key would fan out the join).
-
-    Scale shape: at the bench token width (mean 64 int32s) the window
-    exchange/sort rows shrink ~60-70%, and ``token_stats_arrow_drop``
-    also removes the array from the Arrow Python->JVM return hop (~40%
-    of the stats stage's traffic) — the stage that memory-bandwidth-
-    saturates the many-core side per BENCH/BASELINE.md.  Measured
-    (pinned, 10M sequences): faster than the fused plan at BOTH 4 and 16
-    cores (47.6s vs 89.1s, 22.7s vs 27.8s min-of-2 draws).  The fetch
-    join shuffles the token table once on the row key — bytes that in
-    the fat plan rode the window exchange anyway — and AQE skew-join can
-    split it, which a window sort never gets."""
-    from esa_pfa_spark.operators.features import token_stats_arrow_drop
-
-    scalar_payload = [c for c in FEATURE_PAYLOAD if c != "tokens"]
-    # token_stats_arrow_DROP: the UDF's output schema omits tokens, so the
-    # array is never serialized back from the Python worker (a caller-side
-    # .drop() would prune it only AFTER the Arrow return hop)
-    obs_side = token_stats_arrow_drop(
-        observations.select(
-            "entity_id",
-            F.col("ts").alias("__ts"),
-            F.lit(0).alias("__tag"),
-            F.col(row_key).alias("__rk"),
-            "tokens",
-            "n_tok",
-        ),
-        "tokens",
-    )
-    probe_side = probes.select(
-        "entity_id",
-        F.col("query_ts").alias("__ts"),
-        F.lit(1).alias("__tag"),
-        F.lit(None).cast(observations.schema[row_key].dataType).alias("__rk"),
-        F.lit(None).cast("int").alias("n_tok"),
-        *[F.lit(None).cast("double").alias(c) for c in STAT_SCALARS],
-        F.lit(None).cast("int").alias("count"),
-    )
-    u = obs_side.unionByName(probe_side)
-    slim = _fused_fill(u, tolerance, ["__rk"] + scalar_payload)
-
-    toks = observations.select(
-        F.col(row_key).alias("__rk"), F.col("tokens").alias("__fetched_tokens")
-    )
-    out = slim.join(toks, on="__rk", how="left")
-    return out.select(
-        "entity_id",
-        "query_ts",
-        "matched_ts",
-        F.col("__fetched_tokens").alias("tokens"),
-        *scalar_payload,
-    )
-
-
-from esa_pfa_spark.operators.features import STAT_NAMES as _STAT_NAMES
-
-STAT_SCALARS = _STAT_NAMES[:-1]  # the double-typed stats; "count" is int
-
-
-def _fused_fill(u: DataFrame, tolerance, payload: list[str]) -> DataFrame:
-    """The shared one-Exchange window/as-of core over a tagged union ``u``
-    (obs rows ``__tag=0`` carrying ``mean`` + the payload columns, probe
-    rows ``__tag=1`` with nulls): computes lag/lead/session features and
-    the backward tolerance-bounded as-of fill, returns one row per probe
-    with ``matched_ts`` + ``payload``."""
     gap_us = int(DEFAULT_SESSION_GAP.total_seconds() * 1e6)
     tol_us = int(
         (tolerance.total_seconds() if hasattr(tolerance, "total_seconds") else float(tolerance))
         * 1e6
     )
-
-    from pyspark.sql import Window
-    from esa_pfa_spark.functions.time import ts_diff_us
 
     order = [F.col("__ts").asc(), F.col("__tag").asc()]
     w_prev = Window.partitionBy("entity_id").orderBy(*order).rowsBetween(
@@ -304,7 +161,7 @@ def _fused_fill(u: DataFrame, tolerance, payload: list[str]) -> DataFrame:
     )
 
     payload_fields = [F.col("__ts").alias("matched_ts")] + [
-        F.col(c) for c in payload
+        F.col(c) for c in FEATURE_PAYLOAD
     ]
     u = u.withColumn("__pay", F.when(is_obs, F.struct(*payload_fields)))
     filled = u.withColumn("__pay", F.last("__pay", ignorenulls=True).over(w_cum))
@@ -317,5 +174,5 @@ def _fused_fill(u: DataFrame, tolerance, payload: list[str]) -> DataFrame:
         "entity_id",
         F.col("__ts").alias("query_ts"),
         F.when(in_tol, F.col("__pay.matched_ts")).alias("matched_ts"),
-        *[F.when(in_tol, F.col(f"__pay.{c}")).alias(c) for c in payload],
+        *[F.when(in_tol, F.col(f"__pay.{c}")).alias(c) for c in FEATURE_PAYLOAD],
     )

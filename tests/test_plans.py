@@ -104,44 +104,22 @@ def test_fused_pipeline_single_exchange(spark):
     )
 
 
-def test_slim_pipeline_narrow_shuffle(spark):
-    """feature_table_slim: the tokens array must NOT ride the window
-    exchange — only the post-as-of fetch join may touch it.  Executed-plan
-    check: every hash-partitioning Exchange line is tokens-free, and the
-    window exchange count stays at one (the fetch join may add its own
-    shuffle or broadcast)."""
-    from esa_pfa_spark import synth
-    from esa_pfa_spark.plans.pipeline import feature_table_slim
-
-    obs = synth.observations_df(spark, seed=42, n_entities=10, mean_obs=5, mean_tok=8)
-    probes = synth.queries_df(spark, seed=42, n_entities=10, mean_obs=5)
-    plan = (
-        feature_table_slim(obs, probes)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    ex_lines = [
-        l for l in plan.splitlines()
-        if "Exchange hashpartitioning" in l or "Exchange rangepartitioning" in l
-    ]
-    assert 1 <= len(ex_lines) <= 2, plan
-    assert all("tokens" not in l for l in ex_lines), (
-        "tokens array rode a shuffle in the slim plan:\n" + plan
-    )
-    ent_ex = [l for l in ex_lines if "entity_id" in l]
-    assert len(ent_ex) == 1, "window fill must keep exactly one entity_id exchange"
-
-
 def test_enrichment_windows_share_exchange(spark):
     """lag/lead + sessionize + session_len over one repartition: the window
     specs on (entity_id) and (entity_id, session_id) must both be satisfied
     by the same hashpartitioning(entity_id) — no second shuffle."""
     from esa_pfa_spark import synth
-    from esa_pfa_spark.plans.pipeline import enrich_observations
+    from esa_pfa_spark.operators.features import token_stats_arrow
+    from esa_pfa_spark.operators.windows import lag_lead, sessionize
+    from esa_pfa_spark.plans.pipeline import DEFAULT_SESSION_GAP
 
     obs = synth.observations_df(spark, seed=1, n_entities=10, mean_obs=5, mean_tok=8)
-    plan = plan_of(enrich_observations(obs))
+    # stats FIRST (map-side): a mapInArrow after the exchange would force
+    # the window sort to re-exchange
+    enriched = token_stats_arrow(obs, "tokens")
+    enriched = lag_lead(enriched, "mean", key="entity_id", ts="ts")
+    enriched = sessionize(enriched, key="entity_id", ts="ts", gap=DEFAULT_SESSION_GAP)
+    plan = plan_of(enriched)
     assert n_exchanges(plan) == 1, plan
 
 
@@ -162,20 +140,6 @@ def test_flagship_scan_prunes_for_count(spark):
     plan = plan_of(ev.groupBy("event_type").count())
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m and "props" not in m.group(1), "count-by-type must prune the wide props column"
-
-
-def test_modular_pipeline_two_exchanges(spark):
-    """The composable (non-fused) pipeline costs exactly 2 exchanges: the
-    enrichment windows' and the as-of union's (the union invalidates the
-    enriched side's partitioning).  Regression guard for the gap the fused
-    plan closes."""
-    from esa_pfa_spark import synth
-    from esa_pfa_spark.plans.pipeline import feature_table
-
-    obs = synth.observations_df(spark, seed=2, n_entities=10, mean_obs=5, mean_tok=8)
-    probes = synth.queries_df(spark, seed=2, n_entities=10, mean_obs=5)
-    plan = plan_of(feature_table(obs, probes))
-    assert n_exchanges(plan) == 2, plan
 
 
 def test_dense_ids_matches_dense_rank_and_avoids_global_window(spark):

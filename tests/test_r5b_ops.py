@@ -50,6 +50,16 @@ class TestPackAttentionStats:
             )
             assert r["total_pairs"] == r["n_tok"] * (r["n_tok"] + 1) // 2
 
+    def test_pair_counts_exact_past_double_precision(self, spark):
+        # T(T+1)/2 for T = 2^27+1 is 9007199456067585 > 2^53: a double
+        # division would round it to ...584; only n_tok is read, so one
+        # huge row needs no token array
+        t = 2**27 + 1
+        r = pack_attention_stats(_tok_df(spark, [("s", 1, t)]), capacity=t).collect()
+        assert len(r) == 1
+        assert r[0]["total_pairs"] == t * (t + 1) // 2 == 9007199456067585
+        assert r[0]["cross_pairs"] == 0
+
 
 class TestKneserNey:
     def test_hand_computed_tiny_corpus(self, spark):

@@ -44,6 +44,26 @@ def _ref_longest_dup(docs: dict[int, list[int]]):
     return best, min(fps) if fps else None
 
 
+def _ref_coverage(docs: dict[int, list[int]], L: int):
+    # independent reference: a position is covered iff it lies inside
+    # an exactly-L window that occurs >= 2 times in the corpus
+    # (equivalent to ">= L duplicated substring" coverage)
+    from collections import Counter
+
+    grams = Counter()
+    for toks in docs.values():
+        for i in range(len(toks) - L + 1):
+            grams[tuple(toks[i:i + L])] += 1
+    out = {}
+    for d, toks in docs.items():
+        covered = set()
+        for i in range(len(toks) - L + 1):
+            if grams[tuple(toks[i:i + L])] >= 2:
+                covered.update(range(i, i + L))
+        out[d] = len(covered)
+    return out
+
+
 class TestSuffixOrder:
     def test_matches_reference_small(self, spark):
         docs = {1: [3, 1, 2, 1], 2: [1, 2, 1], 3: [2, 2]}
@@ -113,25 +133,6 @@ class TestLongestDuplicateSpan:
 
 
 class TestDuplicateCoverage:
-    def _ref_coverage(self, docs: dict[int, list[int]], L: int):
-        # independent reference: a position is covered iff it lies inside
-        # an exactly-L window that occurs >= 2 times in the corpus
-        # (equivalent to ">= L duplicated substring" coverage)
-        from collections import Counter
-
-        grams = Counter()
-        for toks in docs.values():
-            for i in range(len(toks) - L + 1):
-                grams[tuple(toks[i:i + L])] += 1
-        out = {}
-        for d, toks in docs.items():
-            covered = set()
-            for i in range(len(toks) - L + 1):
-                if grams[tuple(toks[i:i + L])] >= 2:
-                    covered.update(range(i, i + L))
-            out[d] = len(covered)
-        return out
-
     def test_cross_doc_shared_run(self, spark):
         from esa_pfa_spark.operators.suffix import duplicate_coverage
 
@@ -167,7 +168,7 @@ class TestDuplicateCoverage:
                 body = body[:at] + motif + body[at:]
             docs[d] = body
         L = 6
-        want = self._ref_coverage(docs, L)
+        want = _ref_coverage(docs, L)
         got = {r["doc_id"]: r["dup_tokens"] for r in duplicate_coverage(
             _df(spark, docs), min_len=L).collect()}
         assert got == want
@@ -181,3 +182,20 @@ def test_empty_and_single_token_corpora(spark):
     one = _df(spark, {1: [7]})
     rows = suffix_order(one).collect()
     assert [(r["doc_id"], r["off"], r["sa_idx"]) for r in rows] == [(1, 0, 0)]
+
+    # a zero-token document emits no suffix and must not abort the job;
+    # its coverage row reports 0 duplicated tokens and a NULL fraction
+    from esa_pfa_spark.operators.suffix import duplicate_coverage
+
+    docs = {1: [4, 5, 6, 7], 2: [], 3: [9, 4, 5, 6]}
+    got = suffix_order(_df(spark, docs)).collect()
+    by_idx = {r["sa_idx"]: (r["doc_id"], r["off"]) for r in got}
+    assert [by_idx[i] for i in range(len(by_idx))] == _ref_order(docs)
+    want_len, want_fp = _ref_longest_dup(docs)
+    r = longest_duplicate_span(_df(spark, docs)).collect()[0]
+    assert (r["dup_len"], r["span_fp"]) == (want_len, want_fp)
+    cov = {r["doc_id"]: r for r in duplicate_coverage(
+        _df(spark, docs), min_len=3).collect()}
+    assert {d: r["dup_tokens"] for d, r in cov.items()} == _ref_coverage(docs, 3)
+    assert cov[2]["n_tok"] == 0 and cov[2]["dup_frac"] is None
+    assert cov[1]["dup_frac"] == 0.75

@@ -112,11 +112,13 @@ def test_pack_offsets_tiles_exactly(spark):
         assert s == 32 or cid == last
 
 
-def test_pack_offsets_release_pin(spark):
-    """pack_offsets/dense_ids pin a cached range partitioning for the
-    session; release_pin(result) drops exactly that cache (not the whole
-    catalog) once the result is materialized."""
-    from esa_pfa_spark.operators.dictionary import dense_ids, release_pin
+def test_pack_offsets_release_pin(spark, monkeypatch):
+    """global_cumsum pins a cached range partitioning for the session;
+    release_pin(result) drops exactly that cache (not the whole catalog)
+    once the result is materialized.  pack_offsets/dense_ids pass the pin
+    on; suffix_order releases its own."""
+    from esa_pfa_spark.operators import suffix
+    from esa_pfa_spark.operators.dictionary import dense_ids, global_cumsum, release_pin
 
     rows = [("s", f"d{i:02d}", 10 + i) for i in range(20)]
     df = spark.createDataFrame(rows, "source string, doc_id string, n_tok int")
@@ -132,6 +134,35 @@ def test_pack_offsets_release_pin(spark):
     ids = dense_ids(df, "doc_id", n_partitions=2)
     ids.count()
     assert release_pin(ids, blocking=True)
+
+    # suffix_order leaves nothing it cached behind
+    results = []
+
+    def spy(*args, **kwargs):
+        results.append(global_cumsum(*args, **kwargs))
+        return results[-1]
+
+    monkeypatch.setattr(suffix, "global_cumsum", spy)
+    docs = spark.createDataFrame(
+        [(1, [3, 1, 2, 1]), (2, [1, 2, 1])], "doc_id long, tokens array<int>"
+    )
+    assert suffix.suffix_order(docs).count() == 7
+    assert len(results) == 1
+    level = results[0]._pinned_cache.storageLevel
+    assert not (level.useMemory or level.useDisk)
+
+    # exclusive running sums for an empty input and for fewer rows than
+    # partitions (most range partitions then hold no row)
+    empty = spark.createDataFrame([], "k long, w long")
+    few = spark.createDataFrame([(3, 5), (1, 2), (2, 7)], "k long, w long")
+    for weight, want in ((None, [0, 1, 2]), ("w", [0, 2, 9])):
+        out = global_cumsum(empty, ["k"], "off", weight=weight, n_partitions=4)
+        assert out.collect() == []
+        release_pin(out)
+        out = global_cumsum(few, ["k"], "off", weight=weight, n_partitions=8)
+        got = sorted((r["k"], r["w"], r["off"]) for r in out.collect())
+        assert got == [(1, 2, want[0]), (2, 7, want[1]), (3, 5, want[2])]
+        release_pin(out)
 
 
 def test_pack_manifest_composition(spark):
