@@ -222,10 +222,7 @@ def cmd_dedup_exact(args) -> None:
     tokens table, via the distributed generalized suffix array.  Writes
     the per-doc (doc_id, n_tok, dup_tokens, dup_frac) table and prints a
     corpus summary plus the single longest duplicated substring."""
-    from esa_pfa_spark.operators.suffix import (
-        duplicate_coverage,
-        longest_duplicate_span,
-    )
+    from esa_pfa_spark.operators.suffix import exact_substring_audit
     from esa_pfa_spark.session import get_spark
 
     spark = get_spark(app_name="esa_pfa_dedup_exact")
@@ -237,7 +234,7 @@ def cmd_dedup_exact(args) -> None:
         max_token = DEFAULT_VOCAB - 1
     else:
         max_token = args.max_token
-    cov = duplicate_coverage(df, min_len=args.min_len, max_token=max_token)
+    cov, longest = exact_substring_audit(df, min_len=args.min_len, max_token=max_token)
     cov.write.mode("overwrite").parquet(args.out)
     from pyspark.sql import functions as F
 
@@ -245,7 +242,7 @@ def cmd_dedup_exact(args) -> None:
         F.count(F.lit(1)), F.sum("n_tok"), F.sum("dup_tokens"),
         F.sum((F.col("dup_frac") > 0).cast("long")),
     ).first()
-    top = longest_duplicate_span(df, max_token=max_token).first()
+    top = longest.first()
     print(
         f"{s[0]} docs, {s[2]}/{s[1]} tokens inside >= {args.min_len}-token "
         f"duplicated substrings ({s[3]} docs affected); longest duplicated "

@@ -38,6 +38,15 @@ lineage-cut discipline).  Distributed doubling at cluster scale is
 textbook (Flick & Aluru 2015); the refinement-set form is the same
 recurrence restricted to unresolved groups.
 
+Both exact statistics — ``duplicate_coverage`` and
+``longest_duplicate_span`` — read one shared build, ``_adjacent_lcp``:
+the suffix array plus the LCP of every suffix-order-adjacent pair.
+``exact_substring_audit`` builds and checkpoints that frame ONCE and
+derives both from it (the ``dedup-exact`` CLI path); the two standalone
+functions each run the build alone.  Its compare step moves both
+documents' token arrays with every pair, so that exchange is
+O(T x doc_len) bytes, not O(T).
+
 Token values MUST be non-negative (vocabulary ids are): the "suffix
 ended" sentinel is -1 / packed 0, which must sort strictly below every
 real rank so shorter suffixes order first.  Violations raise at
@@ -191,24 +200,42 @@ def _adjacent_lcp(
     max_token: int,
     fanout: int,
 ):
-    """Shared tail of the SA queries: build the suffix array, pair each
-    suffix with its successor in suffix order, and compute the exact LCP
-    of every adjacent pair directly on the two suffix slices with JVM
-    higher-order functions (zip_with + first mismatch position) — no
-    per-row Python; work is O(min suffix len) per pair, embarrassingly
-    parallel (an all-levels rank-table greedy descent is the
-    asymptotically tighter alternative at extreme document lengths; at
-    LM context sizes the direct compare wins on constant factor and
-    memory).  Returns (pairs_df, src): pairs carry
-    (__da, __oa, __db, __ob, __ta, __lcp)."""
+    """The shared build of every SA statistic: build the suffix array,
+    pair each suffix with its successor in suffix order, and compute the
+    exact LCP of every adjacent pair directly on the two suffix slices
+    with JVM higher-order functions (zip_with + first mismatch position)
+    — no per-row Python; work is O(min suffix len) per pair,
+    embarrassingly parallel (an all-levels rank-table greedy descent is
+    the asymptotically tighter alternative at extreme document lengths;
+    at LM context sizes the direct compare wins on constant factor and
+    memory).  ``exact_substring_audit`` runs it once for both
+    statistics; ``duplicate_coverage`` and ``longest_duplicate_span``
+    each run it alone.
+
+    Caveat: both sides' whole document token arrays ride the compare
+    exchange, so its traffic is O(T x doc_len), not O(T) — quadratic in
+    document length for long documents.  ``n_partitions`` (default: the
+    session's shuffle partitions) sets both the suffix-array numbering
+    and the compare parallelism.
+
+    Returns (pairs_df, src): pairs carry (__da, __oa, __db, __ob,
+    __lcp) — no token arrays; src is the checkpointed (id, tokens)
+    projection."""
     # one materialization of the (id, tokens) projection feeds the
-    # suffix-array build AND both per-side token lookups below — the
-    # upstream lineage (scan + tokenizer) runs once, not four times
+    # suffix-array build, both per-side token lookups below and the
+    # statistics' joins back — the upstream lineage (scan + tokenizer)
+    # runs once
     src = df.select(id_col, tokens_col).localCheckpoint()
+    if n_partitions is None:
+        n_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    # read by both sides of the adjacent-pair join without a checkpoint:
+    # its last step is one window over checkpointed round state, whose
+    # exchange both sides share, and (id, off) make its row_number
+    # deterministic, so both sides see the same sa_idx
     sa = suffix_order(
         src, tokens_col=tokens_col, id_col=id_col, n_partitions=n_partitions,
         max_token=max_token, fanout=fanout,
-    ).localCheckpoint()  # consumed twice (rank i and rank i+1 sides)
+    )
     docs = src.select(
         F.col(id_col).alias("__doc"), F.col(tokens_col).alias("__toks")
     )
@@ -229,9 +256,7 @@ def _adjacent_lcp(
         # the zip_with below is compute-dense per row while the frame is
         # small in bytes: pin the parallelism so AQE coalescing cannot
         # serialize the comparison work
-        .repartition(
-            int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-        )
+        .repartition(n_partitions)
     )
     suf_a = F.slice(F.col("__ta"), F.col("__oa") + 1, F.size("__ta") - F.col("__oa"))
     suf_b = F.slice(F.col("__tb"), F.col("__ob") + 1, F.size("__tb") - F.col("__ob"))
@@ -244,8 +269,79 @@ def _adjacent_lcp(
         first_bad == 0, F.least(F.size(suf_a), F.size(suf_b))
     ).otherwise(first_bad - 1)
     return pairs.select(
-        "__da", "__oa", "__db", "__ob", "__ta", lcp.cast("long").alias("__lcp")
+        "__da", "__oa", "__db", "__ob", lcp.cast("long").alias("__lcp")
     ), src
+
+
+def _longest_from_pairs(
+    pairs: DataFrame, src: DataFrame, tokens_col: str, id_col: str
+) -> DataFrame:
+    """``longest_duplicate_span`` of the adjacent-LCP ``pairs``: the
+    max ``__lcp``, and the least md5 over the spans at that max.  Only
+    the rows at the max are joined back to ``src`` for their tokens."""
+    mx = pairs.agg(F.max("__lcp").alias("__m"))
+    top = pairs.join(F.broadcast(mx), F.col("__lcp") == F.col("__m")).select(
+        F.col("__da").alias(id_col), F.col("__oa").alias("__o"), "__m"
+    )
+    span = F.slice(F.col(tokens_col), F.col("__o") + 1, F.col("__m"))
+    fp = F.md5(F.array_join(F.transform(span, lambda x: x.cast("string")), ","))
+    # every row carries the same dup_len, so the least fingerprint is a
+    # top-1: a per-partition take, with no exchange
+    return (
+        top.join(src, id_col)
+        .select(F.col("__m").alias("dup_len"), fp.alias("span_fp"))
+        .orderBy("span_fp")
+        .limit(1)
+    )
+
+
+def _coverage_from_pairs(
+    pairs: DataFrame, src: DataFrame, min_len: int, tokens_col: str,
+    id_col: str, n_tok_col: str, round_to: int,
+) -> DataFrame:
+    """``duplicate_coverage`` of the adjacent-LCP ``pairs``: both sides'
+    intervals of every pair with lcp >= ``min_len``, unioned per
+    document by a sweep line, joined back to every ``src`` document."""
+    hits = pairs.filter(F.col("__lcp") >= min_len)
+    iv = hits.select(
+        F.col("__da").alias("__doc"), F.col("__oa").alias("__s"),
+        (F.col("__oa") + F.col("__lcp")).alias("__e"),
+    ).unionByName(
+        hits.select(
+            F.col("__db").alias("__doc"), F.col("__ob").alias("__s"),
+            (F.col("__ob") + F.col("__lcp")).alias("__e"),
+        )
+    )
+    w = Window.partitionBy("__doc").orderBy("__s", "__e")
+    prev_max = F.max("__e").over(w.rowsBetween(Window.unboundedPreceding, -1))
+    covered = F.greatest(
+        F.col("__e") - F.greatest(F.col("__s"), F.coalesce(prev_max, F.col("__s"))),
+        F.lit(0),
+    )
+    per_doc = (
+        iv.select("__doc", covered.alias("__cov"))
+        .groupBy("__doc")
+        .agg(F.sum("__cov").alias("__dup"))
+    )
+    return (
+        src.select(
+            id_col, F.size(tokens_col).cast("long").alias(n_tok_col)
+        )
+        .join(per_doc.withColumnRenamed("__doc", id_col), id_col, "left")
+        .select(
+            id_col,
+            n_tok_col,
+            F.coalesce("__dup", F.lit(0)).cast("long").alias("dup_tokens"),
+            # NULL for a zero-token doc, as SQL's 0.0/0 gives
+            F.when(
+                F.col(n_tok_col) > 0,
+                F.round(
+                    F.coalesce("__dup", F.lit(0)).cast("double") / F.col(n_tok_col),
+                    round_to,
+                ),
+            ).alias("dup_frac"),
+        )
+    )
 
 
 def longest_duplicate_span(
@@ -269,22 +365,10 @@ def longest_duplicate_span(
     examined (``_adjacent_lcp``).  A corpus with no repeated token at
     all yields dup_len = 0 with the empty-span fingerprint (md5 of "");
     fewer than two suffixes -> no adjacent pair -> empty result."""
-    pairs, _ = _adjacent_lcp(
+    pairs, src = _adjacent_lcp(
         df, tokens_col, id_col, n_partitions, max_token, fanout
     )
-    scored = pairs.select(
-        F.col("__ta").alias("__t"), F.col("__oa").alias("__o"), "__lcp"
-    )
-    mx = scored.agg(F.max("__lcp").alias("__m"))
-    span = F.slice(F.col("__t"), F.col("__o") + 1, F.col("__m"))
-    fp = F.md5(F.array_join(F.transform(span, lambda x: x.cast("string")), ","))
-    return (
-        scored.crossJoin(F.broadcast(mx))
-        .filter(F.col("__lcp") == F.col("__m"))
-        .select(F.col("__m").alias("dup_len"), fp.alias("__fp"))
-        .groupBy("dup_len")
-        .agg(F.min("__fp").alias("span_fp"))
-    )
+    return _longest_from_pairs(pairs, src, tokens_col, id_col)
 
 
 def duplicate_coverage(
@@ -325,43 +409,32 @@ def duplicate_coverage(
     pairs, src = _adjacent_lcp(
         df, tokens_col, id_col, n_partitions, max_token, fanout
     )
-    hits = pairs.filter(F.col("__lcp") >= min_len)
-    iv = hits.select(
-        F.col("__da").alias("__doc"), F.col("__oa").alias("__s"),
-        (F.col("__oa") + F.col("__lcp")).alias("__e"),
-    ).unionByName(
-        hits.select(
-            F.col("__db").alias("__doc"), F.col("__ob").alias("__s"),
-            (F.col("__ob") + F.col("__lcp")).alias("__e"),
-        )
+    return _coverage_from_pairs(
+        pairs, src, min_len, tokens_col, id_col, n_tok_col, round_to
     )
-    w = Window.partitionBy("__doc").orderBy("__s", "__e")
-    prev_max = F.max("__e").over(w.rowsBetween(Window.unboundedPreceding, -1))
-    covered = F.greatest(
-        F.col("__e") - F.greatest(F.col("__s"), F.coalesce(prev_max, F.col("__s"))),
-        F.lit(0),
+
+
+def exact_substring_audit(
+    df: DataFrame,
+    min_len: int = 16,
+    tokens_col: str = "tokens",
+    id_col: str = "doc_id",
+    n_tok_col: str = "n_tok",
+    n_partitions: int | None = None,
+    max_token: int = 2**31 - 1,
+    fanout: int = 8,
+    round_to: int = 6,
+) -> tuple[DataFrame, DataFrame]:
+    """``(duplicate_coverage(...), longest_duplicate_span(...))`` of one
+    corpus from ONE suffix-array build: the adjacent-LCP pairs are built
+    and ``localCheckpoint``-ed once (ids, offsets and lcp only — no
+    token arrays), and both statistics read them.  Same arguments and
+    outputs as the two functions it stands in for."""
+    pairs, src = _adjacent_lcp(
+        df, tokens_col, id_col, n_partitions, max_token, fanout
     )
-    per_doc = (
-        iv.select("__doc", covered.alias("__cov"))
-        .groupBy("__doc")
-        .agg(F.sum("__cov").alias("__dup"))
-    )
+    pairs = pairs.localCheckpoint()
     return (
-        src.select(
-            id_col, F.size(tokens_col).cast("long").alias(n_tok_col)
-        )
-        .join(per_doc.withColumnRenamed("__doc", id_col), id_col, "left")
-        .select(
-            id_col,
-            n_tok_col,
-            F.coalesce("__dup", F.lit(0)).cast("long").alias("dup_tokens"),
-            # NULL for a zero-token doc, as SQL's 0.0/0 gives
-            F.when(
-                F.col(n_tok_col) > 0,
-                F.round(
-                    F.coalesce("__dup", F.lit(0)).cast("double") / F.col(n_tok_col),
-                    round_to,
-                ),
-            ).alias("dup_frac"),
-        )
+        _coverage_from_pairs(pairs, src, min_len, tokens_col, id_col, n_tok_col, round_to),
+        _longest_from_pairs(pairs, src, tokens_col, id_col),
     )

@@ -182,12 +182,20 @@ def test_cli_curate_v2(spark, tmp_path):
     assert set(got.columns) >= {"doc_id", "source", "ppl_bucket", "rate"}
 
 
-def test_cli_dedup_exact_end_to_end(spark, tmp_path, capsys):
+def _write_texts(spark, path, texts):
+    spark.createDataFrame(
+        pd.DataFrame({"doc_id": list(texts), "text": list(texts.values())}),
+        schema="doc_id long, text string",
+    ).write.parquet(str(path))
+
+
+def test_cli_dedup_exact_end_to_end(spark, tmp_path, capsys, monkeypatch):
     """dedup-exact subcommand: per-doc ExactSubstr coverage parquet +
     corpus summary; a planted 6-token shared run is found at
-    --min-len 6 and ignored at --min-len 7."""
-    import pandas as pd
+    --min-len 6 and ignored at --min-len 7.  Coverage and the longest
+    duplicate come from ONE suffix-array build."""
     from esa_pfa_spark import cli
+    from esa_pfa_spark.operators import suffix
 
     shared = "alpha beta gamma delta epsilon zeta"
     texts = {
@@ -196,14 +204,20 @@ def test_cli_dedup_exact_end_to_end(spark, tmp_path, capsys):
         2: "seven eight nine ten eleven twelve",
     }
     src = tmp_path / "docs"
-    spark.createDataFrame(
-        pd.DataFrame({"doc_id": list(texts), "text": list(texts.values())}),
-        schema="doc_id long, text string",
-    ).write.parquet(str(src))
+    _write_texts(spark, src, texts)
 
+    builds = []
+    real_suffix_order = suffix.suffix_order
+
+    def counting_suffix_order(*a, **kw):
+        builds.append(1)
+        return real_suffix_order(*a, **kw)
+
+    monkeypatch.setattr(suffix, "suffix_order", counting_suffix_order)
     out = tmp_path / "cov6"
     cli.main(["dedup-exact", "--input", str(src), "--out", str(out),
               "--min-len", "6"])
+    assert len(builds) == 1
     cov = {r.doc_id: r for r in spark.read.parquet(str(out)).collect()}
     assert cov[0].dup_tokens == 6 and cov[1].dup_tokens == 6
     assert cov[2].dup_tokens == 0
@@ -215,3 +229,17 @@ def test_cli_dedup_exact_end_to_end(spark, tmp_path, capsys):
     assert all(
         r.dup_tokens == 0 for r in spark.read.parquet(str(out7)).collect()
     )
+
+
+def test_cli_dedup_exact_single_token_corpus(spark, tmp_path, capsys):
+    """One document of one token: no adjacent suffix pair, so the
+    longest-duplicate frame is empty and the summary reports 0 tokens."""
+    from esa_pfa_spark import cli
+
+    src = tmp_path / "docs"
+    _write_texts(spark, src, {0: "solitary"})
+    out = tmp_path / "cov"
+    cli.main(["dedup-exact", "--input", str(src), "--out", str(out)])
+    printed = capsys.readouterr().out
+    assert "1 docs, 0/1 tokens" in printed
+    assert "longest duplicated substring: 0 tokens" in printed

@@ -7,12 +7,43 @@ import random
 
 import pytest
 
-from esa_pfa_spark.operators.suffix import longest_duplicate_span, suffix_order
+from esa_pfa_spark.operators.suffix import (
+    _adjacent_lcp,
+    duplicate_coverage,
+    exact_substring_audit,
+    longest_duplicate_span,
+    suffix_order,
+)
+
+# a zero-token document between two that share a 3-token run
+EMPTY_DOC_CORPUS = {1: [4, 5, 6, 7], 2: [], 3: [9, 4, 5, 6]}
 
 
 def _df(spark, docs: dict[int, list[int]]):
     rows = [(d, toks) for d, toks in docs.items()]
     return spark.createDataFrame(rows, "doc_id long, tokens array<int>")
+
+
+def _random_docs(seed, n_docs, alphabet, min_len, max_len):
+    rng = random.Random(seed)
+    return {
+        d: [rng.randrange(alphabet) for _ in range(rng.randrange(min_len, max_len))]
+        for d in range(n_docs)
+    }
+
+
+def _motif_docs(seed=29):
+    """Planted duplicates over a small alphabet + random filler."""
+    rng = random.Random(seed)
+    motif = [rng.randrange(50) for _ in range(9)]
+    docs = {}
+    for d in range(12):
+        body = [rng.randrange(50) for _ in range(rng.randrange(5, 30))]
+        if d % 3 == 0:
+            at = rng.randrange(0, max(1, len(body) - 1))
+            body = body[:at] + motif + body[at:]
+        docs[d] = body
+    return docs
 
 
 def _ref_order(docs: dict[int, list[int]]):
@@ -72,11 +103,7 @@ class TestSuffixOrder:
         assert [by_idx[i] for i in range(len(by_idx))] == _ref_order(docs)
 
     def test_permutation_and_sortedness_random(self, spark):
-        rng = random.Random(7)
-        docs = {
-            d: [rng.randrange(4) for _ in range(rng.randrange(1, 30))]
-            for d in range(12)
-        }
+        docs = _random_docs(7, 12, 4, 1, 30)
         got = suffix_order(_df(spark, docs)).collect()
         n = sum(len(t) for t in docs.values())
         idxs = sorted(r["sa_idx"] for r in got)
@@ -121,11 +148,7 @@ class TestLongestDuplicateSpan:
         assert r["span_fp"] == hashlib.md5(b"").hexdigest()
 
     def test_matches_reference_random(self, spark):
-        rng = random.Random(13)
-        docs = {
-            d: [rng.randrange(3) for _ in range(rng.randrange(2, 25))]
-            for d in range(10)
-        }
+        docs = _random_docs(13, 10, 3, 2, 25)
         want_len, want_fp = _ref_longest_dup(docs)
         r = longest_duplicate_span(_df(spark, docs)).collect()[0]
         assert r["dup_len"] == want_len
@@ -134,8 +157,6 @@ class TestLongestDuplicateSpan:
 
 class TestDuplicateCoverage:
     def test_cross_doc_shared_run(self, spark):
-        from esa_pfa_spark.operators.suffix import duplicate_coverage
-
         shared = list(range(100, 118))  # 18 tokens
         docs = {1: [1, 2] + shared + [3], 2: shared + [4, 5, 6]}
         out = {r["doc_id"]: r for r in duplicate_coverage(
@@ -145,8 +166,6 @@ class TestDuplicateCoverage:
         assert out[1]["dup_frac"] == round(18 / 21, 6)
 
     def test_below_threshold_reports_zero(self, spark):
-        from esa_pfa_spark.operators.suffix import duplicate_coverage
-
         shared = list(range(100, 115))  # 15 < min_len
         docs = {1: shared + [1], 2: shared + [2]}
         out = {r["doc_id"]: r["dup_tokens"] for r in duplicate_coverage(
@@ -154,19 +173,7 @@ class TestDuplicateCoverage:
         assert out == {1: 0, 2: 0}
 
     def test_matches_lgram_reference_random(self, spark):
-        from esa_pfa_spark.operators.suffix import duplicate_coverage
-        import random
-
-        rng = random.Random(29)
-        # planted duplicates over a small alphabet + random filler
-        motif = [rng.randrange(50) for _ in range(9)]
-        docs = {}
-        for d in range(12):
-            body = [rng.randrange(50) for _ in range(rng.randrange(5, 30))]
-            if d % 3 == 0:
-                at = rng.randrange(0, max(1, len(body) - 1))
-                body = body[:at] + motif + body[at:]
-            docs[d] = body
+        docs = _motif_docs()
         L = 6
         want = _ref_coverage(docs, L)
         got = {r["doc_id"]: r["dup_tokens"] for r in duplicate_coverage(
@@ -185,9 +192,7 @@ def test_empty_and_single_token_corpora(spark):
 
     # a zero-token document emits no suffix and must not abort the job;
     # its coverage row reports 0 duplicated tokens and a NULL fraction
-    from esa_pfa_spark.operators.suffix import duplicate_coverage
-
-    docs = {1: [4, 5, 6, 7], 2: [], 3: [9, 4, 5, 6]}
+    docs = EMPTY_DOC_CORPUS
     got = suffix_order(_df(spark, docs)).collect()
     by_idx = {r["sa_idx"]: (r["doc_id"], r["off"]) for r in got}
     assert [by_idx[i] for i in range(len(by_idx))] == _ref_order(docs)
@@ -199,3 +204,47 @@ def test_empty_and_single_token_corpora(spark):
     assert {d: r["dup_tokens"] for d, r in cov.items()} == _ref_coverage(docs, 3)
     assert cov[2]["n_tok"] == 0 and cov[2]["dup_frac"] is None
     assert cov[1]["dup_frac"] == 0.75
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize(
+    "docs, L",
+    [
+        (_random_docs(7, 12, 4, 1, 30), 4),
+        (_random_docs(13, 10, 3, 2, 25), 5),
+        (_motif_docs(), 6),
+        (EMPTY_DOC_CORPUS, 3),
+    ],
+    ids=["random7", "random13", "motif29", "empty_doc"],
+)
+def test_exact_substring_audit_matches_references(spark, docs, L):
+    """One shared build gives both statistics: equal to the python
+    references and to the two standalone entry points."""
+    df = _df(spark, docs)
+    cov, longest = exact_substring_audit(df, min_len=L)
+    got_cov = {r["doc_id"]: r["dup_tokens"] for r in cov.collect()}
+    assert got_cov == _ref_coverage(docs, L)
+    assert [(r["dup_len"], r["span_fp"]) for r in longest.collect()] == [
+        _ref_longest_dup(docs)
+    ]
+    assert _rows(cov) == _rows(duplicate_coverage(df, min_len=L))
+    assert _rows(longest) == _rows(longest_duplicate_span(df))
+
+
+def test_exact_substring_audit_empty_corpus(spark):
+    empty = spark.createDataFrame([], "doc_id long, tokens array<int>")
+    cov, longest = exact_substring_audit(empty)
+    assert cov.count() == 0
+    assert longest.count() == 0  # no adjacent pair
+
+
+def test_adjacent_lcp_honours_n_partitions(spark):
+    # the session default (8) must not override the caller's count
+    pairs, _ = _adjacent_lcp(
+        _df(spark, {1: [1, 2, 3, 1, 2], 2: [2, 3, 1]}),
+        "tokens", "doc_id", 3, 2**31 - 1, 8,
+    )
+    assert pairs.rdd.getNumPartitions() == 3
