@@ -1346,17 +1346,14 @@ def q_nonreuse_pairs_synth(spark, sf_dir):
 
 def q_bfill(spark, sf_dir):
     """W4 backward-fill: next purchase value at-or-after each event."""
-    ev = _ld(spark, sf_dir, "events")
-    pv = F.when(F.col("event_type") == "purchase", F.col("value"))
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(0, Window.unboundedFollowing)
+    from esa_pfa_spark.operators.windows import next_non_null
+
+    ev = _ld(spark, sf_dir, "events").withColumn(
+        "__pv", F.when(F.col("event_type") == "purchase", F.col("value"))
     )
-    return ev.select(
-        "event_id", "user_id",
-        _r6(F.first(pv, ignorenulls=True).over(w)).alias("next_purchase_value"),
-    )
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    nxt = F.coalesce(F.col("__pv"), next_non_null("__pv").over(w))
+    return ev.select("event_id", "user_id", _r6(nxt).alias("next_purchase_value"))
 
 
 SQL_BFILL = """

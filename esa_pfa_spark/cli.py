@@ -235,18 +235,24 @@ def cmd_dedup_exact(args) -> None:
     else:
         max_token = args.max_token
     cov, longest = exact_substring_audit(df, min_len=args.min_len, max_token=max_token)
-    cov.write.mode("overwrite").parquet(args.out)
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    s = spark.read.parquet(args.out).agg(
-        F.count(F.lit(1)), F.sum("n_tok"), F.sum("dup_tokens"),
-        F.sum((F.col("dup_frac") > 0).cast("long")),
-    ).first()
+    # the summary is observed on the write itself: no read-back job
+    summary = Observation("dedup_exact_summary")
+    cov.observe(
+        summary,
+        F.count(F.lit(1)).alias("docs"), F.sum("n_tok").alias("n_tok"),
+        F.sum("dup_tokens").alias("dup_tokens"),
+        F.sum((F.col("dup_frac") > 0).cast("long")).alias("affected"),
+    ).write.mode("overwrite").parquet(args.out)
+    s = summary.get
     top = longest.first()
     print(
-        f"{s[0]} docs, {s[2]}/{s[1]} tokens inside >= {args.min_len}-token "
-        f"duplicated substrings ({s[3]} docs affected); longest duplicated "
-        f"substring: {top['dup_len'] if top else 0} tokens"
+        f"{s['docs']} docs, {s['dup_tokens']}/{s['n_tok']} tokens inside >= "
+        f"{args.min_len}-token duplicated substrings ({s['affected']} docs "
+        f"affected); longest duplicated substring: "
+        f"{top['dup_len'] if top else 0} tokens"
     )
     print(f"wrote {args.out}")
 

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from esa_pfa_spark.functions.time import epoch_s, ts_diff_us
+from esa_pfa_spark.operators.windows import next_non_null
 
 _TAG = "__asof_tag"
 _TS = "__asof_ts"
@@ -111,11 +112,10 @@ def asof_join(
         .orderBy(F.col(_TS).asc(), F.col(_TAG).asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    w_fwd = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col(_TS).asc(), F.col(_TAG).desc())
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
+    # forward: the first payload at or after the row, as a linear lead
+    # (a (current row, unbounded following) frame is quadratic on a hot key)
+    w_fwd = Window.partitionBy(*keys).orderBy(F.col(_TS).asc(), F.col(_TAG).desc())
+    fwd_fill = F.coalesce(F.col(_PAY), next_non_null(_PAY).over(w_fwd))
     tol_s = _tolerance_seconds(tolerance)
 
     if direction == "nearest":
@@ -124,13 +124,12 @@ def asof_join(
         # pick (a closer-but-out-of-tolerance side must not mask a valid
         # one); |dt| ties resolve to the backward match.
         back = F.last(_PAY, ignorenulls=True).over(w_back)
-        fwd = F.first(_PAY, ignorenulls=True).over(w_fwd)
         both = unioned.select(
             *keys,
             F.col(_TS),
             F.col(_TAG),
             back.alias("__b"),
-            fwd.alias("__f"),
+            fwd_fill.alias("__f"),
             *[F.col(f"__p_{c}") for c in probe_cols],
         ).filter(F.col(_TAG) == 1)
         both = both.withColumn("__bm", F.col("__b")[_MATCH]).withColumn(
@@ -167,7 +166,7 @@ def asof_join(
         if direction == "backward":
             fill = F.last(_PAY, ignorenulls=True).over(w_back)
         else:
-            fill = F.first(_PAY, ignorenulls=True).over(w_fwd)
+            fill = fwd_fill
 
         filled = unioned.select(
             *keys,

@@ -9,9 +9,11 @@ Two physical forms:
   * ``stx_aggregate`` — native groupBy aggregation (JVM, codegen) with exact
     interpolated percentiles (``F.percentile``, not percentile_approx — the
     parity contract is numpy.allclose, SURVEY.md §4 note 4);
-  * ``token_stats`` — per-row statistics over an ``array<int>`` token column
-    as ONE Arrow-vectorized pandas_udf returning a struct (the reference's
-    per-patch path, FeatureWriter.processPatch, computed per row here).
+  * ``token_stats_arrow`` — per-row statistics over an ``array<int>`` token
+    column as ONE scalar Arrow UDF returning a struct, computed by the
+    vectorized ``segmented_stats`` kernel (the reference's per-patch path,
+    FeatureWriter.processPatch, computed per row here).  ``batch_stats`` is
+    the kernel's numpy front end for callers holding Python lists.
 
 Percentile convention everywhere (engine, oracle, SQL oracles): linear
 interpolation at ``p*(n-1)`` — numpy ``method='linear'``, Spark
@@ -21,11 +23,16 @@ standard deviation (ddof=1) to match Spark/DuckDB ``stddev`` defaults.
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions import ArrowUDFType
 
 STAT_NAMES = ["mean", "stdev", "cvar", "min", "max", "p10", "p50", "p90", "skewness", "count"]
 
@@ -176,73 +183,54 @@ def batch_stats(arrs: list) -> pd.DataFrame:
     return pd.DataFrame(segmented_stats(flat, n), columns=STAT_NAMES)
 
 
-@F.pandas_udf(returnType=_STATS_STRUCT)
-def _token_stats_udf(tokens: pd.Series) -> pd.DataFrame:
-    return batch_stats(tokens.tolist())
+def _token_stats_batch(tokens: pa.Array) -> pa.Array:
+    """One Arrow batch of ``list<int>`` token arrays -> the stats struct.
+    The ListArray's flat value buffer and offsets feed ``segmented_stats``
+    directly: no object arrays, no per-row Python."""
+    lengths = np.asarray(pc.list_value_length(tokens).fill_null(0)).astype(np.int64)
+    # flatten() concatenates exactly the valid segments in row order;
+    # keep the native (int32) dtype — zero-copy from the Arrow value
+    # buffer, and segmented_stats has a faster integer sort path
+    stats = segmented_stats(np.asarray(tokens.flatten()), lengths)
+    null_row = ~np.asarray(tokens.is_valid())
+    fields = [
+        pa.array(stats[name], type=pa.float64(), mask=null_row | np.isnan(stats[name]))
+        for name in STAT_NAMES[:-1]
+    ]
+    fields.append(pa.array(stats["count"].astype(np.int32), type=pa.int32(), mask=null_row))
+    return pa.StructArray.from_arrays(fields, names=STAT_NAMES)
 
 
-def token_stats(df: DataFrame, tokens_col: str = "tokens", prefix: str = "") -> DataFrame:
-    """Append the 10 STX stat columns computed over each row's token array.
-
-    One Arrow batch crosses the JVM/Python boundary per ~10k rows
-    (spark.sql.execution.arrow.maxRecordsPerBatch); the kernel itself is
-    numpy — no per-row Python in the dataframe sense beyond the row loop
-    inside one batch, which is unavoidable for ragged arrays."""
-    s = _token_stats_udf(F.col(tokens_col)).alias("__stx")
-    out = df.withColumn("__stx", s)
-    for name in STAT_NAMES:
-        out = out.withColumn(prefix + name, F.col("__stx")[name])
-    return out.drop("__stx")
+# the UDF type is passed explicitly: arrow_udf's type-hint inference
+# rejects the string annotations of ``from __future__ import annotations``,
+# and passing the type instead raises a style UserWarning, silenced here
+with warnings.catch_warnings():
+    warnings.simplefilter("ignore", UserWarning)
+    _token_stats_udf = F.arrow_udf(_token_stats_batch, _STATS_STRUCT, ArrowUDFType.SCALAR)
 
 
 def token_stats_arrow(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
-    """Zero-copy STX token stats via ``mapInArrow``: the Arrow ListArray's
-    flat value buffer + offsets feed ``segmented_stats`` directly — no
-    object-array materialization, no per-row Python AT ALL.  This is the
-    fast path (the pandas_udf ``token_stats`` spends most of its time
-    converting list<int32> to object arrays of numpy arrays).
+    """Append the 10 STX stat columns computed over each row's token array,
+    after all existing columns.  An empty array gets null stats and count
+    0; a null array gets null stats and a null count.
+
+    One scalar Arrow UDF over the token column alone: only the token
+    arrays cross to Python (one Arrow batch per
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows); every other
+    column stays in the JVM.
 
     Measured design note: a pure-JVM expression variant (``F.aggregate``
     sums + ``F.array_sort`` + ``element_at`` interpolation — zero Python)
-    was prototyped and is ~15x SLOWER (34.4s vs 2.25s on the 2.5M-row
-    bench input at local[32]): Catalyst's higher-order array functions
-    evaluate their lambda per element interpreted, outside whole-stage
-    codegen, while this path is one Arrow hop + vectorized numpy.
-
-    Appends the 10 stat columns after all existing columns; null/empty
-    token rows get null stats and count 0."""
-    import pyarrow as pa
-
-    ti = df.columns.index(tokens_col)
-    out_fields = df.schema.fields + [
-        T.StructField(n, T.DoubleType(), True) for n in STAT_NAMES[:-1]
-    ] + [T.StructField("count", T.IntegerType(), True)]
-    out_schema = T.StructType(out_fields)
-
-    def run(batches):
-        for b in batches:
-            la = b.column(ti)
-            valid = np.asarray(la.is_valid())
-            lens_pa = pa.compute.list_value_length(la)
-            lengths = np.asarray(lens_pa.fill_null(0)).astype(np.int64)
-            # flatten() concatenates exactly the valid segments in row order;
-            # keep the native (int32) dtype — zero-copy from the Arrow value
-            # buffer, and segmented_stats has a faster integer sort path
-            flat = np.asarray(la.flatten())
-            stats = segmented_stats(flat, lengths)
-            cols, names = list(b.columns), list(b.schema.names)
-            empty_or_null = ~valid
-            for name in STAT_NAMES[:-1]:
-                vals = stats[name]
-                mask = empty_or_null | np.isnan(vals)
-                cols.append(pa.array(vals, type=pa.float64(), mask=mask))
-                names.append(name)
-            cnt = stats["count"].astype(np.int32)
-            cols.append(pa.array(cnt, type=pa.int32(), mask=empty_or_null))
-            names.append("count")
-            yield pa.RecordBatch.from_arrays(cols, names)
-
-    return df.mapInArrow(run, schema=out_schema)
+    was prototyped and measured ~15x SLOWER than the earlier whole-row
+    ``mapInArrow`` form of this function (34.4s vs 2.25s on a 2.5M-row
+    input at local[32], on a 32-core host): Catalyst's higher-order
+    array functions evaluate their lambda per element interpreted,
+    outside whole-stage codegen, while this path is one Arrow hop +
+    vectorized numpy."""
+    out = df.withColumn("__stx", _token_stats_udf(F.col(tokens_col)))
+    return out.select(
+        "*", *[F.col("__stx")[name].alias(name) for name in STAT_NAMES]
+    ).drop("__stx")
 
 
 def normalize_bounds(df: DataFrame, cols: list[str]) -> DataFrame:

@@ -41,10 +41,11 @@ recurrence restricted to unresolved groups.
 Both exact statistics — ``duplicate_coverage`` and
 ``longest_duplicate_span`` — read one shared build, ``_adjacent_lcp``:
 the suffix array plus the LCP of every suffix-order-adjacent pair.
-``exact_substring_audit`` builds and checkpoints that frame ONCE and
-derives both from it (the ``dedup-exact`` CLI path); the two standalone
-functions each run the build alone.  Its compare step moves both
-documents' token arrays with every pair, so that exchange is
+The build checkpoints its pairs (no token arrays), so a statistic reads
+them without recomputing the compare; ``exact_substring_audit`` derives
+both statistics from ONE build (the ``dedup-exact`` CLI path), while the
+two standalone functions each run the build alone.  The compare step
+moves both documents' token arrays with every pair, so that exchange is
 O(T x doc_len) bytes, not O(T).
 
 Token values MUST be non-negative (vocabulary ids are): the "suffix
@@ -218,8 +219,9 @@ def _adjacent_lcp(
     session's shuffle partitions) sets both the suffix-array numbering
     and the compare parallelism.
 
-    Returns (pairs_df, src): pairs carry (__da, __oa, __db, __ob,
-    __lcp) — no token arrays; src is the checkpointed (id, tokens)
+    Returns (pairs_df, src), both checkpointed: pairs carry (__da, __oa,
+    __db, __ob, __lcp) — no token arrays — so each statistic reads them
+    without writing the compare exchange again; src is the (id, tokens)
     projection."""
     # one materialization of the (id, tokens) projection feeds the
     # suffix-array build, both per-side token lookups below and the
@@ -268,9 +270,12 @@ def _adjacent_lcp(
     lcp = F.when(
         first_bad == 0, F.least(F.size(suf_a), F.size(suf_b))
     ).otherwise(first_bad - 1)
+    # checkpointed: every statistic reads the pairs more than once (an
+    # aggregate and a join back, or a filter on the lcp), and the compare
+    # exchange carries both documents' token arrays
     return pairs.select(
         "__da", "__oa", "__db", "__ob", lcp.cast("long").alias("__lcp")
-    ), src
+    ).localCheckpoint(), src
 
 
 def _longest_from_pairs(
@@ -427,13 +432,12 @@ def exact_substring_audit(
 ) -> tuple[DataFrame, DataFrame]:
     """``(duplicate_coverage(...), longest_duplicate_span(...))`` of one
     corpus from ONE suffix-array build: the adjacent-LCP pairs are built
-    and ``localCheckpoint``-ed once (ids, offsets and lcp only — no
-    token arrays), and both statistics read them.  Same arguments and
-    outputs as the two functions it stands in for."""
+    and checkpointed once (ids, offsets and lcp only — no token arrays),
+    and both statistics read them.  Same arguments and outputs as the
+    two functions it stands in for."""
     pairs, src = _adjacent_lcp(
         df, tokens_col, id_col, n_partitions, max_token, fanout
     )
-    pairs = pairs.localCheckpoint()
     return (
         _coverage_from_pairs(pairs, src, min_len, tokens_col, id_col, n_tok_col, round_to),
         _longest_from_pairs(pairs, src, tokens_col, id_col),

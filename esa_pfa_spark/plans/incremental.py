@@ -32,10 +32,13 @@ restricted to ``query_ts >= cut + tolerance``):
 
 Scale shape: the state table is one row per entity (billions of rows at
 most — a normal bucketed table), the delta scan partition-prunes on the
-dated lakehouse layout, and the fill is the same one-Exchange union +
-window plan as ``plans.pipeline.feature_table_fused`` with three extra
+dated lakehouse layout, and the fill is a one-Exchange union + window
+plan like ``plans.pipeline.feature_table_fused``, with three extra
 ignorenulls carry-forward fills over the SAME sort — no additional
-exchange, no additional sort.
+exchange, no additional sort.  Its forward lookups are linear
+``lead ... IGNORE NULLS``, as in the fused plan; unlike it, the fill is
+a ``withColumn`` chain, so it plans one Window operator per dependent
+column rather than one per dependency level.
 
 Reference analog: the resumable session state of
 pfa-database/.../classifier/ClassifierModel.java:36-164 (persisted
@@ -49,6 +52,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from esa_pfa_spark.functions.time import ts_diff_us
+from esa_pfa_spark.operators.windows import next_non_null
 from esa_pfa_spark.plans.pipeline import DEFAULT_SESSION_GAP, DEFAULT_TOLERANCE
 
 STATE_COLS = [
@@ -211,9 +215,9 @@ def incremental_fill(
         belong to the previous run).
 
     Plan: tagged union (obs=0, probe=1, state carry-in=2) -> ONE exchange
-    on the entity -> the same in-partition window sorts as the fused
-    plan, with three extra ignorenulls fills that ride the existing sort
-    (state counters forward-filled from the carry-in row).  The carry-in
+    on the entity -> one in-partition sort, as in the fused plan, with
+    three extra ignorenulls fills that ride it (state counters
+    forward-filled from the carry-in row).  The carry-in
     can never be an in-tolerance match (its ts < cut <= probe_ts - tol),
     so its partial payload never surfaces."""
     payload = payload or []
@@ -258,19 +262,10 @@ def incremental_fill(
     )
     u = obs_side.unionByName(probe_side).unionByName(state_side)
 
-    order = [F.col("__ts").asc(), F.col("__tag").asc()]
-    w_prev = Window.partitionBy("__e").orderBy(*order).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    w_next = Window.partitionBy("__e").orderBy(*order).rowsBetween(
-        1, Window.unboundedFollowing
-    )
-    w_cum = Window.partitionBy("__e").orderBy(*order).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_all = Window.partitionBy("__e").orderBy(*order).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
+    w = Window.partitionBy("__e").orderBy(F.col("__ts").asc(), F.col("__tag").asc())
+    w_prev = w.rowsBetween(Window.unboundedPreceding, -1)
+    w_cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w_all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
 
     is_obs = F.col("__tag") == 0
     chain = F.col("__tag") != 1  # obs + carry-in: the timeline the fills walk
@@ -299,10 +294,8 @@ def incremental_fill(
     # first so it can never supply a forward value, and a matched (always
     # loaded) row's next observation is loaded or absent at this horizon —
     # exactly the full plan's lead at the same horizon
-    obs_v = F.when(is_obs, F.col("__v"))
-    u = u.withColumn(
-        leadname, F.when(is_obs, F.first(obs_v, ignorenulls=True).over(w_next))
-    )
+    u = u.withColumn("__obs_v", F.when(is_obs, F.col("__v")))
+    u = u.withColumn(leadname, F.when(is_obs, next_non_null("__obs_v").over(w)))
     gap_col = ts_diff_us("__ts", "__prev_ts")
     brk = F.when(is_obs & gap_col.isNotNull() & (gap_col > gap_us), 1).otherwise(0)
     u = u.withColumn("__brk", brk)
@@ -320,9 +313,8 @@ def incremental_fill(
         ).over(w_cum),
         carried_start,
     )
-    next_brk = F.first(
-        F.when(is_obs & (F.col("__brk") == 1), F.col("__gidx")), ignorenulls=True
-    ).over(w_next)
+    u = u.withColumn("__brk_idx", F.when(is_obs & (F.col("__brk") == 1), F.col("__gidx")))
+    next_brk = next_non_null("__brk_idx").over(w)
     total_obs = F.max("__gidx").over(w_all)
     u = u.withColumn(
         "session_len",

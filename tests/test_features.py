@@ -35,14 +35,20 @@ def test_stats_kernel_empty_and_single():
 
 
 def test_token_stats_matches_kernel(spark):
-    pdf = pd.DataFrame({"id": [1, 2], "tokens": [[1, 2, 3, 4], [10, 20, 60]]})
-    out = FT.token_stats(spark.createDataFrame(pdf), "tokens").orderBy("id").toPandas()
-    for i, toks in enumerate(pdf["tokens"]):
+    """token_stats_arrow == the per-row kernel; an empty array gets null
+    stats with count 0, a null array null stats and a null count."""
+    rows = [(1, [1, 2, 3, 4]), (2, [10, 20, 60]), (3, []), (4, None)]
+    df = spark.createDataFrame(rows, "id int, tokens array<int>")
+    out = FT.token_stats_arrow(df, "tokens").orderBy("id").toPandas()
+    assert list(out.columns) == ["id", "tokens", *FT.STAT_NAMES]
+    for i, (_, toks) in enumerate(rows[:2]):
         golden = FT.stats_kernel(np.array(toks, dtype=np.float64))
         got = tuple(out.iloc[i][FT.STAT_NAMES])
         np.testing.assert_allclose(
             np.array(got, dtype=np.float64), np.array(golden, dtype=np.float64), rtol=1e-12
         )
+    assert out.iloc[2][FT.STAT_NAMES[:-1]].isna().all() and out.iloc[2]["count"] == 0
+    assert out.iloc[3][FT.STAT_NAMES].isna().all()
 
 
 def test_stx_aggregate_matches_kernel(spark):

@@ -10,6 +10,7 @@ import pandas as pd
 from esa_pfa_spark import synth
 from esa_pfa_spark.oracle.pandas_oracle import oracle_feature_table
 from esa_pfa_spark.plans.pipeline import FEATURE_PAYLOAD, feature_table_fused
+from esa_pfa_spark.schema import OBSERVATIONS_SCHEMA, QUERIES_SCHEMA
 
 TOL = dt.timedelta(days=7)
 FLOAT_COLS = [
@@ -19,19 +20,21 @@ FLOAT_COLS = [
 INT_COLS = ["n_tok", "count", "session_id", "session_len"]
 
 
-def _assert_oracle_parity(spark, tol, seed, n_entities, mean_obs, mean_tok):
-    """feature_table_fused == the pandas oracle, row for row; returns the
-    matched-row mask so callers can check how much actually matched."""
+def _synth_pdfs(seed, n_entities, mean_obs, mean_tok, hot_factor=1):
     obs_pdf = synth.gen_observations_pdf(
-        seed=seed, n_entities=n_entities, mean_obs=mean_obs, mean_tok=mean_tok
+        seed=seed, n_entities=n_entities, mean_obs=mean_obs, mean_tok=mean_tok,
+        hot_factor=hot_factor,
     )
     probes_pdf = synth.gen_queries_pdf(seed=seed, n_entities=n_entities, mean_obs=mean_obs)
+    return obs_pdf, probes_pdf
 
+
+def _assert_oracle_parity(spark, tol, obs_pdf, probes_pdf):
+    """feature_table_fused == the pandas oracle, row for row; returns the
+    matched-row mask so callers can check how much actually matched."""
     got = feature_table_fused(
-        synth.observations_df(
-            spark, seed=seed, n_entities=n_entities, mean_obs=mean_obs, mean_tok=mean_tok
-        ),
-        synth.queries_df(spark, seed=seed, n_entities=n_entities, mean_obs=mean_obs),
+        spark.createDataFrame(obs_pdf, schema=OBSERVATIONS_SCHEMA),
+        spark.createDataFrame(probes_pdf, schema=QUERIES_SCHEMA),
         tolerance=tol,
     ).toPandas()
     want = oracle_feature_table(obs_pdf, probes_pdf, tol, FEATURE_PAYLOAD)
@@ -68,7 +71,9 @@ def _assert_oracle_parity(spark, tol, seed, n_entities, mean_obs, mean_tok):
 
 
 def test_flagship_parity(spark):
-    m = _assert_oracle_parity(spark, TOL, seed=42, n_entities=12, mean_obs=25, mean_tok=24)
+    m = _assert_oracle_parity(
+        spark, TOL, *_synth_pdfs(seed=42, n_entities=12, mean_obs=25, mean_tok=24)
+    )
     assert m.sum() > len(m) * 0.3  # a meaningful fraction actually matches
 
 
@@ -76,9 +81,33 @@ def test_flagship_parity_short_tolerance(spark):
     """An 18h tolerance leaves a real fraction of probes unmatched: their
     features and tokens must be null, as in the oracle."""
     m = _assert_oracle_parity(
-        spark, dt.timedelta(hours=18), seed=21, n_entities=12, mean_obs=22, mean_tok=10
+        spark, dt.timedelta(hours=18),
+        *_synth_pdfs(seed=21, n_entities=12, mean_obs=22, mean_tok=10),
     )
     assert m.any() and not m.all()
+
+
+def test_flagship_parity_hot_entity(spark):
+    """One entity with thousands of observations (synth ``hot_factor``):
+    its lead, session and as-of values span the whole long partition.
+    Extra probes sit along that entity's full timeline — on and just
+    after observations, and past its last one — so the last session's
+    length (the entity's observation count) is read too."""
+    obs_pdf, probes_pdf = _synth_pdfs(
+        seed=7, n_entities=6, mean_obs=10, mean_tok=8, hot_factor=200
+    )
+    hot_ts = obs_pdf.loc[obs_pdf["entity_id"] == "e00000", "ts"].sort_values()
+    assert len(hot_ts) > 2000
+    picks = hot_ts.iloc[::97]
+    extra = pd.concat([
+        picks, picks + pd.Timedelta(hours=5), hot_ts.iloc[[-1]] + pd.Timedelta(days=1),
+    ])
+    probes_pdf = pd.concat(
+        [probes_pdf, pd.DataFrame({"entity_id": "e00000", "query_ts": extra.to_numpy()})],
+        ignore_index=True,
+    )
+    m = _assert_oracle_parity(spark, TOL, obs_pdf, probes_pdf)
+    assert m.sum() > len(picks)
 
 
 def test_flagship_no_leakage_at_scale(spark):

@@ -12,7 +12,8 @@ scale-up:
   * top-k compiles to TakeOrderedAndProject (no global sort);
   * the fused flagship pipeline runs on exactly ONE exchange — every
     window spec and the as-of fill reuse the same hash partitioning
-    (the PatchCS grid-alignment analog, SURVEY.md §4);
+    (the PatchCS grid-alignment analog, SURVEY.md §4) — in two Window
+    passes over one sort, with no per-row-recomputed following frame;
   * the as-of union+window plan also needs exactly ONE exchange.
 
 A plan regression that re-introduces a shuffle or loses a pushdown fails
@@ -44,6 +45,17 @@ def n_exchanges(plan: str) -> int:
     simple mode (``Exchange hashpartitioning(...)``) and formatted mode
     (``Exchange (5)`` nodes; ``BroadcastExchange`` must not count)."""
     return len(re.findall(r"(?<![A-Za-z])Exchange (?:\(\d+\)|hashpartitioning|rangepartitioning)", plan))
+
+
+def assert_no_following_frame(plan: str) -> None:
+    """No row frame reaching to the partition's end except the whole
+    partition: a frame that starts at the current row or later and ends
+    at ``unbounded following`` is recomputed per row (quadratic on a hot
+    key); ``lead(..., 1) IGNORE NULLS`` is the linear form."""
+    starts = re.findall(
+        r"specifiedwindowframe\(RowFrame, ([^,]+), unboundedfollowing\$\(\)\)", plan
+    )
+    assert set(starts) <= {"unboundedpreceding$()"}, plan
 
 
 def test_tpch_q1_pushdown_and_partial_agg(spark):
@@ -98,10 +110,42 @@ def test_fused_pipeline_single_exchange(spark):
 
     obs = synth.observations_df(spark, seed=42, n_entities=10, mean_obs=5, mean_tok=8)
     probes = synth.queries_df(spark, seed=42, n_entities=10, mean_obs=5)
-    plan = plan_of(feature_table_fused(obs, probes))
+    plan = plan_of(feature_table_fused(obs, probes), mode="simple")
     assert n_exchanges(plan) == 1, (
         f"fused flagship must be a single-shuffle plan, got {n_exchanges(plan)}:\n{plan}"
     )
+    # one Window operator per dependency level, over the one sort; the
+    # stats UDF sees the token column only (no whole-row MapInArrow)
+    assert len(re.findall(r"(?<![A-Za-z])Window \[", plan)) == 2, plan
+    assert plan.count("Sort [") == 1, plan
+    assert "MapInArrow" not in plan and plan.count("ArrowEvalPython") == 1, plan
+    assert_no_following_frame(plan)
+
+
+def test_fills_have_no_following_frame(spark):
+    """The incremental fill and the forward/nearest as-of fills look
+    forward with a linear lead, not a (k, unbounded following) frame."""
+    import datetime as dtm
+
+    from pyspark.sql import functions as F
+
+    from esa_pfa_spark import synth
+    from esa_pfa_spark.operators.asof import asof_join
+    from esa_pfa_spark.operators.features import token_stats_arrow
+    from esa_pfa_spark.plans.incremental import entity_state, incremental_fill
+
+    obs = token_stats_arrow(
+        synth.observations_df(spark, seed=3, n_entities=6, mean_obs=5, mean_tok=8)
+    )
+    probes = synth.queries_df(spark, seed=3, n_entities=6, mean_obs=5)
+    cut = dtm.datetime(2024, 2, 1)
+    state = entity_state(obs, cut)
+    inc = incremental_fill(obs.filter(F.col("ts") >= F.lit(cut)), probes, state)
+    assert_no_following_frame(plan_of(inc, mode="simple"))
+    for direction in ("forward", "nearest"):
+        j = asof_join(probes, obs.select("entity_id", "ts", "mean"),
+                      direction=direction, tolerance=dtm.timedelta(days=3))
+        assert_no_following_frame(plan_of(j, mode="simple"))
 
 
 def test_enrichment_windows_share_exchange(spark):
