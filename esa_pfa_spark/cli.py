@@ -103,12 +103,10 @@ def cmd_run_incremental(args) -> None:
 
     from esa_pfa_spark.operators.features import token_stats_arrow
     from esa_pfa_spark.plans.incremental import (
-        STAT_PAYLOAD,
+        feature_table_incremental,
         flagship_entity_state,
-        incremental_fill,
         roll_state,
     )
-    from esa_pfa_spark.plans.pipeline import FEATURE_PAYLOAD
     from esa_pfa_spark.session import get_spark
 
     spark = get_spark(app_name="esa_pfa_run_incremental")
@@ -122,15 +120,11 @@ def cmd_run_incremental(args) -> None:
     else:
         raise SystemExit("need --state, or --bootstrap-from with --cut")
 
-    enriched = token_stats_arrow(delta, "tokens")
-    out = incremental_fill(
-        enriched, probes, state, value_col="mean", payload=STAT_PAYLOAD
-    ).select("entity_id", "query_ts", "matched_ts", *FEATURE_PAYLOAD)
-    out.write.mode("overwrite").parquet(args.out)
+    feature_table_incremental(delta, probes, state).write.mode("overwrite").parquet(args.out)
     print(f"wrote {args.out}")
 
     if args.state_out:
-        window = enriched.select("entity_id", "ts", "mean")
+        window = token_stats_arrow(delta, "tokens").select("entity_id", "ts", "mean")
         if args.next_cut:
             window = window.filter(
                 F.col("ts") < F.lit(dt.datetime.fromisoformat(args.next_cut))

@@ -6,6 +6,7 @@ as a fresh ``entity_state`` bootstrap would."""
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +20,7 @@ from esa_pfa_spark.plans.incremental import (
     roll_state,
 )
 from esa_pfa_spark.plans.pipeline import feature_table_fused
+from tests.test_plans import assert_no_following_frame, plan_of
 
 TOL = dt.timedelta(days=7)
 
@@ -42,6 +44,15 @@ def _canon(df):
 
 def T(s: str) -> dt.datetime:
     return dt.datetime.fromisoformat(s)
+
+
+def _flagship_obs(spark, rows):
+    """Observations from (entity, ts, doc_id, tokens) rows."""
+    return spark.createDataFrame(
+        [(e, 0, 0, ts, doc, toks, len(toks), "synth") for e, ts, doc, toks in rows],
+        "entity_id string, bucket_x int, bucket_y int, ts timestamp, "
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
 
 
 @pytest.fixture(scope="module")
@@ -68,11 +79,7 @@ def handmade(spark):
         ("d", T("2024-02-01T12:00:00"), "d1", [17, 18]),        # break (20d)
         ("d", T("2024-02-15T00:00:00"), "d2", [19]),            # break (13.5d)
     ]
-    obs = spark.createDataFrame(
-        [(e, 0, 0, ts, doc, toks, len(toks), "synth") for e, ts, doc, toks in rows],
-        "entity_id string, bucket_x int, bucket_y int, ts timestamp, "
-        "doc_id string, tokens array<int>, n_tok int, source string",
-    )
+    obs = _flagship_obs(spark, rows)
     probes = spark.createDataFrame(
         [
             ("a", T("2024-02-08T00:00:00")),   # matches a3
@@ -203,6 +210,65 @@ def test_incremental_fill_single_exchange(spark, handmade):
         "Exchange rangepartitioning"
     )
     assert n_ex == 1, plan
+    # the flagship's shape: one Window operator per dependency level over
+    # the one sort, and no frame reaching forward past the current row
+    plan = plan_of(fill, mode="simple")
+    assert len(re.findall(r"(?<![A-Za-z])Window \[", plan)) == 2, plan
+    assert plan.count("Sort [") == 1, plan
+    assert_no_following_frame(plan)
+    # the flagship table on the same state: the token stats cross to
+    # Python once, on the observation side only
+    flagship = feature_table_incremental(
+        obs.filter(F.col("ts") >= F.lit(cut)), probes, state, tolerance=TOL
+    )
+    assert plan_of(flagship, mode="simple").count("ArrowEvalPython") == 1
+
+
+def test_incremental_equals_full_after_empty_document(spark):
+    """The cut falls right after an empty document, so the carry-in
+    ``last_value`` is NULL: the first loaded observation's lag is that
+    NULL, as in the full build, not an older non-null mean."""
+    obs = _flagship_obs(spark, [
+        ("a", T("2024-01-01T00:00:00"), "a0", [1, 2, 3]),
+        ("a", T("2024-01-02T00:00:00"), "a1", []),
+        ("a", T("2024-01-03T12:00:00"), "a2", [7, 8, 9]),
+        ("a", T("2024-01-04T00:00:00"), "a3", [4, 5]),
+    ])
+    probes = spark.createDataFrame(
+        [("a", T(s)) for s in ("2024-01-02T01:00:00", "2024-01-03T07:00:00",
+                               "2024-01-03T13:00:00", "2024-01-04T01:00:00")],
+        "entity_id string, query_ts timestamp",
+    )
+    cut, tol = T("2024-01-02T06:00:00"), dt.timedelta(days=1)
+    state = flagship_entity_state(obs, cut)
+    assert state.collect()[0]["last_value"] is None
+    window = F.col("query_ts") >= F.lit(cut + tol)
+    incr = feature_table_incremental(
+        obs.filter(F.col("ts") >= F.lit(cut)), probes.filter(window), state, tolerance=tol
+    )
+    full = feature_table_fused(obs, probes, tolerance=tol).filter(window)
+    assert _canon(incr) == _canon(full)
+    got = {r["query_ts"]: r for r in incr.collect()}
+    assert got[T("2024-01-03T13:00:00")]["lag_1_mean"] is None
+    assert got[T("2024-01-04T01:00:00")]["lag_1_mean"] == 8.0
+
+
+def test_flagship_entity_state_tied_boundary(spark):
+    """Two observations tie at the last ts before the cut: the state has
+    ONE row for the entity, counting both observations, with the
+    greatest doc_id's mean as the carry-in value."""
+    obs = _flagship_obs(spark, [
+        ("a", T("2024-01-01T00:00:00"), "a0", [1]),
+        ("a", T("2024-01-05T00:00:00"), "a1", [2, 4]),
+        ("a", T("2024-01-05T00:00:00"), "a2", [10, 20]),
+        ("b", T("2024-01-03T00:00:00"), "b0", [3]),
+    ])
+    state = flagship_entity_state(obs, T("2024-02-01")).collect()
+    assert sorted(r["entity_id"] for r in state) == ["a", "b"]
+    rows = {r["entity_id"]: r for r in state}
+    assert rows["a"]["obs_before"] == 3
+    assert rows["a"]["last_value"] == 15.0
+    assert rows["a"]["last_ts"] == T("2024-01-05T00:00:00")
 
 
 def test_delta_scan_prunes_dated_partitions(spark, handmade, tmp_path):

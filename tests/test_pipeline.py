@@ -117,3 +117,19 @@ def test_flagship_no_leakage_at_scale(spark):
     m = out.dropna(subset=["matched_ts"])
     assert (m["matched_ts"] <= m["query_ts"]).all()
     assert ((m["query_ts"] - m["matched_ts"]).dt.total_seconds() <= TOL.total_seconds()).all()
+
+
+def test_flagship_parity_zero_token_observation(spark):
+    """An empty document between two others: its mean is NULL, so the
+    neighbours' lead/lag mean must be NULL too (the oracle shifts the
+    observation stream), not the next non-null mean beyond it."""
+    days = pd.to_datetime(["2024-01-01", "2024-01-02", "2024-01-03"])
+    toks = [[1, 2, 3], [], [7, 8, 9]]
+    obs_pdf = pd.DataFrame({
+        "entity_id": "e0", "bucket_x": 0, "bucket_y": 0, "ts": days,
+        "doc_id": ["d0", "d1", "d2"], "tokens": toks, "n_tok": [len(t) for t in toks],
+        "source": "synth",
+    })
+    probes_pdf = pd.DataFrame({"entity_id": "e0", "query_ts": days + pd.Timedelta(hours=1)})
+    m = _assert_oracle_parity(spark, TOL, obs_pdf, probes_pdf)
+    assert m.all()
