@@ -103,6 +103,7 @@ def cmd_run_incremental(args) -> None:
 
     from esa_pfa_spark.operators.features import token_stats_arrow
     from esa_pfa_spark.plans.incremental import (
+        STATE_COLS,
         feature_table_incremental,
         flagship_entity_state,
         roll_state,
@@ -124,12 +125,29 @@ def cmd_run_incremental(args) -> None:
     print(f"wrote {args.out}")
 
     if args.state_out:
-        window = token_stats_arrow(delta, "tokens").select("entity_id", "ts", "mean")
+        window = delta
         if args.next_cut:
             window = window.filter(
                 F.col("ts") < F.lit(dt.datetime.fromisoformat(args.next_cut))
             )
-        roll_state(state, window).write.mode("overwrite").parquet(args.state_out)
+        # the counters need only ts; the carried value is the mean of each
+        # entity's boundary row, so the stats kernel sees one row per
+        # entity (as in flagship_entity_state), not the window again
+        boundary = window.groupBy("entity_id").agg(
+            F.max_by("tokens", F.struct("ts", "doc_id")).alias("tokens")
+        )
+        means = token_stats_arrow(boundary, "tokens").select(
+            "entity_id", F.col("mean").alias("__m"), F.lit(True).alias("__seen")
+        )
+        ts_only = window.select("entity_id", "ts", F.lit(None).cast("double").alias("mean"))
+        roll_state(state, ts_only).join(means, "entity_id", "left").select(
+            "entity_id",
+            "last_ts",
+            F.when(F.col("__seen"), F.col("__m")).otherwise(F.col("last_value")).alias(
+                "last_value"
+            ),
+            *STATE_COLS[2:],
+        ).write.mode("overwrite").parquet(args.state_out)
         print(f"advanced state -> {args.state_out}")
 
 

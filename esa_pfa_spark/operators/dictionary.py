@@ -12,8 +12,10 @@ numbers the distinct values with ``global_cumsum`` (plan shape in its
 docstring).  For DISTINCT inputs row-position == dense_rank, so the
 result is bit-identical to the SQL oracle's
 ``dense_rank() OVER (ORDER BY col) - 1``.  The same primitive places
-documents in a packed token stream (``tokens.pack_offsets``) and gives
-the initial rank-by-count of the suffix array (``suffix.suffix_order``).
+documents in a packed token stream (``tokens.pack_offsets``, a weighted
+sum) and numbers the suffix array's positions in packed-key order
+(``suffix.suffix_order``, a row index).  The row index is one JVM
+projection; only the weighted sum crosses to Python.
 See ``dataset.deterministic_shuffle`` for the content-defined-bucket
 variant used when the key distribution is known-uniform.
 """
@@ -45,8 +47,16 @@ def global_cumsum(
          (partition p holds a contiguous slice of the global order);
       2. one tiny action collects per-partition weight sums -> cumulative
          start offsets (n_partitions scalars to the driver, not the data);
-      3. a zero-copy ``mapInArrow`` running sum per partition, shifted by
-         the offset of ``TaskContext.partitionId()``.
+      3. the numbering pass over the same partitions, from partition p's
+         offset:
+         * ``weight=None``: one JVM projection, ``offsets[p] +
+           (monotonically_increasing_id() - (p << 33))`` — the id is
+           (p << 33) + the row's index in the partition, so no running
+           sum is needed and no row leaves the JVM;
+         * weighted: a zero-copy ``mapInArrow`` running sum per
+           partition.  No JVM expression carries a sum from row to row
+           without a window, and a window keyed on the partition id
+           would plan a second exchange.
 
     ``weight`` must be non-null and integral.  Ties in ``order_cols`` are
     numbered in an unspecified order, so callers order by a unique key
@@ -84,28 +94,36 @@ def global_cumsum(
         totals[r["__pid"]] = r["__s"]
     offsets = np.concatenate([[0], np.cumsum(totals)[:-1]])
 
-    names = ranged.columns + [out_col]
-    out_schema = T.StructType(
-        ranged.schema.fields + [T.StructField(out_col, T.LongType(), False)]
-    )
-    wi = None if weight is None else ranged.columns.index(weight)
+    if weight is None:
+        # the row index needs no running sum: monotonically_increasing_id
+        # is (partition id << 33) + the row's index within its partition,
+        # counted in the sorted order the cache replays.  element_at never
+        # misses (ANSI raises if it did); the coalesce only declares the
+        # column non-null
+        pid = F.spark_partition_id()
+        start = F.element_at(F.lit(offsets.tolist()).cast("array<bigint>"), pid + 1)
+        local = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
+        out = ranged.select("*", F.coalesce(start + local, F.lit(0).cast("long")).alias(out_col))
+    else:
+        names = ranged.columns + [out_col]
+        out_schema = T.StructType(
+            ranged.schema.fields + [T.StructField(out_col, T.LongType(), False)]
+        )
+        wi = ranged.columns.index(weight)
 
-    def number(batches):
-        import pyarrow as pa
+        def number(batches):
+            import pyarrow as pa
 
-        running = int(offsets[TaskContext.get().partitionId()])
-        for b in batches:
-            if wi is None:
-                w = np.ones(b.num_rows, dtype=np.int64)
-            else:
+            running = int(offsets[TaskContext.get().partitionId()])
+            for b in batches:
                 w = b.column(wi).to_numpy(zero_copy_only=False).astype(np.int64)
-            starts = running + np.cumsum(w) - w
-            running += int(w.sum())
-            yield pa.RecordBatch.from_arrays(
-                b.columns + [pa.array(starts, type=pa.int64())], names
-            )
+                starts = running + np.cumsum(w) - w
+                running += int(w.sum())
+                yield pa.RecordBatch.from_arrays(
+                    b.columns + [pa.array(starts, type=pa.int64())], names
+                )
 
-    out = ranged.mapInArrow(number, schema=out_schema)
+        out = ranged.mapInArrow(number, schema=out_schema)
     out._pinned_cache = ranged  # release with release_pin(out)
     return out
 

@@ -17,8 +17,10 @@ scale devices on top of the textbook recurrence:
 
   * **Rank-by-count semantics** (rank = number of strictly-smaller
     suffixes, ties share a rank): the initial ranking is ONE global
-    pass (groupBy key -> the exclusive running count of
-    ``dictionary.global_cumsum`` — no global window); every
+    pass — ``dictionary.global_cumsum`` numbers the positions in packed-
+    key order in the JVM, and a key's rank is its least row index, a
+    window over the key that reuses the numbering's range partitioning
+    (no global window, no count aggregate, no join back); every
     subsequent round updates ranks with a WINDOW PARTITIONED BY THE TIE
     GROUP (never partition-less), because a tied group's members can
     only move within the group's own rank span.
@@ -34,15 +36,21 @@ scale devices on top of the textbook recurrence:
 Suffixes are document-local (a generalized suffix array: they end at
 their document's end — the Lee et al. corpus shape, no separator
 tokens needed).  Round state is ``localCheckpoint``-ed (the pagerank
-lineage-cut discipline).  Distributed doubling at cluster scale is
-textbook (Flick & Aluru 2015); the refinement-set form is the same
-recurrence restricted to unresolved groups.
+lineage-cut discipline), and the loop's driver-side inputs — the longest
+suffix and "is anything still tied?" — are ``Observation``s on those
+checkpoint jobs, not actions of their own; so is the max LCP of the
+pairs.  Only maxima and ``> 0`` tests read them, because a retried task
+may count its rows twice.  No build step crosses to Python.
+Distributed doubling at cluster scale is textbook (Flick & Aluru 2015);
+the refinement-set form is the same recurrence restricted to unresolved
+groups.
 
 Both exact statistics — ``duplicate_coverage`` and
 ``longest_duplicate_span`` — read one shared build, ``_adjacent_lcp``:
 the suffix array plus the LCP of every suffix-order-adjacent pair.
 The build checkpoints its pairs (no token arrays), so a statistic reads
-them without recomputing the compare; ``exact_substring_audit`` derives
+them without recomputing the compare, and the longest span filters them
+at the observed max LCP; ``exact_substring_audit`` derives
 both statistics from ONE build (the ``dedup-exact`` CLI path), while the
 two standalone functions each run the build alone.  The compare step
 moves both documents' token arrays with every pair, so that exchange is
@@ -58,10 +66,19 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from esa_pfa_spark.operators.dictionary import global_cumsum, release_pin
+
+
+def _checkpoint_observed(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
+    """``df.localCheckpoint()`` and the ``aggs`` observed on that same
+    job: no side action.  A retried task may count its rows twice, so
+    callers read only maxima and ``> 0`` tests off them."""
+    seen = Observation()
+    out = df.observe(seen, *[a.alias(k) for k, a in aggs.items()]).localCheckpoint()
+    return out, seen.get
 
 
 def suffix_order(
@@ -86,7 +103,9 @@ def suffix_order(
     costs the same two exchanges as a binary one), giving
     ceil(log_fanout(max_len / k0)) rounds; only still-tied positions
     re-rank (module docstring).  Returns (id_col, off, sa_idx); ``off``
-    is 0-based."""
+    is 0-based.  The frame is lazy over the checkpointed round state:
+    building it runs only the numbering's partition sums and one
+    checkpoint per ranking pass (with their exchanges' jobs)."""
     spark = df.sparkSession
     if n_partitions is None:
         n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -121,20 +140,27 @@ def suffix_order(
         df.filter(F.size(toks) > 0)
         .select(F.col(id_col).alias("__d"), guarded.alias("__t1"))
         .select("__d", F.posexplode(packed).alias("off", "__key"))
-        .localCheckpoint()  # consumed twice (counts + rank join): compute
-        # the tokenize/pack/explode lineage once, not per consumer
     )
 
-    counts = pos.groupBy("__key").agg(F.count(F.lit(1)).alias("__c"))
-    mapping = global_cumsum(counts, ["__key"], "__r", weight="__c", n_partitions=n_partitions)
-    ranks = (
-        pos.join(mapping, "__key")
-        .select("__d", "off", "__r", (F.col("__c") > 1).alias("__tied"))
-        .localCheckpoint()
+    # rank-by-count straight off the positions: numbered in key order
+    # (ties in any order), a key's least row index is the number of
+    # strictly smaller keys.  The range partitioning on __key already
+    # clusters each key, so the key window plans no second exchange
+    numbered = global_cumsum(pos, ["__key"], "__i", n_partitions=n_partitions)
+    w_key = Window.partitionBy("__key")
+    n_tied = F.sum(F.col("__tied").cast("long"))
+    ranks, seen = _checkpoint_observed(
+        numbered.select(
+            "__d", "off",
+            F.min("__i").over(w_key).alias("__r"),
+            (F.count(F.lit(1)).over(w_key) > 1).alias("__tied"),
+        ),
+        max_len=F.max("off") + 1, tied=n_tied,
     )
-    release_pin(mapping)
+    release_pin(numbered)
 
-    max_len = df.select(F.max(F.size(toks))).first()[0] or 0
+    max_len = seen["max_len"] or 0
+    tied = seen["tied"]
     span = k0
     # resolved rows never change rank again: accumulate them as a lazy
     # union of checkpointed pieces and checkpoint ONLY the shrinking
@@ -145,7 +171,7 @@ def suffix_order(
     w_doc = Window.partitionBy("__d").orderBy("off")
     r2s = [f"__r{i}" for i in range(1, fanout)]
     w_grp = Window.partitionBy("__r").orderBy(*r2s)
-    while span < max_len and not active.isEmpty():
+    while span < max_len and tied:
         # the neighbor ranks at off + i*span are DOC-LOCAL (suffixes
         # never cross documents) and offsets are dense, so lead(i*span)
         # over the doc partition replaces self-equi-joins — and ALL
@@ -168,17 +194,17 @@ def suffix_order(
         )
         # both windows below share one exchange: HashPartitioning(__r)
         # satisfies the (__r, __r1..) clustering of the count window
-        upd = (
-            withr2.filter("__tied")
-            .select(
+        upd, seen = _checkpoint_observed(  # lineage cut per round
+            withr2.filter("__tied").select(
                 "__d", "off",
                 (F.col("__r") + F.rank().over(w_grp) - 1).alias("__r"),
                 (F.count(F.lit(1)).over(
                     Window.partitionBy("__r", *r2s)
                 ) > 1).alias("__tied"),
-            )
-            .localCheckpoint()  # materializes; lineage cut per round
+            ),
+            tied=n_tied,
         )
+        tied = seen["tied"]
         resolved = resolved.unionByName(upd.filter(~F.col("__tied")).drop("__tied"))
         active = upd.filter("__tied").drop("__tied")
         span *= fanout
@@ -219,10 +245,12 @@ def _adjacent_lcp(
     session's shuffle partitions) sets both the suffix-array numbering
     and the compare parallelism.
 
-    Returns (pairs_df, src), both checkpointed: pairs carry (__da, __oa,
-    __db, __ob, __lcp) — no token arrays — so each statistic reads them
-    without writing the compare exchange again; src is the (id, tokens)
-    projection."""
+    Returns (pairs_df, src, max_lcp).  pairs_df and src are
+    checkpointed: pairs carry (__da, __oa, __db, __ob, __lcp) — no token
+    arrays — so each statistic reads them without writing the compare
+    exchange again; src is the (id, tokens) projection.  max_lcp is the
+    largest ``__lcp``, observed on the pairs' checkpoint job (None when
+    there is no pair)."""
     # one materialization of the (id, tokens) projection feeds the
     # suffix-array build, both per-side token lookups below and the
     # statistics' joins back — the upstream lineage (scan + tokenizer)
@@ -270,31 +298,34 @@ def _adjacent_lcp(
     lcp = F.when(
         first_bad == 0, F.least(F.size(suf_a), F.size(suf_b))
     ).otherwise(first_bad - 1)
-    # checkpointed: every statistic reads the pairs more than once (an
-    # aggregate and a join back, or a filter on the lcp), and the compare
+    # checkpointed: the statistics read the pairs more than once (a
+    # filter at the max and the coverage filter), and the compare
     # exchange carries both documents' token arrays
-    return pairs.select(
-        "__da", "__oa", "__db", "__ob", lcp.cast("long").alias("__lcp")
-    ).localCheckpoint(), src
+    pairs, seen = _checkpoint_observed(
+        pairs.select("__da", "__oa", "__db", "__ob", lcp.cast("long").alias("__lcp")),
+        max_lcp=F.max("__lcp"),
+    )
+    return pairs, src, seen["max_lcp"]
 
 
 def _longest_from_pairs(
-    pairs: DataFrame, src: DataFrame, tokens_col: str, id_col: str
+    pairs: DataFrame, src: DataFrame, max_lcp, tokens_col: str, id_col: str
 ) -> DataFrame:
-    """``longest_duplicate_span`` of the adjacent-LCP ``pairs``: the
-    max ``__lcp``, and the least md5 over the spans at that max.  Only
-    the rows at the max are joined back to ``src`` for their tokens."""
-    mx = pairs.agg(F.max("__lcp").alias("__m"))
-    top = pairs.join(F.broadcast(mx), F.col("__lcp") == F.col("__m")).select(
-        F.col("__da").alias(id_col), F.col("__oa").alias("__o"), "__m"
+    """``longest_duplicate_span`` of the adjacent-LCP ``pairs`` whose
+    max ``__lcp`` is ``max_lcp`` (None when there is no pair): the least
+    md5 over the spans at that max.  Only the rows at the max are joined
+    back to ``src`` for their tokens."""
+    m = F.lit(max_lcp).cast("long")
+    top = pairs.filter(F.col("__lcp") == m).select(
+        F.col("__da").alias(id_col), F.col("__oa").alias("__o")
     )
-    span = F.slice(F.col(tokens_col), F.col("__o") + 1, F.col("__m"))
+    span = F.slice(F.col(tokens_col), F.col("__o") + 1, m)
     fp = F.md5(F.array_join(F.transform(span, lambda x: x.cast("string")), ","))
     # every row carries the same dup_len, so the least fingerprint is a
     # top-1: a per-partition take, with no exchange
     return (
         top.join(src, id_col)
-        .select(F.col("__m").alias("dup_len"), fp.alias("span_fp"))
+        .select(m.alias("dup_len"), fp.alias("span_fp"))
         .orderBy("span_fp")
         .limit(1)
     )
@@ -370,10 +401,10 @@ def longest_duplicate_span(
     examined (``_adjacent_lcp``).  A corpus with no repeated token at
     all yields dup_len = 0 with the empty-span fingerprint (md5 of "");
     fewer than two suffixes -> no adjacent pair -> empty result."""
-    pairs, src = _adjacent_lcp(
+    pairs, src, max_lcp = _adjacent_lcp(
         df, tokens_col, id_col, n_partitions, max_token, fanout
     )
-    return _longest_from_pairs(pairs, src, tokens_col, id_col)
+    return _longest_from_pairs(pairs, src, max_lcp, tokens_col, id_col)
 
 
 def duplicate_coverage(
@@ -411,7 +442,7 @@ def duplicate_coverage(
     one row per document joined back so dup-free docs report 0.
     Returns (id_col, n_tok, dup_tokens, dup_frac); ``dup_frac`` is NULL
     for a zero-token document."""
-    pairs, src = _adjacent_lcp(
+    pairs, src, _ = _adjacent_lcp(
         df, tokens_col, id_col, n_partitions, max_token, fanout
     )
     return _coverage_from_pairs(
@@ -435,10 +466,10 @@ def exact_substring_audit(
     and checkpointed once (ids, offsets and lcp only — no token arrays),
     and both statistics read them.  Same arguments and outputs as the
     two functions it stands in for."""
-    pairs, src = _adjacent_lcp(
+    pairs, src, max_lcp = _adjacent_lcp(
         df, tokens_col, id_col, n_partitions, max_token, fanout
     )
     return (
         _coverage_from_pairs(pairs, src, min_len, tokens_col, id_col, n_tok_col, round_to),
-        _longest_from_pairs(pairs, src, tokens_col, id_col),
+        _longest_from_pairs(pairs, src, max_lcp, tokens_col, id_col),
     )

@@ -322,3 +322,30 @@ def test_cli_run_incremental_loop(spark, handmade, tmp_path):
     got = spark.read.parquet(p("feat1")).unionByName(spark.read.parquet(p("feat2")))
     full = feature_table_fused(obs, probes).filter(w1 | w2)
     assert _canon(got) == _canon(full)
+
+
+def test_cli_state_out_equals_rolled_stats(spark, handmade, tmp_path):
+    """``--state-out`` takes the carried value from each entity's boundary
+    row alone; the state equals ``roll_state`` over the whole window's
+    token stats and a fresh bootstrap at the next cut."""
+    from esa_pfa_spark import cli
+    from esa_pfa_spark.operators.features import token_stats_arrow
+
+    obs, probes, cut = handmade
+    cut2 = T("2024-02-14T00:00:00")
+    p = lambda name: str(tmp_path / name)
+    obs.write.parquet(p("hist"))
+    obs.filter(F.col("ts") >= F.lit(cut)).write.parquet(p("delta1"))
+    probes.write.parquet(p("probes1"))
+    cli.main([
+        "run-incremental", "--tokens", p("delta1"), "--probes", p("probes1"),
+        "--out", p("feat1"), "--bootstrap-from", p("hist"),
+        "--cut", "2024-02-01T00:00:00",
+        "--state-out", p("state2"), "--next-cut", "2024-02-14T00:00:00",
+    ])
+    got = _canon(spark.read.parquet(p("state2")))
+    window = obs.filter((F.col("ts") >= F.lit(cut)) & (F.col("ts") < F.lit(cut2)))
+    stats = token_stats_arrow(window, "tokens").select("entity_id", "ts", "mean")
+    assert got == _canon(roll_state(flagship_entity_state(obs, cut), stats))
+    assert got == _canon(flagship_entity_state(obs, cut2))
+    assert len(got) == 4  # a, b (new in the window), c (absent from it), d

@@ -560,3 +560,42 @@ def test_sketch_plans_bounded_shuffles(spark):
         woe_encode(ev, "event_type", F.col("value") > 50), "simple"
     )
     assert len(re.findall(r"Exchange hashpartitioning", woe_plan)) == 1, woe_plan
+
+
+def test_global_cumsum_row_index_stays_in_the_jvm(spark):
+    """The row index is one projection over the pinned range
+    partitioning; only the weighted running sum crosses to Python."""
+    from esa_pfa_spark.operators.dictionary import global_cumsum, release_pin
+
+    df = spark.createDataFrame([(3, 5), (1, 2), (2, 7)], "k long, w long")
+    index = global_cumsum(df, ["k"], "i", n_partitions=2)
+    running = global_cumsum(df, ["k"], "s", weight="w", n_partitions=2)
+    assert "MapInArrow" not in plan_of(index, mode="simple")
+    assert plan_of(running, mode="simple").count("MapInArrow") == 1
+    assert not index.schema["i"].nullable and not running.schema["s"].nullable
+    release_pin(index)
+    release_pin(running)
+
+
+def test_suffix_ranks_single_range_exchange(spark, monkeypatch):
+    """The initial suffix ranks (min row index and tie count per packed
+    key) read the range partitioning ``global_cumsum`` pinned: that one
+    range exchange is the only one in the plan — no count aggregate and
+    no join back."""
+    from esa_pfa_spark.operators import suffix
+
+    plans = []
+    real = suffix._checkpoint_observed
+
+    def spy(df, **aggs):
+        plans.append(plan_of(df, mode="simple"))
+        return real(df, **aggs)
+
+    monkeypatch.setattr(suffix, "_checkpoint_observed", spy)
+    docs = spark.createDataFrame(
+        [(1, [3, 1, 2, 1]), (2, [1, 2, 1])], "doc_id long, tokens array<int>"
+    )
+    assert suffix.suffix_order(docs).count() == 7
+    outer, pinned = plans[0].split("InMemoryRelation", 1)
+    assert n_exchanges(outer) == 0, plans[0]
+    assert set(re.findall(r"Exchange (\w+)", pinned)) == {"rangepartitioning"}, plans[0]

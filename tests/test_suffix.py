@@ -243,8 +243,52 @@ def test_exact_substring_audit_empty_corpus(spark):
 
 def test_adjacent_lcp_honours_n_partitions(spark):
     # the session default (8) must not override the caller's count
-    pairs, _ = _adjacent_lcp(
+    pairs, _, _ = _adjacent_lcp(
         _df(spark, {1: [1, 2, 3, 1, 2], 2: [2, 3, 1]}),
         "tokens", "doc_id", 3, 2**31 - 1, 8,
     )
     assert pairs.rdd.getNumPartitions() == 3
+
+
+def test_build_runs_no_side_action(spark, monkeypatch):
+    """The suffix array and the adjacent-LCP build run only the actions
+    that materialize their own state: the longest suffix, "anything
+    still tied?" and the max LCP are observed on those jobs."""
+    docs = _motif_docs()
+    df = _df(spark, docs)
+
+    def forbidden(name):
+        def call(self, *args, **kwargs):
+            raise AssertionError(f"side action DataFrame.{name}")
+
+        return call
+
+    for name in ("isEmpty", "first", "count"):
+        monkeypatch.setattr(type(df), name, forbidden(name))
+    sa = suffix_order(df)
+    cov, longest = exact_substring_audit(df, min_len=6)
+    monkeypatch.undo()
+
+    by_idx = {r["sa_idx"]: (r["doc_id"], r["off"]) for r in sa.collect()}
+    assert [by_idx[i] for i in range(len(by_idx))] == _ref_order(docs)
+    assert {r["doc_id"]: r["dup_tokens"] for r in cov.collect()} == _ref_coverage(docs, 6)
+    assert [(r["dup_len"], r["span_fp"]) for r in longest.collect()] == [
+        _ref_longest_dup(docs)
+    ]
+
+
+def test_long_single_token_run(spark):
+    """A document of 3,000 copies of one token — most of its suffixes
+    stay tied until the last refinement round, and its adjacent pairs
+    share up to 2,999 tokens — among random documents over a small
+    alphabet holding the same token."""
+    docs = _random_docs(41, 8, 4, 5, 40)
+    docs[100] = [3] * 3000
+    df = _df(spark, docs)
+    by_idx = {r["sa_idx"]: (r["doc_id"], r["off"]) for r in suffix_order(df).collect()}
+    assert [by_idx[i] for i in range(len(by_idx))] == _ref_order(docs)
+    cov, longest = exact_substring_audit(df, min_len=16)
+    assert {r["doc_id"]: r["dup_tokens"] for r in cov.collect()} == _ref_coverage(docs, 16)
+    assert [(r["dup_len"], r["span_fp"]) for r in longest.collect()] == [
+        _ref_longest_dup(docs)
+    ]
