@@ -4392,9 +4392,7 @@ def q_bpe_encode_sampled(spark, sf_dir):
     from esa_pfa_spark.operators.tokens import bpe_train_sampled
 
     toks = _tokenized_docs(spark, sf_dir).select("doc_id", "tokens")
-    _, applied, _ = bpe_train_sampled(
-        toks, n_merges=512, sample_docs=10_000, encoder="encode"
-    )
+    _, applied, _ = bpe_train_sampled(toks, n_merges=512, sample_docs=10_000)
     merged_str = F.array_join(
         F.transform(F.col("tokens"), lambda x: x.cast("string")), ","
     )
@@ -4656,9 +4654,7 @@ def q_bpe_roundtrip(spark, sf_dir):
     from esa_pfa_spark.operators.tokens import bpe_decode, bpe_train_sampled
 
     toks = _tokenized_docs(spark, sf_dir).select("doc_id", "tokens")
-    merges, applied, _ = bpe_train_sampled(
-        toks, n_merges=256, sample_docs=10_000, encoder="encode"
-    )
+    merges, applied, _ = bpe_train_sampled(toks, n_merges=256, sample_docs=10_000)
     decoded = bpe_decode(applied, merges).select(
         "doc_id", F.col("tokens").alias("decoded")
     )

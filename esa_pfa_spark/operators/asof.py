@@ -34,7 +34,6 @@ in-partition window passes.
 
 from __future__ import annotations
 
-import datetime as _dt
 from typing import Iterable
 
 import numpy as np
@@ -43,20 +42,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from esa_pfa_spark.functions.time import epoch_s, ts_diff_us
+from esa_pfa_spark.functions.time import epoch_s, seconds, ts_diff_us
 from esa_pfa_spark.operators.windows import next_non_null
+from esa_pfa_spark.skew import route_hot_keys
 
 _TAG = "__asof_tag"
 _TS = "__asof_ts"
 _MATCH = "matched_ts"
-
-
-def _tolerance_seconds(tolerance) -> float | None:
-    if tolerance is None:
-        return None
-    if isinstance(tolerance, _dt.timedelta):
-        return tolerance.total_seconds()
-    return float(tolerance)
 
 
 def asof_join(
@@ -116,7 +108,7 @@ def asof_join(
     # (a (current row, unbounded following) frame is quadratic on a hot key)
     w_fwd = Window.partitionBy(*keys).orderBy(F.col(_TS).asc(), F.col(_TAG).desc())
     fwd_fill = F.coalesce(F.col(_PAY), next_non_null(_PAY).over(w_fwd))
-    tol_s = _tolerance_seconds(tolerance)
+    tol_s = None if tolerance is None else seconds(tolerance)
 
     if direction == "nearest":
         # BOTH directional fills over the same union: one Exchange, two
@@ -222,8 +214,8 @@ def asof_join_pandas(
         raise ValueError(
             f"direction must be backward|forward|nearest, got {direction}"
         )
-    tol_s = _tolerance_seconds(tolerance)
-    chunk_s = _tolerance_seconds(chunk)
+    tol_s = None if tolerance is None else seconds(tolerance)
+    chunk_s = None if chunk is None else seconds(chunk)
     if chunk_s is not None and tol_s is None:
         raise ValueError("chunked asof join requires a tolerance bound")
 
@@ -331,98 +323,57 @@ def asof_join_auto(
     The JVM union+window plan sorts each key's whole timeline in one task,
     and AQE skew handling never applies to window sorts — so one
     pathological entity (a Zipf head key at 100x scale) is one straggler
-    task, invisible to every runtime remedy.  This wrapper spends one
-    cheap partial-agg pass counting observations per key, then routes:
+    task, invisible to every runtime remedy.  This wrapper is
+    ``skew.route_hot_keys`` over two as-of plans:
 
       * keys with more than ``hot_rows`` observations -> the chunked
         cogrouped path (``asof_join_pandas(chunk=...)``): the hot timeline
         becomes ceil(span/chunk) bounded tasks, exact by tolerance-width
         replication (chunk defaults to the tolerance);
-      * every other key -> the JVM plan unchanged;
+      * every other key, NULL keys included -> the JVM plan unchanged;
       * results are unioned by name — row-identical to ``asof_join`` on
         the whole input (tested in tests/test_asof.py).
 
-    The hot-key list is collected to the driver — it is bounded by
-    |input| / hot_rows keys (at the 5M default, <=200k keys per 10^12
-    rows; in practice a handful), shipped back as an ``isin`` literal so
-    both branch filters push down to the scan.  ``tolerance`` is required
-    only when a hot key actually exists (the chunked path needs the
-    replication bound).  Single join key (the chunked path's contract).
+    ``tolerance`` is required only when a hot key actually exists (the
+    chunked path needs the replication bound).  Single join key (the
+    chunked path's contract).
 
     Default ``hot_rows`` sizing: 5M rows of (ts + payload) is roughly a
     1-2 GB sort in one task — the point where a window-sort task becomes
     the stage straggler and spills; tune per payload width.
 
-    The census is amortizable: pass ``key_counts`` — a precomputed
-    (key, count) DataFrame, e.g. the manifest's per-key row counts — and
-    NO job touches ``observations`` at plan time (only the small stats
-    table is filtered and collected); or pass ``census_sample`` (a
-    fraction) to count on a sample instead of the full table, with the
-    threshold lowered by ``census_safety`` so borderline-hot keys that
-    under-sample still route hot (routing a cold key hot is merely
-    slower; missing a hot key recreates the straggler).  Without either,
-    one column-pruned partial-agg pass over ``observations`` runs per
-    call — fine once, wasteful in a loop.
-
-    NULL join keys always take the cold branch: ``isin`` is three-valued
-    (NULL for a NULL key), so filtering both branches with bare
-    ``isin``/``~isin`` would drop null-key probes from BOTH — breaking
-    the probes-never-dropped contract.  The cold filter is
-    ``isNull() | ~isin(hot)`` and the hot filter
-    ``isNotNull() & isin(hot)``, an exact partition of the input.
+    The census is amortizable (``route_hot_keys``): ``key_counts`` — a
+    precomputed (key, count) table, e.g. the manifest's per-key row
+    counts — skips it, ``census_sample`` counts a sample.  Without either,
+    one partial-agg pass over ``observations`` runs per call — fine once,
+    wasteful in a loop.
 
     Reference analog: PatchCS assumes uniform grid keys
     (pfa-bitemp-fex/.../PatchCS.java:57-61); real entity keys are Zipfian,
     so the engine dispatches instead of assuming."""
-    if key_counts is not None:
-        cnt = [c for c in key_counts.columns if c != on]
-        if len(cnt) != 1:
-            raise ValueError(
-                f"key_counts must have exactly ({on}, <count>) columns, "
-                f"got {key_counts.columns}"
-            )
-        hot_src = key_counts.filter(F.col(cnt[0]) > hot_rows)
-    elif census_sample is not None:
-        threshold = hot_rows * census_sample / census_safety
-        hot_src = (
-            observations.select(on)
-            .sample(fraction=census_sample, seed=7)
-            .groupBy(on)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > threshold)
-        )
-    else:
-        hot_src = (
-            observations.groupBy(on)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > hot_rows)
-        )
-    hot = [r[0] for r in hot_src.select(on).filter(F.col(on).isNotNull()).collect()]
     kw = dict(
         on=on, probe_ts=probe_ts, obs_ts=obs_ts, payload=payload,
         direction=direction, tolerance=tolerance,
     )
-    if not hot:
-        return asof_join(probes, observations, **kw)
-    if tolerance is None:
-        raise ValueError(
-            f"asof_join_auto found hot keys {hot[:3]}... but the chunked "
-            "path needs a tolerance bound; pass tolerance="
+
+    def chunked(p: DataFrame, o: DataFrame) -> DataFrame:
+        if tolerance is None:
+            raise ValueError(
+                "asof_join_auto found hot keys but the chunked path needs a "
+                "tolerance bound; pass tolerance="
+            )
+        return asof_join_pandas(
+            p, o, chunk=chunk if chunk is not None else tolerance, **kw
         )
-    is_cold = F.col(on).isNull() | ~F.col(on).isin(hot)
-    is_hot = F.col(on).isNotNull() & F.col(on).isin(hot)
-    cold_out = asof_join(
-        probes.filter(is_cold),
-        observations.filter(is_cold),
-        **kw,
+
+    return route_hot_keys(
+        probes, observations, on, hot_rows,
+        cold=lambda p, o: asof_join(p, o, **kw),
+        hot=chunked,
+        key_counts=key_counts,
+        census_sample=census_sample,
+        census_safety=census_safety,
     )
-    hot_out = asof_join_pandas(
-        probes.filter(is_hot),
-        observations.filter(is_hot),
-        chunk=chunk if chunk is not None else tolerance,
-        **kw,
-    )
-    return cold_out.unionByName(hot_out.select(*cold_out.columns))
 
 
 def asof_join_multi(
@@ -498,7 +449,7 @@ def asof_lagk_join(
         raise ValueError("k must be >= 1")
     keys = [on] if isinstance(on, str) else list(on)
     probe_cols = [c for c in probes.columns if c not in keys + [probe_ts]]
-    tol_s = _tolerance_seconds(tolerance)
+    tol_s = None if tolerance is None else seconds(tolerance)
 
     order = [F.col(obs_ts).asc()] + (
         [F.col(tiebreak).asc()] if tiebreak else [F.col(value).asc()]
@@ -729,7 +680,7 @@ def asof_join_bitemporal(
         *[F.col(_PAY)[c].alias(c) for c in payload],
         *[F.col(f"__p_{c}") for c in probe_cols],
     )
-    tol_s = _tolerance_seconds(tolerance)
+    tol_s = None if tolerance is None else seconds(tolerance)
     if tol_s is not None:
         delta_us = ts_diff_us(_TS, _MATCH)
         in_tol = F.col(_MATCH).isNotNull() & (delta_us <= F.lit(int(tol_s * 1e6)))

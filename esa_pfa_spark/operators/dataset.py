@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from esa_pfa_spark.functions.time import seconds
+
 BUCKETS = 10_000
 
 
@@ -322,8 +324,7 @@ def purged_time_folds(
     """
     if k < 2:
         raise ValueError("k must be >= 2")
-    import datetime as _dt
-    e_s = embargo.total_seconds() if isinstance(embargo, _dt.timedelta) else float(embargo or 0.0)
+    e_s = seconds(embargo or 0.0)
     if e_s < 0:
         raise ValueError("embargo must be >= 0")
     e_us = int(round(e_s * 1e6))

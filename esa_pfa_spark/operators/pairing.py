@@ -32,12 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from esa_pfa_spark.functions.time import epoch_s, ts_diff_us
+from esa_pfa_spark.functions.time import epoch_s, seconds, ts_diff_us
 from esa_pfa_spark.schema import PAIRS_SCHEMA
-
-
-def _seconds(v) -> float:
-    return v.total_seconds() if isinstance(v, _dt.timedelta) else float(v)
 
 
 def two_pointer_pairs(ts_us: np.ndarray, min_tol_us: int, max_tol_us: int) -> list[tuple[int, int]]:
@@ -131,8 +127,8 @@ def find_pairs(
         tolerance, non-reuse within its slice) but the non-reuse *phase*
         after a slice boundary may differ from the global sweep.
     """
-    min_us = int(_seconds(min_tol) * 1e6)
-    max_us = int(_seconds(max_tol) * 1e6)
+    min_us = int(seconds(min_tol) * 1e6)
+    max_us = int(seconds(max_tol) * 1e6)
 
     obs = observations.select(key, ts, "doc_id", "tokens", "n_tok")
 
@@ -181,8 +177,8 @@ def find_pairs(
 
         return sess.groupBy(key, "__sess").applyInPandas(sweep_sess, schema=PAIRS_SCHEMA)
 
-    chunk_s = _seconds(chunk)
-    if chunk_s < _seconds(max_tol):
+    chunk_s = seconds(chunk)
+    if chunk_s < seconds(max_tol):
         raise ValueError("chunk must be >= max_tol")
     chunk_us = int(chunk_s * 1e6)
     base = F.floor(epoch_s(F.col(ts)) * 1e6 / chunk_us).cast("long")
@@ -222,7 +218,7 @@ def interval_pairs(
     pair with dt in [min_tol, max_tol] — a conditional self-join Catalyst
     plans as a range join.  Superset of the two-pointer output; used for
     cross-checks and as the DuckDB-oracle-comparable variant."""
-    min_s, max_s = _seconds(min_tol), _seconds(max_tol)
+    min_s, max_s = seconds(min_tol), seconds(max_tol)
     l = observations.select(
         F.col(key), F.col(ts).alias("ts1"), F.col(id_col).alias(f"{id_col}1")
     )
@@ -258,7 +254,7 @@ def interval_pairs_bucketed(
     boundary, each pair meets on exactly one tag (the two tags differ),
     and per-task work drops to O(rows-per-bucket²).  Output is identical
     to ``interval_pairs`` (tested)."""
-    min_s, max_s = _seconds(min_tol), _seconds(max_tol)
+    min_s, max_s = seconds(min_tol), seconds(max_tol)
     # ceil, not truncate: with a fractional max_tol (e.g. 1.5s) a truncated
     # width w < max_s lets an in-band pair span TWO bucket boundaries, so
     # neither of the right side's {b, b-1} tags meets it — silent drops.

@@ -1,26 +1,39 @@
 """Point-in-time windowed aggregation features ("aggregation features" in
 feature-store terms): for each probe (key, query_ts), aggregate the
 observations in the half-open window ``(query_ts - window, query_ts]`` —
-count / exact sum / mean / last value — with zero temporal leakage.
+count / exact sum / mean / last value, or exponentially time-decayed
+sums — with zero temporal leakage.
 
 This extends the engine's as-of core (operators/asof.py, the reference's
 tolerance-bounded pairing FindPatchPairs.java:57-76) from "latest single
 observation" to "window aggregate at probe time".
 
-Physical plan — difference of cumulatives over ONE fused fill:
+Two plans, one per pattern; each single-window / single-tau operator is
+the one-entry case of its multi form:
+
+* ``_cum_fill`` — difference of cumulatives over ONE fused fill
+  (``pit_multi_window_agg``; ``pit_window_agg`` is it over one window,
+  reading the last-value carry as well).
+* ``decayed_pit_features_multi`` — one bucketed band join
+  (``decayed_pit_features`` is it over one tau); ``decayed_pit_auto``
+  sends hot keys to the prefix-sum ``decayed_pit_pandas`` through
+  ``skew.route_hot_keys``.
+
+Difference of cumulatives:
 
   A naive interval join materializes O(|probes| x obs-per-window) pairs
   before aggregating; at 10^12 observations with dense windows that is the
-  dominant cost.  Instead each probe is split into two boundary rows
-  (kind=0 at ``query_ts - window``, kind=1 at ``query_ts``), unioned with
-  the observation stream, and a single cumulative window per key
-  (``order by ts, tag, tiebreak rows unbounded preceding``) computes the
-  running (count, decimal-exact sum) that each boundary row reads off.
-  ``agg_at(end) - agg_at(start)`` is the window aggregate.  Cost: ONE
-  Exchange total (plan-asserted) — the fill hash-partitions by the key,
-  and the closing per-probe hash aggregation's group keys include that
-  key, so its ClusteredDistribution is satisfied without a re-shuffle.
-  Independent of window density: the same shape at any scale.
+  dominant cost.  Instead each probe becomes one start boundary row per
+  window (kind i at ``query_ts - window_i``) plus ONE shared end row (at
+  ``query_ts``), unioned with the observation stream, and a single
+  cumulative window per key (``order by ts, tag, tiebreak rows unbounded
+  preceding``) computes the running (count, decimal-exact sum) that each
+  boundary row reads off.  ``agg_at(end) - agg_at(start_i)`` is window
+  i's aggregate.  Cost: ONE Exchange total (plan-asserted) — the fill
+  hash-partitions by the key, and the closing per-probe hash
+  aggregation's group keys include that key, so its ClusteredDistribution
+  is satisfied without a re-shuffle.  Independent of window density and
+  of the window count: the same shape at any scale.
 
   Sums accumulate as decimal(18,6) (order-independent exact addition) so
   the difference-of-cumulatives is bit-equal to a direct sum over the
@@ -28,9 +41,11 @@ Physical plan — difference of cumulatives over ONE fused fill:
   history.
 
   "last value in window" rides the same fill: the as-of struct carry
-  (asof.py's atomic-payload pattern) evaluated at the end row, validated
-  against the start boundary (strictly-greater: an observation exactly at
-  ``query_ts - window`` is excluded, matching the half-open window).
+  (asof.py's atomic-payload pattern) evaluated at the end row, valid when
+  the window count is positive (count arithmetic, not a ts comparison,
+  so collided timestamps at the start boundary stay exact).  A caller
+  that does not read it pays nothing: column pruning drops the unread
+  window expression and its payload struct.
 
 Boundary/tie semantics (mirrored by the oracle SQL):
   * window is ``(query_ts - window, query_ts]`` — inclusive end, exclusive
@@ -42,7 +57,8 @@ Boundary/tie semantics (mirrored by the oracle SQL):
 
 Min/max are NOT subtractable aggregates — they cannot ride this plan; use
 ``pairing.interval_pairs_bucketed`` + groupBy for those (documented trade:
-O(pairs) work, bucket-bounded tasks).
+O(pairs) work, bucket-bounded tasks).  Neither are per-term-rounded
+decayed sums, hence the band join.
 """
 
 from __future__ import annotations
@@ -52,40 +68,29 @@ import datetime as _dt
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from esa_pfa_spark.functions.time import epoch_s, seconds, ts_diff_us
+from esa_pfa_spark.skew import route_hot_keys
 
-def _seconds(v) -> float:
-    return v.total_seconds() if isinstance(v, _dt.timedelta) else float(v)
 
-
-def pit_window_agg(
-    probes: DataFrame,
-    observations: DataFrame,
-    on: str = "entity_id",
-    probe_ts: str = "query_ts",
-    obs_ts: str = "ts",
-    value: str = "value",
-    tiebreak: str | None = None,
-    window=_dt.timedelta(days=7),
-    probe_id: str | None = None,
-) -> DataFrame:
-    """Windowed PIT aggregates per probe row.
-
-    Returns one row per probe: ``(on, probe-cols, probe_ts, n_win, sum_win,
-    mean_win, last_val)`` where the aggregates cover observations with
-    ``probe_ts - window < obs_ts <= probe_ts``.  ``tiebreak`` (an
-    observation column, e.g. its event id) makes ``last_val`` deterministic
-    under timestamp collisions; without it, equal-ts observations are
-    ordered by value (still deterministic, but not arrival order).
-    """
-    w_s = _seconds(window)
-    if w_s <= 0:
-        raise ValueError("window must be positive")
+def _cum_fill(probes, observations, windows, on, probe_ts, obs_ts, value, tiebreak):
+    """The one difference-of-cumulatives plan.  Returns the per-probe
+    rows (keys, probe_ts, probe columns, ``n_<name>``, ``__s_<name>``,
+    ``__last`` = the latest struct(mts, mval) at or before ``probe_ts``)
+    and the public output columns ``(on, probe-cols, probe_ts, n_<name>,
+    sum_<name>, mean_<name> ...)``."""
+    if not windows:
+        raise ValueError("windows must be non-empty")
+    names = list(windows)
+    w_us = {}
+    for nme, w in windows.items():
+        s = seconds(w)
+        if s <= 0:
+            raise ValueError(f"window {nme} must be positive")
+        w_us[nme] = int(s * 1e6)
     keys = [on] if isinstance(on, str) else list(on)
     probe_cols = [c for c in probes.columns if c not in keys + [probe_ts]]
-    if probe_id is None:
-        if not probe_cols:
-            raise ValueError("probes need an id column (or pass probe_id)")
-        probe_id = probe_cols[0]
+    if not probe_cols:
+        raise ValueError("probes need an id column")
 
     _TS, _TAG, _TIE = "__pit_ts", "__pit_tag", "__pit_tie"
     _N, _S, _PAY, _K, _Q = "__pit_n", "__pit_s", "__pit_pay", "__pit_kind", "__pit_qts"
@@ -123,12 +128,19 @@ def pit_window_agg(
             F.col(probe_ts).alias(_Q),
         )
 
-    start = boundary(0, F.col(probe_ts) - F.expr(f"INTERVAL {int(w_s * 1e6)} MICROSECOND"))
-    end = boundary(1, F.col(probe_ts))
-    unioned = obs_side.unionByName(start).unionByName(end)
+    # kind i = start boundary of windows[names[i]]; kind len(names) = the
+    # SHARED end boundary (cum at query_ts serves every horizon)
+    unioned = obs_side
+    for i, nme in enumerate(names):
+        start = boundary(
+            i, F.col(probe_ts) - F.expr(f"INTERVAL {w_us[nme]} MICROSECOND")
+        )
+        unioned = unioned.unionByName(start)
+    end_k = len(names)
+    unioned = unioned.unionByName(boundary(end_k, F.col(probe_ts)))
 
     # one cumulative pass: equal-ts observations sort before boundary rows
-    # (tag), so the end boundary reads an INCLUSIVE cum and the start
+    # (tag), so the end boundary reads an INCLUSIVE cum and a start
     # boundary's cum still contains an obs at exactly (query_ts - window),
     # which the difference then removes — the half-open window.
     w_cum = (
@@ -149,33 +161,59 @@ def pit_window_agg(
         .filter(F.col(_K).isNotNull())
     )
 
-    picked = filled.groupBy(*keys, F.col(_Q).alias(probe_ts), *[
-        F.col(f"__p_{c}").alias(c) for c in probe_cols
-    ]).agg(
-        (F.max(F.when(F.col(_K) == 1, F.col("__cn"))) -
-         F.max(F.when(F.col(_K) == 0, F.col("__cn")))).alias("n_win"),
-        (F.max(F.when(F.col(_K) == 1, F.col("__cs"))) -
-         F.max(F.when(F.col(_K) == 0, F.col("__cs")))).alias("__sum_dec"),
-        F.first(F.when(F.col(_K) == 1, F.col("__last")), ignorenulls=True).alias("__last"),
+    def at(kind: int, c: str):
+        return F.max(F.when(F.col(_K) == kind, F.col(c)))
+
+    aggs = [F.first(F.when(F.col(_K) == end_k, F.col("__last")), ignorenulls=True).alias("__last")]
+    for i, nme in enumerate(names):
+        aggs.append((at(end_k, "__cn") - at(i, "__cn")).alias(f"n_{nme}"))
+        aggs.append((at(end_k, "__cs") - at(i, "__cs")).alias(f"__s_{nme}"))
+    picked = filled.groupBy(
+        *keys, F.col(_Q).alias(probe_ts),
+        *[F.col(f"__p_{c}").alias(c) for c in probe_cols],
+    ).agg(*aggs)
+
+    out_cols = [*keys, *probe_cols, probe_ts]
+    for nme in names:
+        n_c = F.col(f"n_{nme}")
+        s_c = F.col(f"__s_{nme}").cast("double")
+        out_cols.append(n_c.alias(f"n_{nme}"))
+        out_cols.append(F.when(n_c > 0, s_c).alias(f"sum_{nme}"))
+        out_cols.append(F.when(n_c > 0, s_c / n_c).alias(f"mean_{nme}"))
+    return picked, out_cols
+
+
+def pit_window_agg(
+    probes: DataFrame,
+    observations: DataFrame,
+    on: str = "entity_id",
+    probe_ts: str = "query_ts",
+    obs_ts: str = "ts",
+    value: str = "value",
+    tiebreak: str | None = None,
+    window=_dt.timedelta(days=7),
+) -> DataFrame:
+    """Windowed PIT aggregates per probe row: ``pit_multi_window_agg``
+    over the one window ``{"win": window}``, plus the last value.
+
+    Returns one row per probe: ``(on, probe-cols, probe_ts, n_win, sum_win,
+    mean_win, last_val, last_ts)`` where the aggregates cover observations
+    with ``probe_ts - window < obs_ts <= probe_ts``.  ``tiebreak`` (an
+    observation column, e.g. its event id) makes ``last_val`` deterministic
+    under timestamp collisions; without it, equal-ts observations are
+    ordered by value (still deterministic, but not arrival order).  The
+    probes need at least one column besides ``on`` and ``probe_ts`` (an
+    id), which the per-probe aggregation groups by.
+    """
+    picked, cols = _cum_fill(
+        probes, observations, {"win": window}, on, probe_ts, obs_ts, value, tiebreak
     )
-    sum_win = F.when(F.col("n_win") > 0, F.col("__sum_dec").cast("double"))
-    in_win = (
-        F.col("__last").isNotNull()
-        # strictly inside the half-open window: last obs at-or-before end
-        # must postdate the start boundary.  Count arithmetic (not ts
-        # comparison) so collided timestamps at the boundary stay exact:
-        # n_win > 0 iff at least one obs fell strictly inside.
-        & (F.col("n_win") > 0)
-    )
+    # the carry at the end row is in the window iff the window is non-empty
+    found = F.col("n_win") > 0
     return picked.select(
-        *keys,
-        *probe_cols,
-        probe_ts,
-        F.col("n_win"),
-        sum_win.alias("sum_win"),
-        F.when(F.col("n_win") > 0, F.col("__sum_dec").cast("double") / F.col("n_win")).alias("mean_win"),
-        F.when(in_win, F.col("__last")["mval"]).alias("last_val"),
-        F.when(in_win, F.col("__last")["mts"]).alias("last_ts"),
+        *cols,
+        F.when(found, F.col("__last")["mval"]).alias("last_val"),
+        F.when(found, F.col("__last")["mts"]).alias("last_ts"),
     )
 
 
@@ -190,114 +228,28 @@ def pit_multi_window_agg(
     tiebreak: str | None = None,
 ) -> DataFrame:
     """Multi-horizon PIT aggregates — count / exact sum / mean per named
-    window (e.g. {"1d": ..., "7d": ..., "30d": ...}) for every probe, in
-    the SAME single-Exchange plan as ``pit_window_agg``: all horizons
-    share ONE end boundary row (the cum at query_ts) and add one start
-    boundary row each; the fused cumulative fill runs once, and each
-    horizon's aggregate is its own difference of cumulatives.  Cost is
-    one fill + one hash agg regardless of horizon count — the
-    multi-horizon feature-store ask without per-horizon joins or passes.
+    window (e.g. {"1d": ..., "7d": ..., "30d": ...}) for every probe, from
+    one fill + one hash agg whatever the horizon count (module docstring).
 
     Output: ``(on, probe-cols, probe_ts, n_<name>, sum_<name>,
-    mean_<name> ...)``.  Same half-open ``(query_ts - w, query_ts]``
-    boundary semantics as pit_window_agg."""
-    if not windows:
-        raise ValueError("windows must be non-empty")
-    names = list(windows)
-    w_us = {}
-    for nme, w in windows.items():
-        s = _seconds(w)
-        if s <= 0:
-            raise ValueError(f"window {nme} must be positive")
-        w_us[nme] = int(s * 1e6)
-    keys = [on] if isinstance(on, str) else list(on)
-    probe_cols = [c for c in probes.columns if c not in keys + [probe_ts]]
-    if not probe_cols:
-        raise ValueError("probes need an id column")
-
-    _TS, _TAG, _TIE = "__pit_ts", "__pit_tag", "__pit_tie"
-    _N, _S, _K, _Q = "__pit_n", "__pit_s", "__pit_kind", "__pit_qts"
-
-    tie_col = (
-        F.col(tiebreak).cast("double") if tiebreak else F.col(value).cast("double")
+    mean_<name> ...)``, half-open ``(query_ts - w, query_ts]`` windows."""
+    picked, cols = _cum_fill(
+        probes, observations, windows, on, probe_ts, obs_ts, value, tiebreak
     )
-    obs_side = observations.select(
-        *keys,
-        F.col(obs_ts).alias(_TS),
-        F.lit(0).alias(_TAG),
-        tie_col.alias(_TIE),
-        F.lit(1).cast("long").alias(_N),
-        F.col(value).cast("decimal(18,6)").alias(_S),
-        F.lit(None).cast("int").alias(_K),
-        *[F.lit(None).cast(probes.schema[c].dataType).alias(f"__p_{c}") for c in probe_cols],
-        F.lit(None).cast(probes.schema[probe_ts].dataType).alias(_Q),
-    )
+    return picked.select(*cols)
 
-    def boundary(kind: int, ts_expr):
-        return probes.select(
-            *keys,
-            ts_expr.alias(_TS),
-            F.lit(1).alias(_TAG),
-            F.lit(0.0).alias(_TIE),
-            F.lit(0).cast("long").alias(_N),
-            F.lit("0").cast("decimal(18,6)").alias(_S),
-            F.lit(kind).alias(_K),
-            *[F.col(c).alias(f"__p_{c}") for c in probe_cols],
-            F.col(probe_ts).alias(_Q),
-        )
 
-    # kind i = start boundary of windows[names[i]]; kind len(names) = the
-    # SHARED end boundary (cum at query_ts serves every horizon)
-    unioned = obs_side
-    for i, nme in enumerate(names):
-        start = boundary(
-            i, F.col(probe_ts) - F.expr(f"INTERVAL {w_us[nme]} MICROSECOND")
-        )
-        unioned = unioned.unionByName(start)
-    unioned = unioned.unionByName(boundary(len(names), F.col(probe_ts)))
-
-    w_cum = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col(_TS).asc(), F.col(_TAG).asc(), F.col(_TIE).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = (
-        unioned.select(
-            *keys,
-            F.col(_K),
-            F.col(_Q),
-            F.sum(_N).over(w_cum).alias("__cn"),
-            F.sum(_S).over(w_cum).alias("__cs"),
-            *[F.col(f"__p_{c}") for c in probe_cols],
-        )
-        .filter(F.col(_K).isNotNull())
-    )
-
-    end_k = len(names)
-    aggs = []
-    for i, nme in enumerate(names):
-        n_i = (
-            F.max(F.when(F.col(_K) == end_k, F.col("__cn")))
-            - F.max(F.when(F.col(_K) == i, F.col("__cn")))
-        ).alias(f"n_{nme}")
-        s_i = (
-            F.max(F.when(F.col(_K) == end_k, F.col("__cs")))
-            - F.max(F.when(F.col(_K) == i, F.col("__cs")))
-        ).alias(f"__s_{nme}")
-        aggs.extend([n_i, s_i])
-    picked = filled.groupBy(
-        *keys, F.col(_Q).alias(probe_ts),
-        *[F.col(f"__p_{c}").alias(c) for c in probe_cols],
-    ).agg(*aggs)
-
-    out_cols = [*keys, *probe_cols, probe_ts]
-    for nme in names:
-        n_c = F.col(f"n_{nme}")
-        s_c = F.col(f"__s_{nme}").cast("double")
-        out_cols.append(n_c.alias(f"n_{nme}"))
-        out_cols.append(F.when(n_c > 0, s_c).alias(f"sum_{nme}"))
-        out_cols.append(F.when(n_c > 0, s_c / n_c).alias(f"mean_{nme}"))
-    return picked.select(*out_cols)
+def _horizon_us(tau, cutoff: float) -> tuple[float, int]:
+    """``tau`` in seconds and its support horizon ``cutoff * tau`` in
+    whole microseconds; a horizon that rounds to 0 µs would silently
+    empty every window, so it is an error."""
+    tau_s = seconds(tau)
+    if tau_s <= 0:
+        raise ValueError("tau must be positive")
+    horizon_us = int(round(cutoff * tau_s * 1e6))
+    if horizon_us <= 0:
+        raise ValueError("cutoff*tau must be positive")
+    return tau_s, horizon_us
 
 
 def decayed_pit_features(
@@ -320,76 +272,14 @@ def decayed_pit_features(
     over observations in the half-open support window
     ``(query_ts - cutoff*tau, query_ts]`` — recency-weighted feature-store
     aggregates ("time-decayed counts/sums") with zero temporal leakage.
-    Truncating at ``cutoff`` tau (default 30 => relative truncation error
-    < e^-30 ~ 1e-13, below the published rounding) is what bounds both the
-    numerics and the join: unlike plain windowed sums, per-term-rounded
-    decayed sums are NOT subtractable aggregates, so the
-    difference-of-cumulatives fill (pit_window_agg) cannot carry them
-    exactly; the honest plan is the bounded interval join.
-
-    Physical plan — bucketed band join (pairing.interval_pairs_bucketed's
-    decomposition): both sides bucket by ``floor(epoch/horizon)``; the
-    probe side explodes into (b, b-1) so every in-horizon pair meets on
-    exactly one equi-key (on, bucket).  Per-task work is
-    O(rows-per-bucket^2) regardless of hot keys; no BroadcastNestedLoop.
-    The closing per-probe aggregation groups by the SAME keys the join
-    shuffled on.  Probes with no in-horizon observation come back via a
-    final left join (count 0, null sums).
-
-    Exactness contract (the oracle witness): each pair term is rounded to
-    ``round_to`` decimals and accumulated as decimal(18,6) — an
-    order-independent exact sum, bit-reproducible across engines (same
-    trick as textstats.unigram_logprob), so the result hash-matches a
-    direct per-probe SQL sum at any parallelism."""
-    from esa_pfa_spark.functions.time import epoch_s, ts_diff_us
-
-    tau_s = _seconds(tau)
-    if tau_s <= 0:
-        raise ValueError("tau must be positive")
-    horizon_us = int(round(cutoff * tau_s * 1e6))
-    if horizon_us <= 0:
-        raise ValueError("cutoff*tau must be positive")
-    w = max(int(-(-horizon_us // 1_000_000)), 1)  # ceil seconds
-
-    keys = [on] if isinstance(on, str) else list(on)
-    probe_cols = [c for c in probes.columns if c not in keys + [probe_ts]]
-
-    bp = F.floor(epoch_s(F.col(probe_ts)) / w)
-    p = probes.select(
-        *keys, probe_ts, *probe_cols,
-        F.explode(F.array(bp, bp - 1)).alias("__bk"),
+    It is ``decayed_pit_features_multi`` over the one tau, with the
+    columns named ``n_win, decay_sum, decay_wt, decay_mean``."""
+    out = decayed_pit_features_multi(
+        probes, observations, {"t": tau}, on=on, probe_ts=probe_ts,
+        obs_ts=obs_ts, value=value, cutoff=cutoff, round_to=round_to,
     )
-    o = observations.select(
-        *[F.col(k).alias(f"__ok_{k}") for k in keys],
-        F.col(obs_ts).alias("__ots"),
-        F.col(value).cast("double").alias("__ov"),
-        F.floor(epoch_s(F.col(obs_ts)) / w).alias("__obk"),
-    )
-    dt_us = ts_diff_us(probe_ts, "__ots")
-    cond = F.col("__bk") == F.col("__obk")
-    for k in keys:
-        cond = cond & (F.col(k) == F.col(f"__ok_{k}"))
-    pairs = p.join(o, cond & (dt_us >= 0) & (dt_us < horizon_us))
-
-    decay = F.exp(-(dt_us.cast("double") / F.lit(1e6)) / F.lit(tau_s))
-    term_sum = F.round(decay * F.col("__ov"), round_to).cast("decimal(18,6)")
-    term_wt = F.round(decay, round_to).cast("decimal(18,6)")
-    agg = pairs.groupBy(*keys, probe_ts, *probe_cols).agg(
-        F.count(F.lit(1)).alias("n_win"),
-        F.sum(term_sum).alias("__ds"),
-        F.sum(term_wt).alias("__dw"),
-    )
-    out = probes.join(agg, keys + [probe_ts] + probe_cols, "left")
-    ds = F.col("__ds").cast("double")
-    dw = F.col("__dw").cast("double")
-    return out.select(
-        *keys, *probe_cols, probe_ts,
-        F.coalesce(F.col("n_win"), F.lit(0)).cast("long").alias("n_win"),
-        F.round(ds, round_to).alias("decay_sum"),
-        F.round(dw, round_to).alias("decay_wt"),
-        F.round(
-            F.when(dw > 0, ds / dw), round_to
-        ).alias("decay_mean"),
+    return out.withColumnsRenamed(
+        {f"{c}_t": c for c in ("decay_sum", "decay_wt", "decay_mean")}
     )
 
 
@@ -406,23 +296,39 @@ def decayed_pit_features_multi(
 ) -> DataFrame:
     """Multi-horizon decayed PIT aggregates — the feature-store norm of
     serving SEVERAL decay constants per probe (fast/medium/slow recency,
-    e.g. taus={'1d':…,'7d':…,'30d':…}) — from ONE bucketed band join: the
-    pair set is bounded by the LARGEST horizon (cutoff * max tau) and each
-    tau's terms zero out beyond its own horizon, so adding a faster decay
-    costs two decimal aggregates, not another join.  Output per probe:
-    ``n_win`` (pairs within the largest horizon) and, per named tau,
-    ``decay_sum_<name> / decay_wt_<name> / decay_mean_<name>``.
-    Same exactness contract as ``decayed_pit_features`` (per-term 6dp
-    decimal accumulation, engine-exact)."""
-    from esa_pfa_spark.functions.time import epoch_s, ts_diff_us
+    e.g. taus={'1d':…,'7d':…,'30d':…}) — from ONE bucketed band join.
+    Output per probe: ``n_win`` (pairs within the largest horizon) and,
+    per named tau, ``decay_sum_<name> / decay_wt_<name> /
+    decay_mean_<name>`` over ``(query_ts - cutoff*tau, query_ts]``.
 
+    Truncating at ``cutoff`` tau (default 30 => relative truncation error
+    < e^-30 ~ 1e-13, below the published rounding) is what bounds both the
+    numerics and the join: unlike plain windowed sums, per-term-rounded
+    decayed sums are NOT subtractable aggregates, so the
+    difference-of-cumulatives fill cannot carry them exactly; the honest
+    plan is the bounded interval join.
+
+    Physical plan — bucketed band join (pairing.interval_pairs_bucketed's
+    decomposition): the pair set is bounded by the LARGEST horizon; both
+    sides bucket by ``floor(epoch/horizon)``; the probe side explodes into
+    (b, b-1) so every in-horizon pair meets on exactly one equi-key (on,
+    bucket).  Per-task work is O(rows-per-bucket^2) regardless of hot
+    keys; no BroadcastNestedLoop.  A faster tau's terms zero out beyond
+    its own horizon, so adding one costs two decimal aggregates, not
+    another join.  The closing per-probe aggregation groups by the SAME
+    keys the join shuffled on.  Probes with no in-horizon observation come
+    back via a final left join (count 0, null sums).
+
+    Exactness contract (the oracle witness): each pair term is rounded to
+    ``round_to`` decimals and accumulated as decimal(18,6) — an
+    order-independent exact sum, bit-reproducible across engines (same
+    trick as textstats.unigram_logprob), so the result hash-matches a
+    direct per-probe SQL sum at any parallelism."""
     if not taus:
         raise ValueError("taus must be non-empty")
-    tau_s = {k: _seconds(v) for k, v in taus.items()}
-    if min(tau_s.values()) <= 0:
-        raise ValueError("all taus must be positive")
-    max_h_us = int(round(cutoff * max(tau_s.values()) * 1e6))
-    w = max(int(-(-max_h_us // 1_000_000)), 1)
+    spans = {name: _horizon_us(tau, cutoff) for name, tau in taus.items()}
+    max_h_us = max(h for _, h in spans.values())
+    w = max(int(-(-max_h_us // 1_000_000)), 1)  # ceil seconds
 
     keys = [on] if isinstance(on, str) else list(on)
     probe_cols = [c for c in probes.columns if c not in keys + [probe_ts]]
@@ -445,25 +351,22 @@ def decayed_pit_features_multi(
     pairs = p.join(o, cond & (dt_us >= 0) & (dt_us < max_h_us))
 
     aggs = [F.count(F.lit(1)).alias("n_win")]
-    for name, ts_ in tau_s.items():
-        h_us = int(round(cutoff * ts_ * 1e6))
-        in_h = dt_us < h_us
-        decay = F.exp(-(dt_us.cast("double") / F.lit(1e6)) / F.lit(ts_))
-        t_sum = F.when(in_h, F.round(decay * F.col("__ov"), round_to)).otherwise(
-            F.lit(0.0)
-        ).cast("decimal(18,6)")
-        t_wt = F.when(in_h, F.round(decay, round_to)).otherwise(F.lit(0.0)).cast(
-            "decimal(18,6)"
-        )
-        aggs.append(F.sum(t_sum).alias(f"__ds_{name}"))
-        aggs.append(F.sum(t_wt).alias(f"__dw_{name}"))
+    for name, (tau_s, h_us) in spans.items():
+        decay = F.exp(-(dt_us.cast("double") / F.lit(1e6)) / F.lit(tau_s))
+        t_sum = F.round(decay * F.col("__ov"), round_to)
+        t_wt = F.round(decay, round_to)
+        if h_us < max_h_us:  # every joined pair is inside the largest horizon
+            t_sum = F.when(dt_us < h_us, t_sum).otherwise(F.lit(0.0))
+            t_wt = F.when(dt_us < h_us, t_wt).otherwise(F.lit(0.0))
+        aggs.append(F.sum(t_sum.cast("decimal(18,6)")).alias(f"__ds_{name}"))
+        aggs.append(F.sum(t_wt.cast("decimal(18,6)")).alias(f"__dw_{name}"))
     agg = pairs.groupBy(*keys, probe_ts, *probe_cols).agg(*aggs)
     out = probes.join(agg, keys + [probe_ts] + probe_cols, "left")
     cols = [
         *keys, *probe_cols, probe_ts,
         F.coalesce(F.col("n_win"), F.lit(0)).cast("long").alias("n_win"),
     ]
-    for name in tau_s:
+    for name in spans:
         ds = F.col(f"__ds_{name}").cast("double")
         dw = F.col(f"__dw_{name}").cast("double")
         cols.append(F.round(ds, round_to).alias(f"decay_sum_{name}"))
@@ -533,17 +436,12 @@ def decayed_pit_pandas(
 
     if not isinstance(on, str):
         raise ValueError("decayed_pit_pandas takes a single join key")
-    tau_s = _seconds(tau)
-    if tau_s <= 0:
-        raise ValueError("tau must be positive")
     if not (0 < cutoff <= 200):
         # exp(cutoff) must stay far from double overflow AND leave the
         # suffix-minus-prefix cancellation bound (eps * e^cutoff * n)
         # below the rounding granularity; beyond that use the band join.
         raise ValueError("cutoff must be in (0, 200] for the prefix-sum path")
-    horizon_us = int(round(cutoff * tau_s * 1e6))
-    if horizon_us <= 0:
-        raise ValueError("cutoff*tau must be positive")
+    tau_s, horizon_us = _horizon_us(tau, cutoff)
     L = horizon_us
 
     probe_cols = [c for c in probes.columns if c not in (on, probe_ts)]
@@ -671,13 +569,15 @@ def decayed_pit_auto(
     key_counts: DataFrame | None = None,
 ) -> DataFrame:
     """Decayed PIT aggregates with AUTOMATIC hot-key dispatch (the decay
-    analog of ``asof_join_auto``): one partial-agg census over
-    ``observations`` (or a precomputed ``key_counts`` table — no census
-    job) finds keys with more than ``hot_rows`` observations; hot keys
-    route through ``decayed_pit_pandas`` (prefix sums, zero pair
-    materialization), everything else through the exact band join
-    ``decayed_pit_features`` (per-term 6dp decimal accumulation, the
-    order-independent oracle contract).  Results union by name.
+    analog of ``asof_join_auto``): ``skew.route_hot_keys`` over two plans.
+    One partial-agg census over ``observations`` (or a precomputed
+    ``key_counts`` table — no job over ``observations``) finds keys with
+    more than ``hot_rows`` observations; hot keys route through
+    ``decayed_pit_pandas`` (prefix sums, zero pair materialization),
+    everything else — NULL keys included, so probes are never dropped —
+    through the exact band join ``decayed_pit_features`` (per-term 6dp
+    decimal accumulation, the order-independent oracle contract).
+    Results union by name.
 
     The band join's per-task cost is O(probes-per-(key,bucket) x
     obs-per-(key,bucket)) — genuine pair work, invisible to AQE's skew
@@ -686,8 +586,7 @@ def decayed_pit_auto(
     uniform control of the same size).  The prefix-sum path removes the
     quadratic term but gives up per-term rounding: hot-key sums are
     unrounded float64 accumulations that agree with the exact path within
-    ~5e-7 * n_win.  NULL join keys always ride the cold branch (isin is
-    three-valued; see asof_join_auto) so probes are never dropped.
+    ~5e-7 * n_win.
 
     ``hot_rows`` default: 1M observations under one key is the point
     where a dense horizon makes the band join's pair output (probes x
@@ -697,29 +596,9 @@ def decayed_pit_auto(
         on=on, probe_ts=probe_ts, obs_ts=obs_ts, value=value,
         tau=tau, cutoff=cutoff, round_to=round_to,
     )
-    if key_counts is not None:
-        cnt = [c for c in key_counts.columns if c != on]
-        if len(cnt) != 1:
-            raise ValueError(
-                f"key_counts must have exactly ({on}, <count>) columns, "
-                f"got {key_counts.columns}"
-            )
-        hot_src = key_counts.filter(F.col(cnt[0]) > hot_rows)
-    else:
-        hot_src = (
-            observations.groupBy(on)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > hot_rows)
-        )
-    hot = [r[0] for r in hot_src.select(on).filter(F.col(on).isNotNull()).collect()]
-    if not hot:
-        return decayed_pit_features(probes, observations, **kw)
-    is_cold = F.col(on).isNull() | ~F.col(on).isin(hot)
-    is_hot = F.col(on).isNotNull() & F.col(on).isin(hot)
-    cold_out = decayed_pit_features(
-        probes.filter(is_cold), observations.filter(is_cold), **kw
+    return route_hot_keys(
+        probes, observations, on, hot_rows,
+        cold=lambda p, o: decayed_pit_features(p, o, **kw),
+        hot=lambda p, o: decayed_pit_pandas(p, o, **kw),
+        key_counts=key_counts,
     )
-    hot_out = decayed_pit_pandas(
-        probes.filter(is_hot), observations.filter(is_hot), **kw
-    )
-    return cold_out.unionByName(hot_out.select(*cold_out.columns))

@@ -22,11 +22,12 @@ funnel via joins is k shuffles and k scans).
 
 from __future__ import annotations
 
-import datetime as _dt
 import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from esa_pfa_spark.functions.time import seconds
 
 
 def interval_lookup(
@@ -94,10 +95,7 @@ def funnel(
     event counts bound the task — the usual per-key skew axis."""
     if not steps:
         raise ValueError("steps must be non-empty")
-    tol_us = None
-    if within is not None:
-        s = within.total_seconds() if isinstance(within, _dt.timedelta) else float(within)
-        tol_us = int(s * 1e6)
+    tol_us = None if within is None else int(seconds(within) * 1e6)
 
     ev = events.filter(F.col(type_col).isin(steps)).select(
         key, F.col(ts).alias("__ts"), F.col(type_col).alias("__tp")

@@ -1109,10 +1109,9 @@ def bpe_train_sampled(
     sample_docs: int = 10_000,
     seed: int = 0,
     new_id_start: int = 1_000_000,
-    encoder: str = "apply",
 ) -> tuple[list[dict], DataFrame, DataFrame]:
     """BPE at corpus scale: train the merge table on a DETERMINISTIC
-    sample, then apply it corpus-wide in ONE map-only pass (``bpe_apply``)
+    sample, then encode the corpus in ONE map-only pass (``bpe_encode``)
     — n_merges + 1 corpus scans collapse to one scan plus a sample-sized
     training job.  This is the standard production shape (tokenizers are
     trained on samples); ``bpe_train`` remains the exact full-corpus
@@ -1127,10 +1126,9 @@ def bpe_train_sampled(
     lazy max-heap, cost independent of n_merges — 32k ranks in ~1s on a
     100k-token sample; exact parity with the per-round rescan trainer).
 
-    ``encoder``: "apply" (rank-order rule loop — fine to a few hundred
-    merges, O(n_merges) sweeps per batch) or "encode" (``bpe_encode``:
-    min-rank heap, per-batch cost independent of table size — the
-    production-vocab path; parity-tested, BENCH/BPE_ENCODE.md).
+    The encode's min-rank heap costs the same per batch at any table
+    size; ``bpe_apply``'s rank-order rule loop (O(n_merges) sweeps per
+    batch) stays as its parity oracle (BENCH/BPE_ENCODE.md).
 
     Returns (merges, applied corpus DataFrame, merge-table DataFrame)."""
     from esa_pfa_spark.plans.query import deterministic_sample
@@ -1150,8 +1148,7 @@ def bpe_train_sampled(
         or [],
         "rank int, t1 long, t2 long, new_id long, pair_count long",
     )
-    apply_fn = bpe_encode if encoder == "encode" else bpe_apply
-    return merges, apply_fn(df, merges, tokens_col), table
+    return merges, bpe_encode(df, merges, tokens_col), table
 
 
 def mg_heavy_hitters(

@@ -14,16 +14,10 @@ fully whole-stage-codegen'd.  Semantic parity targets in the reference:
 
 from __future__ import annotations
 
-import datetime as _dt
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from esa_pfa_spark.functions.time import ts_diff_us
-
-
-def _seconds(v) -> float:
-    return v.total_seconds() if isinstance(v, _dt.timedelta) else float(v)
+from esa_pfa_spark.functions.time import seconds, ts_diff_us
 
 
 def ffill(df: DataFrame, cols: list[str], key: str, ts: str) -> DataFrame:
@@ -124,7 +118,7 @@ def sessionize(
     ``session_id`` is the cumulative count of gap-breaks (0-based within key).
     With ``with_stats``, appends ``session_len`` (rows in the session).
     """
-    gap_us = int(_seconds(gap) * 1e6)
+    gap_us = int(seconds(gap) * 1e6)
     w = Window.partitionBy(key).orderBy(ts)
     with_prev = df.withColumn("__prev_ts", F.lag(F.col(ts), 1).over(w))
     delta = ts_diff_us(ts, "__prev_ts")

@@ -61,7 +61,7 @@ import datetime as _dt
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from esa_pfa_spark.functions.time import ts_diff_us
+from esa_pfa_spark.functions.time import seconds, ts_diff_us
 from esa_pfa_spark.operators.features import token_stats_arrow
 from esa_pfa_spark.operators.windows import next_non_null
 
@@ -95,11 +95,6 @@ FEATURE_PAYLOAD = [
     "session_id",
     "session_len",
 ]
-
-
-def _us(d) -> int:
-    """A timedelta (or a number of seconds) in whole microseconds."""
-    return int((d.total_seconds() if hasattr(d, "total_seconds") else float(d)) * 1e6)
 
 
 def _empty_state(observations: DataFrame, entity: str, ts: str) -> DataFrame:
@@ -182,7 +177,7 @@ def _windows(u: DataFrame, payload: list[str], gap) -> DataFrame:
     )
 
     since_prev = ts_diff_us("__ts", "__prev.ts")
-    brk = is_obs & since_prev.isNotNull() & (since_prev > _us(gap))
+    brk = is_obs & since_prev.isNotNull() & (since_prev > int(seconds(gap) * 1e6))
     brk_idx = F.when(brk, F.col("__oidx"))
     pay = F.struct(
         F.col("__ts").alias("matched_ts"),
@@ -218,17 +213,15 @@ def entity_state(
     gap=DEFAULT_SESSION_GAP,
     entity: str = "entity_id",
     ts: str = "ts",
-    value_col: str | None = "mean",
+    value_col: str = "mean",
 ) -> DataFrame:
     """Bootstrap the per-entity state from history (``ts < cut``) — used
     once at adoption time and in tests; steady-state runs advance the
     state with ``roll_state`` instead.  It is ``roll_state`` from the
-    empty state over the history.  ``value_col=None`` emits a null
-    ``last_value`` (for callers that attach it separately, e.g.
-    ``flagship_entity_state`` computing token stats for just the boundary
-    rows)."""
-    v = F.col(value_col) if value_col is not None else F.lit(None).cast("double")
-    hist = observations.filter(F.col(ts) < F.lit(cut)).select(entity, ts, v.alias("__v"))
+    empty state over the history."""
+    hist = observations.filter(F.col(ts) < F.lit(cut)).select(
+        entity, ts, F.col(value_col).alias("__v")
+    )
     return roll_state(_empty_state(hist, entity, ts), hist, gap, entity, ts, "__v")
 
 
@@ -293,7 +286,7 @@ def incremental_fill(
     t = _windows(u.unionByName(probe_side, allowMissingColumns=True), payload, gap)
 
     in_tol = F.col("__pay").isNotNull() & (
-        F.abs(ts_diff_us("__ts", "__pay.matched_ts")) <= _us(tolerance)
+        F.abs(ts_diff_us("__ts", "__pay.matched_ts")) <= int(seconds(tolerance) * 1e6)
     )
     value = {value_col: F.col("__pay.__v")}
     value.update({c: F.col(f"__pay.{c}") for c in payload})
@@ -310,24 +303,39 @@ def incremental_fill(
     )
 
 
-def flagship_entity_state(observations: DataFrame, cut, gap=DEFAULT_SESSION_GAP) -> DataFrame:
-    """Bootstrap state for the flagship token pipeline: the counters come
-    from a ts-only ``entity_state`` over history, and the carry-in value
-    (the boundary observation's ``mean`` token stat) is computed by
-    running the Arrow stats kernel over ONLY one row per entity — never
-    the full history.  The boundary row is the latest before ``cut``; of
-    rows tied at that ts, the one with the greatest ``doc_id``, so the
-    state has exactly one row per entity."""
-    hist = observations.filter(F.col("ts") < F.lit(cut))
-    last_rows = hist.groupBy("entity_id").agg(
+def roll_flagship_state(
+    state: DataFrame, window: DataFrame, gap=DEFAULT_SESSION_GAP
+) -> DataFrame:
+    """Advance a flagship token-pipeline state over ``window`` (the token
+    observations of ``[cut, next_cut)``).  The counters come from a
+    ts-only ``roll_state``, and the carry-in value (the boundary
+    observation's ``mean`` token stat) from running the Arrow stats kernel
+    over ONLY one row per entity — never the window again.  The boundary
+    row is the window's latest; of rows tied at that ts, the one with the
+    greatest ``doc_id``, so the state has exactly one row per entity.
+    Entities absent from the window keep their old ``last_value``."""
+    boundary = window.groupBy("entity_id").agg(
         F.max_by("tokens", F.struct("ts", "doc_id")).alias("tokens")
     )
-    means = token_stats_arrow(last_rows, "tokens")
-    return entity_state(observations, cut, gap=gap, value_col=None).drop("last_value").join(
-        means.select("entity_id", F.col("mean").alias("last_value")),
+    means = token_stats_arrow(boundary, "tokens").select(
+        "entity_id", F.col("mean").alias("__m"), F.lit(True).alias("__seen")
+    )
+    ts_only = window.select("entity_id", "ts", F.lit(None).cast("double").alias("mean"))
+    return roll_state(state, ts_only, gap).join(means, "entity_id", "left").select(
         "entity_id",
-        "left",
-    ).select("entity_id", *STATE_COLS)
+        "last_ts",
+        F.when(F.col("__seen"), F.col("__m")).otherwise(F.col("last_value")).alias(
+            "last_value"
+        ),
+        *STATE_COLS[2:],
+    )
+
+
+def flagship_entity_state(observations: DataFrame, cut, gap=DEFAULT_SESSION_GAP) -> DataFrame:
+    """Bootstrap state for the flagship token pipeline: the empty state
+    rolled over the history ``ts < cut`` (``roll_flagship_state``)."""
+    hist = observations.filter(F.col("ts") < F.lit(cut))
+    return roll_flagship_state(_empty_state(hist, "entity_id", "ts"), hist, gap)
 
 
 def feature_table_incremental(

@@ -14,9 +14,16 @@ engine ships explicit remedies (SURVEY.md §4 custom-work item 2):
 * For order-sensitive per-key scans (as-of, pairing) salting is invalid;
   those use time-slicing instead (asof_join_pandas(chunk=...),
   find_pairs(chunk="session")).
+* ``route_hot_keys`` — the one hot-key router: a per-key census (or a
+  precomputed count table) picks the keys above a row threshold, the
+  input splits null-safely into hot and cold halves, each half runs its
+  own plan, and the results union by name.  ``asof_join_auto`` and
+  ``decayed_pit_auto`` are this router over their cold/hot operator pairs.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -118,3 +125,62 @@ def salted_join(
         SALT_COL, F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
     )
     return l.join(r, keys + [SALT_COL], how).drop(SALT_COL)
+
+
+def route_hot_keys(
+    probes: DataFrame,
+    observations: DataFrame,
+    on: str,
+    hot_rows: int,
+    cold: Callable[[DataFrame, DataFrame], DataFrame],
+    hot: Callable[[DataFrame, DataFrame], DataFrame],
+    key_counts: DataFrame | None = None,
+    census_sample: float | None = None,
+    census_safety: float = 2.0,
+) -> DataFrame:
+    """Run ``hot(probes, observations)`` on the keys with more than
+    ``hot_rows`` observations and ``cold(...)`` on the rest; union the
+    two by name (the cold output's column order).  With no hot key it is
+    ``cold`` on the whole input.
+
+    The census is one column-pruned partial-agg pass over
+    ``observations``, unless ``key_counts`` — a precomputed (key, count)
+    table — is given, in which case NO job touches ``observations`` at
+    plan time; ``census_sample`` (a fraction) counts a sample instead,
+    with the threshold lowered by ``census_safety`` so borderline-hot
+    keys that under-sample still route hot (routing a cold key hot is
+    merely slower; missing a hot key recreates the straggler).
+
+    The hot keys (at most |observations| / hot_rows of them) are
+    collected to the driver and shipped back as an ``isin`` literal, so
+    both branch filters push down to the scan.  NULL keys always take
+    the cold branch: ``isin`` is three-valued (NULL for a NULL key), so
+    bare ``isin``/``~isin`` filters would drop null-key probes from BOTH
+    branches.  The cold filter is ``isNull() | ~isin(hot)`` and the hot
+    filter ``isNotNull() & isin(hot)``, an exact partition."""
+    if key_counts is not None:
+        cnt = [c for c in key_counts.columns if c != on]
+        if len(cnt) != 1:
+            raise ValueError(
+                f"key_counts must have exactly ({on}, <count>) columns, "
+                f"got {key_counts.columns}"
+            )
+        hot_src = key_counts.filter(F.col(cnt[0]) > hot_rows)
+    else:
+        src, threshold = observations.select(on), hot_rows
+        if census_sample is not None:
+            src = src.sample(fraction=census_sample, seed=7)
+            threshold = hot_rows * census_sample / census_safety
+        hot_src = (
+            src.groupBy(on)
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .filter(F.col("__n") > threshold)
+        )
+    keys = [r[0] for r in hot_src.select(on).filter(F.col(on).isNotNull()).collect()]
+    if not keys:
+        return cold(probes, observations)
+    is_hot = F.col(on).isNotNull() & F.col(on).isin(keys)
+    is_cold = F.col(on).isNull() | ~F.col(on).isin(keys)
+    cold_out = cold(probes.filter(is_cold), observations.filter(is_cold))
+    hot_out = hot(probes.filter(is_hot), observations.filter(is_hot))
+    return cold_out.unionByName(hot_out.select(*cold_out.columns))

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from esa_pfa_spark.functions.time import seconds
+
 OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("key", T.StringType(), False),
@@ -60,12 +62,8 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _seconds(v) -> float:
-    return v.total_seconds() if isinstance(v, _dt.timedelta) else float(v)
-
-
 def make_decay_fn(tau, cutoff: float = 40.0) -> Any:
-    tau_s = _seconds(tau)
+    tau_s = seconds(tau)
     if tau_s <= 0:
         raise ValueError("tau must be positive")
     timeout_us = int(cutoff * tau_s * 1e6)

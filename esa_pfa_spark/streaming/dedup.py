@@ -103,12 +103,9 @@ def make_bucket_pairs_fn(tolerance=None, max_per_bucket: int = 100):
     per LSH bucket, remember the member doc ids; each NEW member emits a
     candidate pair against every existing member.  Module-level +
     closure-light so it pickles cleanly to executors."""
-    import datetime as _dt
+    from esa_pfa_spark.functions.time import seconds
 
-    tol_us = None
-    if tolerance is not None:
-        s = tolerance.total_seconds() if isinstance(tolerance, _dt.timedelta) else float(tolerance)
-        tol_us = int(s * 1e6)
+    tol_us = None if tolerance is None else int(seconds(tolerance) * 1e6)
 
     def bucket_pairs(key, pdfs, state):
         import pandas as pd

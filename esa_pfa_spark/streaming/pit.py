@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from esa_pfa_spark.functions.time import seconds
+
 OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("key", T.StringType(), False),
@@ -51,12 +53,8 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _seconds(v) -> float:
-    return v.total_seconds() if isinstance(v, _dt.timedelta) else float(v)
-
-
 def make_pit_fn(window) -> Any:
-    win_us = int(_seconds(window) * 1e6)
+    win_us = int(seconds(window) * 1e6)
 
     def update(
         key: Tuple[Any, ...],

@@ -21,10 +21,11 @@ import datetime as _dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from esa_pfa_spark.functions.time import seconds
+
 
 def _width_str(width) -> str:
-    s = width.total_seconds() if isinstance(width, _dt.timedelta) else float(width)
-    return f"{int(s)} seconds"
+    return f"{int(seconds(width))} seconds"
 
 
 def tumbling_rate(

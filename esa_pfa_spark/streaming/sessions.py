@@ -8,15 +8,14 @@ FindPatchPairs.java:148-150, are the batch ancestor of this watermark)."""
 
 from __future__ import annotations
 
-import datetime as _dt
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from esa_pfa_spark.functions.time import seconds
+
 
 def _gap_str(gap) -> str:
-    s = gap.total_seconds() if isinstance(gap, _dt.timedelta) else float(gap)
-    return f"{int(s)} seconds"
+    return f"{int(seconds(gap))} seconds"
 
 
 def session_window_agg(df: DataFrame, key: str, ts: str, gap, value: str | None = None) -> DataFrame:

@@ -27,13 +27,14 @@ Batch parity: on a static frame the same semantics are ``windows.ffill``
 
 from __future__ import annotations
 
-import datetime as _dt
 from typing import Any, Iterable, Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from esa_pfa_spark.functions.time import seconds
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -53,15 +54,11 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _seconds(v) -> float:
-    return v.total_seconds() if isinstance(v, _dt.timedelta) else float(v)
-
-
 def make_ffill_fn(tolerance=None):
     """Build the (key, batches, state) -> batches function for
     ``applyInPandasWithState``.  Kept module-level and closure-light so it
     pickles cleanly to executors."""
-    tol_us = None if tolerance is None else int(_seconds(tolerance) * 1e6)
+    tol_us = None if tolerance is None else int(seconds(tolerance) * 1e6)
 
     def ffill_state(
         key: Tuple[Any, ...],

@@ -12,6 +12,7 @@ horizon count).
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import numpy as np
 import pandas as pd
@@ -544,3 +545,108 @@ def test_decayed_auto_dispatch_and_null_cold_branch(spark):
             for r in decayed_pit_auto(
                 p, o, hot_rows=10**9, **kw).collect()}
     assert got3 == want
+
+
+# ---------------------------------------------------------------------------
+# one core per pattern: the single forms are one-entry multi forms
+# ---------------------------------------------------------------------------
+
+def test_multi_window_plans_no_last_carry(spark):
+    """The shared fill carries last(struct(ts, value)) for pit_window_agg;
+    the multi form never reads it, so column pruning must drop the window
+    expression and its payload: no ``last(`` in the optimized plan, and
+    still 1 Exchange, 1 Window, 1 Aggregate."""
+    from esa_pfa_spark.operators.pit import pit_multi_window_agg
+
+    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    probes = ev.filter(F.col("event_type") == "click").select(
+        "event_id", "user_id", F.col("ts").alias("query_ts")
+    )
+    obs = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id", "ts", "value", F.col("event_id").alias("oid")
+    )
+    out = pit_multi_window_agg(
+        probes, obs, on="user_id", probe_ts="query_ts", obs_ts="ts",
+        value="value", tiebreak="oid",
+        windows={"1d": dt.timedelta(days=1), "7d": dt.timedelta(days=7)},
+    )
+    opt = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "last(" not in opt and "__pit_pay" not in opt, opt
+    assert len(re.findall(r"\bWindow\b", opt)) == 1, opt
+    assert len(re.findall(r"\bAggregate\b", opt)) == 1, opt
+    assert n_exchanges(plan_of(out)) == 1
+
+
+def test_single_window_is_multi_with_one_window(spark):
+    """pit_window_agg(window=w) equals pit_multi_window_agg({"win": w}) on
+    every shared column, bit for bit (the seeded corpus of
+    test_matches_bruteforce_interval_join)."""
+    from esa_pfa_spark.operators.pit import pit_multi_window_agg
+
+    rng = np.random.default_rng(7)
+    n_obs, n_probe = 2000, 400
+    keys = rng.integers(0, 20, n_obs)
+    obs = [
+        (f"k{k}", T0 + dt.timedelta(seconds=int(s)), float(v), int(i))
+        for i, (k, s, v) in enumerate(
+            zip(keys, rng.integers(0, 86400, n_obs), rng.normal(50, 10, n_obs))
+        )
+    ]
+    probes = [
+        (int(i), f"k{int(k)}", T0 + dt.timedelta(seconds=int(s)))
+        for i, (k, s) in enumerate(
+            zip(rng.integers(0, 22, n_probe), rng.integers(0, 90000, n_probe))
+        )
+    ]
+    w = dt.timedelta(hours=3)
+    p, o = _mk(spark, probes, obs)
+    kw = dict(on="k", probe_ts="query_ts", obs_ts="ts", value="value", tiebreak="oid")
+    multi = pit_multi_window_agg(p, o, windows={"win": w}, **kw)
+    single = pit_window_agg(p, o, window=w, **kw)
+    assert single.columns == multi.columns + ["last_val", "last_ts"]
+    key = lambda r: r["pid"]
+    got = sorted(single.select(*multi.columns).collect(), key=key)
+    want = sorted(multi.collect(), key=key)
+    assert len(got) == n_probe and got == want
+
+
+def test_decayed_multi_rejects_zero_horizon(spark):
+    """A tau whose cutoff*tau rounds to 0 µs would give every probe
+    n_win = 0 silently; the shared band join refuses it up front."""
+    from esa_pfa_spark.operators.pit import decayed_pit_features_multi
+
+    p, o = _mk(spark, [(1, "a", T0)], [("a", T0, 1.0, 1)])
+    kw = dict(on="k", probe_ts="query_ts", obs_ts="ts", value="value", cutoff=1.0)
+    with pytest.raises(ValueError, match="cutoff\\*tau"):
+        decayed_pit_features_multi(p, o, taus={"tiny": 1e-7}, **kw)
+    with pytest.raises(ValueError, match="cutoff\\*tau"):
+        decayed_pit_features_multi(
+            p, o, taus={"1h": dt.timedelta(hours=1), "tiny": 1e-7}, **kw
+        )
+
+
+def test_decayed_auto_key_counts_skips_census(spark):
+    """With key_counts supplied, NO job may touch observations at plan
+    time (the decay twin of test_asof_auto_key_counts_skips_census): a
+    Python-UDF filter on observations raises if executed; building the
+    dispatched plan must not fire it, and the same call without
+    key_counts does, via the census collect."""
+    from esa_pfa_spark.operators.pit import decayed_pit_auto
+
+    obs = [("hot", T0 + dt.timedelta(minutes=i), float(i), i) for i in range(40)]
+    obs += [("cold", T0 + dt.timedelta(minutes=i), 1.0, 100 + i) for i in range(3)]
+    p, o = _mk(spark, [(1, "hot", T0 + dt.timedelta(hours=1)), (2, "cold", T0)], obs)
+
+    @F.udf("boolean")
+    def _boom(v):
+        raise RuntimeError("census scanned observations")
+
+    trapped = o.filter(_boom("value"))
+    kc = spark.createDataFrame([("hot", 40), ("cold", 3)], "k string, n_rows long")
+    kw = dict(on="k", probe_ts="query_ts", obs_ts="ts", value="value",
+              tau=dt.timedelta(minutes=30), cutoff=4.0, hot_rows=10)
+    out = decayed_pit_auto(p, trapped, key_counts=kc, **kw)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInPandas" in plan  # hot key found via stats
+    with pytest.raises(Exception, match="census scanned observations"):
+        decayed_pit_auto(p, trapped, **kw)

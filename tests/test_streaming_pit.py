@@ -59,7 +59,7 @@ def test_single_batch_matches_batch_pit(spark, tmp_path):
     obs = sdf.select("k", "ts", F.col("v").alias("value"))
     want_rows = pit_window_agg(
         probes, obs, on="k", probe_ts="query_ts", obs_ts="ts",
-        value="value", window=w, probe_id="pid",
+        value="value", window=w,
     ).collect()
     for r in want_rows:
         kts = (r["k"], pd.Timestamp(r["query_ts"]))
