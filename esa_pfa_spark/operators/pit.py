@@ -23,17 +23,18 @@ Difference of cumulatives:
 
   A naive interval join materializes O(|probes| x obs-per-window) pairs
   before aggregating; at 10^12 observations with dense windows that is the
-  dominant cost.  Instead each probe becomes one start boundary row per
-  window (kind i at ``query_ts - window_i``) plus ONE shared end row (at
-  ``query_ts``), unioned with the observation stream, and a single
-  cumulative window per key (``order by ts, tag, tiebreak rows unbounded
-  preceding``) computes the running (count, decimal-exact sum) that each
-  boundary row reads off.  ``agg_at(end) - agg_at(start_i)`` is window
-  i's aggregate.  Cost: ONE Exchange total (plan-asserted) — the fill
-  hash-partitions by the key, and the closing per-probe hash
-  aggregation's group keys include that key, so its ClusteredDistribution
-  is satisfied without a re-shuffle.  Independent of window density and
-  of the window count: the same shape at any scale.
+  dominant cost.  Instead each probe is numbered once and exploded into
+  one start boundary row per window (kind i at ``query_ts - window_i``)
+  plus ONE shared end row (at ``query_ts``), unioned with the observation
+  stream, and a single cumulative window per key (``order by ts, tag,
+  tiebreak rows unbounded preceding``) computes the running (count,
+  decimal-exact sum) that each boundary row reads off.
+  ``agg_at(end) - agg_at(start_i)`` is window i's aggregate.  Cost: ONE
+  Exchange total (plan-asserted) — the fill hash-partitions by the key,
+  and the closing per-probe hash aggregation groups by the key and the
+  probe's number, so its ClusteredDistribution is satisfied without a
+  re-shuffle.  Independent of window density and of the window count:
+  the same shape at any scale.
 
   Sums accumulate as decimal(18,6) (order-independent exact addition) so
   the difference-of-cumulatives is bit-equal to a direct sum over the
@@ -89,16 +90,17 @@ def _cum_fill(probes, observations, windows, on, probe_ts, obs_ts, value, tiebre
         w_us[nme] = int(s * 1e6)
     keys = [on] if isinstance(on, str) else list(on)
     probe_cols = [c for c in probes.columns if c not in keys + [probe_ts]]
-    if not probe_cols:
-        raise ValueError("probes need an id column")
 
     _TS, _TAG, _TIE = "__pit_ts", "__pit_tag", "__pit_tie"
     _N, _S, _PAY, _K, _Q = "__pit_n", "__pit_s", "__pit_pay", "__pit_kind", "__pit_qts"
+    _ID = "__pit_id"
 
     tie_col = (
         F.col(tiebreak).cast("double") if tiebreak else F.col(value).cast("double")
     )
-    obs_side = observations.select(
+    # a NULL key joins nothing (the oracle's equi-join), so NULL-key
+    # observations must not share a fill partition with NULL-key probes
+    obs_side = observations.dropna(subset=keys).select(
         *keys,
         F.col(obs_ts).alias(_TS),
         F.lit(0).alias(_TAG),
@@ -108,36 +110,35 @@ def _cum_fill(probes, observations, windows, on, probe_ts, obs_ts, value, tiebre
         F.struct(
             F.col(obs_ts).alias("mts"), F.col(value).cast("double").alias("mval")
         ).alias(_PAY),
-        F.lit(None).cast("int").alias(_K),
-        *[F.lit(None).cast(probes.schema[c].dataType).alias(f"__p_{c}") for c in probe_cols],
-        F.lit(None).cast(probes.schema[probe_ts].dataType).alias(_Q),
     )
-    pay_type = obs_side.schema[_PAY].dataType
-
-    def boundary(kind: int, ts_expr):
-        return probes.select(
-            *keys,
-            ts_expr.alias(_TS),
-            F.lit(1).alias(_TAG),
-            F.lit(0.0).alias(_TIE),
-            F.lit(0).cast("long").alias(_N),
-            F.lit("0").cast("decimal(18,6)").alias(_S),
-            F.lit(None).cast(pay_type).alias(_PAY),
-            F.lit(kind).alias(_K),
-            *[F.col(c).alias(f"__p_{c}") for c in probe_cols],
-            F.col(probe_ts).alias(_Q),
-        )
 
     # kind i = start boundary of windows[names[i]]; kind len(names) = the
-    # SHARED end boundary (cum at query_ts serves every horizon)
-    unioned = obs_side
-    for i, nme in enumerate(names):
-        start = boundary(
-            i, F.col(probe_ts) - F.expr(f"INTERVAL {w_us[nme]} MICROSECOND")
-        )
-        unioned = unioned.unionByName(start)
+    # SHARED end boundary (cum at query_ts serves every horizon).  Every
+    # kind comes from ONE read of the numbered probes, so all of a probe's
+    # boundary rows carry the same id and identical probe rows stay apart.
+    # The id gets its own projection: beside the generator it would be
+    # drawn once per boundary row instead of once per probe.
     end_k = len(names)
-    unioned = unioned.unionByName(boundary(end_k, F.col(probe_ts)))
+    bounds = [
+        F.struct(
+            F.lit(i).alias(_K),
+            (F.col(probe_ts) - F.expr(f"INTERVAL {w_us[nme]} MICROSECOND")).alias(_TS),
+        )
+        for i, nme in enumerate(names)
+    ] + [F.struct(F.lit(end_k).alias(_K), F.col(probe_ts).alias(_TS))]
+    boundaries = probes.withColumn(_ID, F.monotonically_increasing_id()).select(
+        *keys,
+        _ID,
+        *[F.col(c).alias(f"__p_{c}") for c in probe_cols],
+        F.col(probe_ts).alias(_Q),
+        F.lit(1).alias(_TAG),
+        F.lit(0).cast("long").alias(_N),
+        F.lit("0").cast("decimal(18,6)").alias(_S),
+        F.inline(F.array(*bounds)),
+    )
+    # the columns one side lacks are NULL on it (no tiebreak or payload
+    # on boundary rows, no kind or probe columns on observations)
+    unioned = obs_side.unionByName(boundaries, allowMissingColumns=True)
 
     # one cumulative pass: equal-ts observations sort before boundary rows
     # (tag), so the end boundary reads an INCLUSIVE cum and a start
@@ -152,6 +153,7 @@ def _cum_fill(probes, observations, windows, on, probe_ts, obs_ts, value, tiebre
         unioned.select(
             *keys,
             F.col(_K),
+            F.col(_ID),
             F.col(_Q),
             F.sum(_N).over(w_cum).alias("__cn"),
             F.sum(_S).over(w_cum).alias("__cs"),
@@ -169,7 +171,7 @@ def _cum_fill(probes, observations, windows, on, probe_ts, obs_ts, value, tiebre
         aggs.append((at(end_k, "__cn") - at(i, "__cn")).alias(f"n_{nme}"))
         aggs.append((at(end_k, "__cs") - at(i, "__cs")).alias(f"__s_{nme}"))
     picked = filled.groupBy(
-        *keys, F.col(_Q).alias(probe_ts),
+        *keys, _ID, F.col(_Q).alias(probe_ts),
         *[F.col(f"__p_{c}").alias(c) for c in probe_cols],
     ).agg(*aggs)
 
@@ -201,9 +203,8 @@ def pit_window_agg(
     with ``probe_ts - window < obs_ts <= probe_ts``.  ``tiebreak`` (an
     observation column, e.g. its event id) makes ``last_val`` deterministic
     under timestamp collisions; without it, equal-ts observations are
-    ordered by value (still deterministic, but not arrival order).  The
-    probes need at least one column besides ``on`` and ``probe_ts`` (an
-    id), which the per-probe aggregation groups by.
+    ordered by value (still deterministic, but not arrival order).
+    Identical probe rows each get their own output row.
     """
     picked, cols = _cum_fill(
         probes, observations, {"win": window}, on, probe_ts, obs_ts, value, tiebreak
@@ -315,9 +316,10 @@ def decayed_pit_features_multi(
     bucket).  Per-task work is O(rows-per-bucket^2) regardless of hot
     keys; no BroadcastNestedLoop.  A faster tau's terms zero out beyond
     its own horizon, so adding one costs two decimal aggregates, not
-    another join.  The closing per-probe aggregation groups by the SAME
-    keys the join shuffled on.  Probes with no in-horizon observation come
-    back via a final left join (count 0, null sums).
+    another join.  The join is a left join from the numbered probes, and
+    the closing aggregation groups by that number, so every probe row
+    comes back once: one with no in-horizon observation reads count 0 and
+    null sums.
 
     Exactness contract (the oracle witness): each pair term is rounded to
     ``round_to`` decimals and accumulated as decimal(18,6) — an
@@ -333,9 +335,10 @@ def decayed_pit_features_multi(
     keys = [on] if isinstance(on, str) else list(on)
     probe_cols = [c for c in probes.columns if c not in keys + [probe_ts]]
 
+    # numbered before the explode, so both bucket rows carry one id
     bp = F.floor(epoch_s(F.col(probe_ts)) / w)
-    p = probes.select(
-        *keys, probe_ts, *probe_cols,
+    p = probes.withColumn("__pid", F.monotonically_increasing_id()).select(
+        *keys, probe_ts, *probe_cols, "__pid",
         F.explode(F.array(bp, bp - 1)).alias("__bk"),
     )
     o = observations.select(
@@ -348,24 +351,21 @@ def decayed_pit_features_multi(
     cond = F.col("__bk") == F.col("__obk")
     for k in keys:
         cond = cond & (F.col(k) == F.col(f"__ok_{k}"))
-    pairs = p.join(o, cond & (dt_us >= 0) & (dt_us < max_h_us))
+    pairs = p.join(o, cond & (dt_us >= 0) & (dt_us < max_h_us), "left")
 
-    aggs = [F.count(F.lit(1)).alias("n_win")]
+    aggs = [F.count("__ots").alias("n_win")]
     for name, (tau_s, h_us) in spans.items():
         decay = F.exp(-(dt_us.cast("double") / F.lit(1e6)) / F.lit(tau_s))
         t_sum = F.round(decay * F.col("__ov"), round_to)
         t_wt = F.round(decay, round_to)
         if h_us < max_h_us:  # every joined pair is inside the largest horizon
-            t_sum = F.when(dt_us < h_us, t_sum).otherwise(F.lit(0.0))
-            t_wt = F.when(dt_us < h_us, t_wt).otherwise(F.lit(0.0))
+            # past this tau's horizon a pair adds 0; an unmatched row adds NULL
+            t_sum = F.when(dt_us < h_us, t_sum).when(dt_us >= h_us, F.lit(0.0))
+            t_wt = F.when(dt_us < h_us, t_wt).when(dt_us >= h_us, F.lit(0.0))
         aggs.append(F.sum(t_sum.cast("decimal(18,6)")).alias(f"__ds_{name}"))
         aggs.append(F.sum(t_wt.cast("decimal(18,6)")).alias(f"__dw_{name}"))
-    agg = pairs.groupBy(*keys, probe_ts, *probe_cols).agg(*aggs)
-    out = probes.join(agg, keys + [probe_ts] + probe_cols, "left")
-    cols = [
-        *keys, *probe_cols, probe_ts,
-        F.coalesce(F.col("n_win"), F.lit(0)).cast("long").alias("n_win"),
-    ]
+    out = pairs.groupBy(*keys, "__pid", probe_ts, *probe_cols).agg(*aggs)
+    cols = [*keys, *probe_cols, probe_ts, "n_win"]
     for name in spans:
         ds = F.col(f"__ds_{name}").cast("double")
         dw = F.col(f"__dw_{name}").cast("double")

@@ -650,3 +650,84 @@ def test_decayed_auto_key_counts_skips_census(spark):
     assert "FlatMapCoGroupsInPandas" in plan  # hot key found via stats
     with pytest.raises(Exception, match="census scanned observations"):
         decayed_pit_auto(p, trapped, **kw)
+
+
+# ---------------------------------------------------------------------------
+# one output row per probe row, whatever the probe columns hold
+# ---------------------------------------------------------------------------
+
+def _dup_null_probes(spark):
+    """pid 1 twice and pid NULL, one key, both observations in window."""
+    p = spark.createDataFrame(
+        [(1, "a", T0), (1, "a", T0), (None, "a", T0)],
+        "pid long, k string, query_ts timestamp",
+    )
+    o = spark.createDataFrame(
+        [("a", T0 - dt.timedelta(minutes=10), 2.0, 1),
+         ("a", T0 - dt.timedelta(minutes=20), 3.0, 2)],
+        "k string, ts timestamp, value double, oid long",
+    )
+    return p, o
+
+
+def test_window_agg_keeps_identical_and_null_probe_rows(spark):
+    """Identical probe rows are numbered apart, so 3 probes give 3 rows,
+    each reading the 2 in-window observations (one probe row each, like
+    the as-of operators)."""
+    from esa_pfa_spark.operators.pit import pit_multi_window_agg
+
+    p, o = _dup_null_probes(spark)
+    kw = dict(on="k", probe_ts="query_ts", obs_ts="ts", value="value", tiebreak="oid")
+    single = pit_window_agg(p, o, window=dt.timedelta(hours=1), **kw).collect()
+    multi = pit_multi_window_agg(
+        p, o, windows={"1h": dt.timedelta(hours=1), "15m": dt.timedelta(minutes=15)}, **kw
+    ).collect()
+    assert sorted((r["pid"] or 0) for r in single) == [0, 1, 1]
+    assert all(r["n_win"] == 2 and r["sum_win"] == 5.0 and r["last_val"] == 2.0 for r in single)
+    assert len(multi) == 3
+    assert all(r["n_1h"] == 2 and r["n_15m"] == 1 and r["sum_15m"] == 2.0 for r in multi)
+
+
+def test_decayed_counts_each_identical_and_null_probe_once(spark):
+    """Two identical probes each read their own 2 pairs (not the 4 a
+    by-value join back would sum), and a probe with a NULL probe column
+    reads the same 2 (not 0)."""
+    from esa_pfa_spark.operators.pit import decayed_pit_features, decayed_pit_features_multi
+
+    p, o = _dup_null_probes(spark)
+    kw = dict(on="k", probe_ts="query_ts", obs_ts="ts", value="value")
+    one = decayed_pit_features(p.limit(1), o, tau=dt.timedelta(hours=1), **kw).first()
+    rows = decayed_pit_features(p, o, tau=dt.timedelta(hours=1), **kw).collect()
+    assert sorted((r["pid"] or 0) for r in rows) == [0, 1, 1]
+    for r in rows:
+        assert (r["n_win"], r["decay_sum"], r["decay_wt"]) == (
+            2, one["decay_sum"], one["decay_wt"]
+        )
+    # the faster tau's horizon (30 * 10 s = 5 min) holds neither pair
+    multi = decayed_pit_features_multi(
+        p, o, taus={"1h": dt.timedelta(hours=1), "10s": dt.timedelta(seconds=10)}, **kw
+    ).collect()
+    assert len(multi) == 3
+    for r in multi:
+        assert r["n_win"] == 2 and r["decay_sum_1h"] == one["decay_sum"]
+        assert r["decay_sum_10s"] == 0.0 and r["decay_mean_10s"] is None
+
+
+def test_null_key_probe_matches_no_null_key_observation(spark):
+    """A NULL key joins nothing (the oracles' equi-join): a NULL-key
+    probe reads n = 0 even when NULL-key observations are in window."""
+    from esa_pfa_spark.operators.pit import decayed_pit_features
+
+    p = spark.createDataFrame([(1, None, T0), (2, "a", T0)], "pid long, k string, query_ts timestamp")
+    o = spark.createDataFrame(
+        [(None, T0 - dt.timedelta(minutes=10), 2.0, 1), ("a", T0 - dt.timedelta(minutes=20), 3.0, 2)],
+        "k string, ts timestamp, value double, oid long",
+    )
+    kw = dict(on="k", probe_ts="query_ts", obs_ts="ts", value="value")
+    win = {r["pid"]: r for r in pit_window_agg(
+        p, o, tiebreak="oid", window=dt.timedelta(hours=1), **kw).collect()}
+    dec = {r["pid"]: r for r in decayed_pit_features(
+        p, o, tau=dt.timedelta(hours=1), **kw).collect()}
+    assert win[1]["n_win"] == 0 and win[1]["last_val"] is None
+    assert dec[1]["n_win"] == 0 and dec[1]["decay_sum"] is None
+    assert win[2]["n_win"] == 1 and dec[2]["n_win"] == 1
