@@ -7279,9 +7279,11 @@ def q_sa_longest_dup(spark, sf_dir):
     (suffix.longest_duplicate_span over a prefix-doubling generalized
     suffix array — the Lee et al. 2022 exact-substring-dedup machinery;
     the fixed-n fingerprint spans answer one n, this answers ALL n).
-    Engine: log(max_doc_len) doubling rounds of shifted self-joins +
-    range-partitioned dense numbering (no global window, no suffix
-    materialization), then adjacent-pair LCP via JVM zip_with.  Oracle:
+    Engine: a-ary prefix refinement over key-local ranks (packed k0-token
+    key + count of smaller suffixes sharing it; doc-local lead neighbour
+    ranks, tie-group windows; no global window, no numbering, no suffix
+    materialization), then the LCP of adjacent pairs inside tied key
+    groups via JVM zip_with.  Oracle:
     DuckDB sorts the materialized suffix lists directly (lexicographic
     list ORDER BY — the naive small-scale construction) and takes the
     max adjacent LCP; span_fp = min md5 across max-ties, well-defined
@@ -7291,7 +7293,8 @@ def q_sa_longest_dup(spark, sf_dir):
     from esa_pfa_spark.operators.tokens import DEFAULT_VOCAB
 
     # the portable tokenizer's vocab bound lets the doubling start from
-    # 4-token packed keys (k0 = floor(62/log2(V+2))) instead of 2
+    # 4-token packed keys (k0 = the largest k with (V+1)^k <= 2^63-1)
+    # instead of 2
     return longest_duplicate_span(
         _tokenized_docs_w(spark, sf_dir), max_token=DEFAULT_VOCAB - 1
     )

@@ -13,8 +13,9 @@ docstring).  For DISTINCT inputs row-position == dense_rank, so the
 result is bit-identical to the SQL oracle's
 ``dense_rank() OVER (ORDER BY col) - 1``.  The same primitive places
 documents in a packed token stream (``tokens.pack_offsets``, a weighted
-sum) and numbers the suffix array's positions in packed-key order
-(``suffix.suffix_order``, a row index).  The row index is one JVM
+sum) and numbers the explicit suffix array in final-rank order
+(``suffix.suffix_order``, a row index); the exact-substring statistics
+rank suffixes key-locally and number nothing.  The row index is one JVM
 projection; only the weighted sum crosses to Python.
 See ``dataset.deterministic_shuffle`` for the content-defined-bucket
 variant used when the key distribution is known-uniform.

@@ -577,11 +577,10 @@ def test_global_cumsum_row_index_stays_in_the_jvm(spark):
     release_pin(running)
 
 
-def test_suffix_ranks_single_range_exchange(spark, monkeypatch):
-    """The initial suffix ranks (min row index and tie count per packed
-    key) read the range partitioning ``global_cumsum`` pinned: that one
-    range exchange is the only one in the plan — no count aggregate and
-    no join back."""
+def test_suffix_ranks_single_hash_exchange(spark, monkeypatch):
+    """The initial key-local suffix ranks (tie count per packed key) plan
+    exactly one exchange, hash-partitioned on the packed key, and read no
+    cached relation: no numbering pin, no count aggregate, no join back."""
     from esa_pfa_spark.operators import suffix
 
     plans = []
@@ -596,6 +595,7 @@ def test_suffix_ranks_single_range_exchange(spark, monkeypatch):
         [(1, [3, 1, 2, 1]), (2, [1, 2, 1])], "doc_id long, tokens array<int>"
     )
     assert suffix.suffix_order(docs).count() == 7
-    outer, pinned = plans[0].split("InMemoryRelation", 1)
-    assert n_exchanges(outer) == 0, plans[0]
-    assert set(re.findall(r"Exchange (\w+)", pinned)) == {"rangepartitioning"}, plans[0]
+    assert re.findall(r"Exchange (\w+)\((\w+)#", plans[0]) == [
+        ("hashpartitioning", "__g")
+    ], plans[0]
+    assert "InMemoryRelation" not in plans[0], plans[0]

@@ -28,7 +28,7 @@ def test_session_carries_codegen_cache_size(spark):
 def test_warm_dedup_exact_pass_compiles_nothing(spark, tmp_path, capsys, monkeypatch):
     """A second identical ``dedup-exact`` pass reuses every class the
     first one generated: the JVM's compile count does not move.  Two
-    documents share a 40-token run, longer than the 24 tokens the first
+    documents share a 40-token run, longer than the 32 tokens the first
     refinement round compares, so the suffix array needs 2 rounds."""
     from esa_pfa_spark import cli
     from esa_pfa_spark.operators import suffix

@@ -193,7 +193,7 @@ def test_cli_dedup_exact_end_to_end(spark, tmp_path, capsys, monkeypatch):
     """dedup-exact subcommand: per-doc ExactSubstr coverage parquet +
     corpus summary; a planted 6-token shared run is found at
     --min-len 6 and ignored at --min-len 7.  Coverage and the longest
-    duplicate come from ONE suffix-array build."""
+    duplicate come from ONE suffix rank build."""
     from esa_pfa_spark import cli
     from esa_pfa_spark.operators import suffix
 
@@ -207,13 +207,13 @@ def test_cli_dedup_exact_end_to_end(spark, tmp_path, capsys, monkeypatch):
     _write_texts(spark, src, texts)
 
     builds = []
-    real_suffix_order = suffix.suffix_order
+    real_ranks = suffix._suffix_ranks
 
-    def counting_suffix_order(*a, **kw):
+    def counting_ranks(*a, **kw):
         builds.append(1)
-        return real_suffix_order(*a, **kw)
+        return real_ranks(*a, **kw)
 
-    monkeypatch.setattr(suffix, "suffix_order", counting_suffix_order)
+    monkeypatch.setattr(suffix, "_suffix_ranks", counting_ranks)
     out = tmp_path / "cov6"
     cli.main(["dedup-exact", "--input", str(src), "--out", str(out),
               "--min-len", "6"])

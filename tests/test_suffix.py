@@ -292,3 +292,86 @@ def test_long_single_token_run(spark):
     assert [(r["dup_len"], r["span_fp"]) for r in longest.collect()] == [
         _ref_longest_dup(docs)
     ]
+
+
+@pytest.mark.parametrize(
+    "docs, L, max_token",
+    [
+        (_random_docs(7, 12, 4, 1, 30), 1, 2**31 - 1),
+        (_random_docs(7, 12, 4, 1, 30), 2, 2**31 - 1),
+        (_random_docs(13, 10, 3, 2, 25), 4, 3),
+        ({1: [1, 2, 3], 2: [1, 2, 4]}, 2, 10),
+        ({1: [5, 7, 8], 2: [9, 7, 8]}, 2, 10),
+        ({1: [1, 2], 2: [3, 4]}, 1, 10),
+        ({1: [1, 2]}, 1, 2**31 - 1),
+        ({1: [7]}, 1, 2**31 - 1),
+        ({1: [7], 2: []}, 1, 10),
+        ({1: []}, 1, 2**31 - 1),
+    ],
+    ids=[
+        "min_len1", "min_len2", "min_len4_k0_27", "prefix_below_k0",
+        "identical_short_ends", "two_docs_no_repeat", "one_doc_no_repeat",
+        "one_suffix", "one_suffix_and_empty_doc", "only_empty_doc",
+    ],
+)
+def test_pairs_across_key_groups(spark, docs, L, max_token):
+    """Adjacent suffixes whose k0-token keys differ share fewer than k0
+    tokens: a coverage threshold below k0, a longest repeat shorter than
+    k0, identical suffixes shorter than k0 that end two documents and
+    the degenerate corpora still give the references' answers."""
+    df = _df(spark, docs)
+    cov, longest = exact_substring_audit(df, min_len=L, max_token=max_token)
+    want_cov = _ref_coverage(docs, L)
+    want_longest = [_ref_longest_dup(docs)] if sum(map(len, docs.values())) > 1 else []
+    for c, top in (
+        (cov, longest),
+        (duplicate_coverage(df, min_len=L, max_token=max_token),
+         longest_duplicate_span(df, max_token=max_token)),
+    ):
+        assert {r["doc_id"]: r["dup_tokens"] for r in c.collect()} == want_cov
+        assert [(r["dup_len"], r["span_fp"]) for r in top.collect()] == want_longest
+
+
+def test_audit_compares_only_the_duplicate_mass(spark, monkeypatch):
+    """One planted 30-token run in two of 20 documents: the checkpointed
+    pairs frame holds one row per tied suffix except the least of its
+    key group — (tied positions - tied key groups), not T - 1 — and the
+    audit runs no global numbering."""
+    from collections import Counter
+
+    from esa_pfa_spark.operators import suffix
+
+    rng = random.Random(5)
+    docs = {
+        d: [rng.randrange(50_000) for _ in range(rng.randrange(40, 80))]
+        for d in range(20)
+    }
+    run = [rng.randrange(50_000) for _ in range(30)]
+    docs[3][10:10] = run
+    docs[11][5:5] = run
+    k0 = 4  # (50256 + 2)^4 <= 2^63 - 1 < (50256 + 2)^5
+    keys = Counter(tuple(t[o:o + k0]) for t in docs.values() for o in range(len(t)))
+    tied = [n for n in keys.values() if n > 1]
+    n_pos = sum(len(t) for t in docs.values())
+
+    def no_numbering(*a, **kw):
+        raise AssertionError("global_cumsum called")
+
+    checkpoints = []
+    real = suffix._checkpoint_observed
+
+    def spy(df, **aggs):
+        checkpoints.append(real(df, **aggs))
+        return checkpoints[-1]
+
+    monkeypatch.setattr(suffix, "global_cumsum", no_numbering)
+    monkeypatch.setattr(suffix, "_checkpoint_observed", spy)
+    cov, longest = exact_substring_audit(_df(spark, docs), min_len=20, max_token=50256)
+    monkeypatch.undo()
+
+    pairs = checkpoints[-1][0]
+    assert pairs.count() == sum(tied) - len(tied) < (n_pos - 1) / 20
+    assert {r["doc_id"]: r["dup_tokens"] for r in cov.collect()} == _ref_coverage(docs, 20)
+    assert [(r["dup_len"], r["span_fp"]) for r in longest.collect()] == [
+        _ref_longest_dup(docs)
+    ]
