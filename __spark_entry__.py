@@ -13,7 +13,8 @@ Portability conventions (verified Spark 4.1 vs DuckDB):
     exact addition) then back to double;
   * hashing is md5 (bit-identical across engines);
   * word split = single space; percentiles = linear interpolation
-    (Spark percentile == DuckDB quantile_cont);
+    (Spark percentile == DuckDB quantile_cont up to an ulp; an oracle whose
+    result compares against a percentile uses _sql_percentile);
   * deterministic sampling/tie-breaks use integer arithmetic, never rand().
 """
 
@@ -78,6 +79,17 @@ def _r6(c):
 def _dsum(c):
     """Order-independent sum: per-row double -> decimal(18,6) -> exact sum -> double."""
     return F.sum(c.cast("decimal(18,6)")).cast("double")
+
+
+def _sql_percentile(vs: str, q: str) -> str:
+    """Spark's exact ``percentile(x, q)`` over the sorted DuckDB list ``vs``.
+    Unlike ``quantile_cont`` it never interpolates between equal neighbours,
+    which can land 1 ulp off a tied value and flip a ``>= edge`` test."""
+    pos = f"((len({vs}) - 1) * {q})"
+    lo = f"{vs}[CAST(floor({pos}) AS BIGINT) + 1]"
+    hi = f"{vs}[CAST(ceil({pos}) AS BIGINT) + 1]"
+    return (f"CASE WHEN {lo} = {hi} THEN {lo} "
+            f"ELSE (ceil({pos}) - {pos}) * {lo} + ({pos} - floor({pos})) * {hi} END")
 
 
 # ---------------------------------------------------------------------------
@@ -1089,11 +1101,12 @@ JOIN sig sb ON sb.doc_id = c.doc_id_b
 
 
 def q_dedup_survivors(spark, sf_dir):
-    """Survivor selection over the MinHash-LSH candidate pairs: clusters
-    by alternating large-star/small-star connected components (O(log n)
-    rounds — see dedup.graph_components), canonical = cluster-min id."""
+    """Survivor selection over the MinHash-LSH band blocks: clusters by
+    alternating large-star/small-star connected components (O(log n)
+    rounds — see dedup.graph_components) over the blocks' star edges,
+    canonical = cluster-min id."""
     docs = _ldw(spark, sf_dir, "documents")
-    return DD.dedup_survivors(docs, DD.minhash_band_candidates(docs))
+    return DD.dedup_survivors(docs, DD.minhash_band_edges(docs))
 
 
 SQL_DEDUP_SURVIVORS = """
@@ -5365,7 +5378,7 @@ def q_dedup_best_survivors(spark, sf_dir):
     Argmax rides a struct-max partial agg, no window/sort."""
     docs = _ld(spark, sf_dir, "documents")
     return DD.dedup_survivors_by_score(
-        docs, DD.minhash_band_candidates(docs), score="n_chars"
+        docs, DD.minhash_band_edges(docs), score="n_chars"
     )
 
 
@@ -5507,7 +5520,7 @@ def q_ccnet_buckets(spark, sf_dir):
     return ccnet_ppl_buckets(_ld(spark, sf_dir, "documents"))
 
 
-SQL_CCNET_BUCKETS = """
+SQL_CCNET_BUCKETS = f"""
 WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
 freq AS (SELECT w, count(*) AS wc FROM w GROUP BY 1),
 tot AS (SELECT count(*) AS n_total FROM w),
@@ -5520,9 +5533,9 @@ sc AS (SELECT doc_id,
 j AS (SELECT sc.doc_id, d.source, sc.n_words, sc.avg_logprob
       FROM sc JOIN documents d USING (doc_id)),
 e AS (SELECT source,
-             quantile_cont(avg_logprob, 1.0/3) AS e1,
-             quantile_cont(avg_logprob, 2.0/3) AS e2
-      FROM j GROUP BY source)
+             {_sql_percentile("vs", "(1.0/3)")} AS e1,
+             {_sql_percentile("vs", "(2.0/3)")} AS e2
+      FROM (SELECT source, list_sort(list(avg_logprob)) AS vs FROM j GROUP BY source))
 SELECT j.doc_id, j.source, j.n_words, j.avg_logprob,
        CASE WHEN j.avg_logprob >= e.e2 THEN 'head'
             WHEN j.avg_logprob >= e.e1 THEN 'middle'
@@ -5652,9 +5665,9 @@ sc AS (SELECT doc_id,
        FROM w2 JOIN freq USING (w) CROSS JOIN tot GROUP BY doc_id),
 scj AS (SELECT sc.doc_id, g.source, sc.avg_logprob FROM sc JOIN gated g USING (doc_id)),
 edges AS (SELECT source,
-                 quantile_cont(avg_logprob, 1.0/3) AS e1,
-                 quantile_cont(avg_logprob, 2.0/3) AS e2
-          FROM scj GROUP BY source),
+                 {_sql_percentile("vs", "(1.0/3)")} AS e1,
+                 {_sql_percentile("vs", "(2.0/3)")} AS e2
+          FROM (SELECT source, list_sort(list(avg_logprob)) AS vs FROM scj GROUP BY source)),
 tiered AS (
   SELECT g.*, CASE WHEN s.avg_logprob >= e.e2 THEN 'head'
                    WHEN s.avg_logprob >= e.e1 THEN 'middle'
@@ -5715,12 +5728,12 @@ def q_cluster_safe_split(spark, sf_dir):
     """Leak-free split assignment (dataset.cluster_safe_split): the
     near-dup cluster canonical, not the raw doc id, feeds the md5 split —
     every duplicate-cluster member lands in the same split, so
-    split_leakage over the same pairs is zero by construction."""
+    split_leakage over the candidate pairs is zero by construction."""
     from esa_pfa_spark.operators.dataset import cluster_safe_split
 
     docs = _ld(spark, sf_dir, "documents")
     return cluster_safe_split(
-        docs, DD.minhash_band_candidates(docs),
+        docs, DD.minhash_band_edges(docs),
         weights={"train": 0.8, "val": 0.1, "test": 0.1},
     )
 

@@ -473,25 +473,16 @@ def cluster_safe_split(
     near-duplicate in train by construction; ``split_leakage`` over the
     same pair list returns zero rows (tested).
 
-    Shape: components over the pair list (graph_components, O(log n)
-    star contraction), the |docs-in-pairs|-row cluster map broadcast-left-
-    joined onto the corpus, then the map-only md5 split on the canonical.
-    Returns ``(id_col, canonical_doc_id, split)``."""
-    from esa_pfa_spark.operators.dedup import graph_components
+    ``pairs`` is any edge list with the same clusters — candidate pairs or
+    ``dedup.minhash_band_edges``' star edges.  Shape: the cluster map of
+    ``dedup.dedup_survivors`` (components, broadcast-left-joined onto the
+    corpus), then the map-only md5 split on the canonical.  Returns
+    ``(id_col, canonical_doc_id, split)``."""
+    from esa_pfa_spark.operators.dedup import dedup_survivors
 
-    comp = graph_components(pairs, src=f"{id_col}_a", dst=f"{id_col}_b").select(
-        F.col("id").alias(id_col), F.col("component").alias("canonical_doc_id")
-    )
-    mapped = (
-        docs.select(id_col)
-        .join(comp, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("canonical_doc_id", F.col(id_col)).alias("canonical_doc_id"),
-        )
-    )
     return hash_split(
-        mapped, weights, id_col="canonical_doc_id", seed=seed, out_col=out_col
+        dedup_survivors(docs, pairs, id_col=id_col),
+        weights, id_col="canonical_doc_id", seed=seed, out_col=out_col,
     ).select(id_col, "canonical_doc_id", out_col)
 
 

@@ -5,12 +5,13 @@ LSH banding, SimHash.  Everything is built-in DataFrame functions; the
 hashing primitive is md5 (bit-identical across Spark / DuckDB / Python,
 so every operator here has an exact SQL oracle).
 
-Scale notes (100 TB): exact dedup is one hash-partitioned groupBy on the
-digest.  The shingle self-join is quadratic ONLY within a shingle bucket —
-identical to the LSH-banding shape production systems use; hot shingles
-(stop-shingles) should be dropped with a frequency cap before the join
-(df filter on shingle doc-frequency), which keeps bucket sizes bounded.
-MinHash banding reduces the join to signature-equality buckets.
+One blocking primitive (``_blocks``: block size + least id per key, a
+size bound) serves every pair builder here and ``tokens.winnow_dup_pairs``.
+Pairs (``_block_pairs``) are its one a < b self equi-join, quadratic ONLY
+within a block; star edges (``_block_star``, least id -> member) need no
+self-join and have the same connected components (Kiveris et al., SoCC
+2014), so survivor selection reads ``minhash_band_edges``: n - 1 edges
+for an exact-duplicate cluster of n docs, not n(n-1)/2 pairs.
 """
 
 from __future__ import annotations
@@ -50,7 +51,64 @@ def shingles(df: DataFrame, text_col: str = "text", k: int = SHINGLE_K) -> DataF
     )
 
 
+def _blocks(members: DataFrame, id_col: str, key_col: str, max_size: int | None = None) -> DataFrame:
+    """The blocking primitive: ``(id_col, key_col)`` member rows -> the
+    members of every block (rows sharing a key) with at most ``max_size``
+    members, each tagged with its block's size ``__n`` and least id
+    ``__lo``.  One groupBy(key) with map-side partial count/min, joined
+    back: a hot key is counted map-side and streams through the join probe
+    (AQE-skew-splittable, no per-key sort)."""
+    stats = members.groupBy(key_col).agg(
+        F.count(F.lit(1)).alias("__n"), F.min(id_col).alias("__lo")
+    )
+    if max_size is not None:
+        stats = stats.filter(F.col("__n") <= max_size)
+    return members.select(id_col, key_col).join(stats, key_col)
+
+
+def _block_pairs(blocks: DataFrame, id_col: str, key_col: str, a: str, b: str) -> DataFrame:
+    """Every pair of ``_blocks`` members sharing a block, ``a < b``, with
+    ``n_shared`` = the number of blocks they share.  Singleton blocks
+    cannot pair, so they are pruned before the self equi-join."""
+    core = blocks.filter(F.col("__n") >= 2)
+    l = core.select(F.col(id_col).alias(a), key_col)
+    r = core.select(F.col(id_col).alias(b), key_col)
+    return (
+        l.join(r, key_col)
+        .filter(F.col(a) < F.col(b))
+        .groupBy(a, b)
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+    )
+
+
+def _block_star(blocks: DataFrame, id_col: str, a: str, b: str) -> DataFrame:
+    """Star edges ``(least id, member)`` of every ``_blocks`` block: n - 1
+    per block, each with ``a < b``; same connected components as the
+    block's pairs, without the self-join."""
+    return blocks.filter(F.col(id_col) != F.col("__lo")).select(
+        F.col("__lo").alias(a), F.col(id_col).alias(b)
+    )
+
+
 MAX_SHINGLE_FREQ = 1000
+
+
+def _shingle_overlap(df: DataFrame, text_col: str, max_shingle_freq: int | None) -> DataFrame:
+    """``(doc_id_a, doc_id_b, i, sa, sb)`` for every doc pair sharing a
+    k-shingle: ``i`` shared shingles, ``sa``/``sb`` the per-doc shingle
+    counts.  Shingles in more than ``max_shingle_freq`` docs are dropped
+    from the intersection AND the sizes; df=1 shingles count in the sizes
+    but never reach the self-join."""
+    blocks = _blocks(shingles(df, text_col), "doc_id", "shingle", max_shingle_freq)
+    sizes = blocks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("s"))
+    inter = _block_pairs(blocks, "doc_id", "shingle", "doc_id_a", "doc_id_b")
+    sa = sizes.select(F.col("doc_id").alias("doc_id_a"), F.col("s").alias("sa"))
+    sb = sizes.select(F.col("doc_id").alias("doc_id_b"), F.col("s").alias("sb"))
+    return (
+        inter.withColumnRenamed("n_shared", "i")
+        .join(sa, "doc_id_a")
+        .join(sb, "doc_id_b")
+    )
 
 
 def ngram_jaccard_pairs(
@@ -58,15 +116,14 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     threshold: float = 0.2,
     max_shingle_freq: int | None = MAX_SHINGLE_FREQ,
-    skew_safe: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by k-shingle Jaccard >= threshold.
 
-    Plan shape: shingle table -> ONE doc-frequency pass fusing the
-    stop-shingle cap AND the singleton prune -> self equi-join on shingle
-    -> count intersections -> join per-doc sizes -> ratio filter.  The
-    equi-join is hash-partitioned by shingle; the frequency cap bounds
-    per-bucket fan-out, so the plan scales linearly in total shingle count.
+    Plan shape: ``_shingle_overlap`` (the blocking primitive over
+    shingles: ONE doc-frequency pass fusing the stop-shingle cap AND the
+    singleton prune -> shingle self equi-join -> per-doc sizes) -> ratio
+    filter.  The cap bounds per-bucket fan-out, so the plan scales
+    linearly in total shingle count.
 
     NOT a silent cap: shingles appearing in more than ``max_shingle_freq``
     docs ("of the and"-style stop-shingles) are EXCLUDED from both the
@@ -75,52 +132,10 @@ def ngram_jaccard_pairs(
     applies the identical cap).  Without it a hot shingle's bucket emits
     O(df^2) pairs — at web scale a single stop-shingle with df=10^8 would
     attempt 10^16 pairs.  Pass ``max_shingle_freq=None`` to uncap (only
-    sane for small oracle runs).
-
-    Singleton shingles (df=1) cannot contribute to any intersection, so
-    they are dropped before the self-join; the per-doc sizes keep them for
-    the union term, so the result is identical.  On web corpora most
-    shingles are singletons — this prunes the join's dominant cost.
-
-    ``skew_safe`` picks how doc-frequency is computed:
-      * True (default): groupBy(shingle) partial-agg + equi-join back —
-        a hot stop-shingle is counted map-side (tiny shuffle) and streams
-        through the join probe (AQE-skew-splittable, no per-key state).
-        The right default when mega-df shingles are expected, i.e. any
-        uncurated web corpus.
-      * False: partition-by-shingle window count — halves scans/shuffles
-        (14 Exchanges/8 scans -> 10/4; 3.7s -> 1.7s warm at sf0.1) but a
-        df=10^8 shingle then SORTS in a single window task (spill /
-        straggler).  Only for corpora with known-bounded shingle df."""
-    from pyspark.sql import Window as W
-
-    sh = shingles(df, text_col)
-    cap = max_shingle_freq
-    if skew_safe:
-        freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-        if cap is not None:
-            freq = freq.filter(F.col("__df") <= cap)
-        shj = sh.join(freq, "shingle")
-    else:
-        shj = sh.withColumn("__df", F.count(F.lit(1)).over(W.partitionBy("shingle")))
-        if cap is not None:
-            shj = shj.filter(F.col("__df") <= cap)
-    sizes = shj.groupBy("doc_id").agg(F.count(F.lit(1)).alias("s"))
-    core = shj.filter(F.col("__df") >= 2).select("doc_id", "shingle")
-    a = core.select(F.col("doc_id").alias("doc_id_a"), "shingle")
-    b = core.select(F.col("doc_id").alias("doc_id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-        .groupBy("doc_id_a", "doc_id_b")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_id_a"), F.col("s").alias("sa"))
-    sb = sizes.select(F.col("doc_id").alias("doc_id_b"), F.col("s").alias("sb"))
+    sane for small oracle runs)."""
     jac = F.col("i") * 1.0 / (F.col("sa") + F.col("sb") - F.col("i"))
     return (
-        inter.join(sa, "doc_id_a")
-        .join(sb, "doc_id_b")
+        _shingle_overlap(df, text_col, max_shingle_freq)
         .filter(jac >= threshold)
         .select("doc_id_a", "doc_id_b", F.round(jac, 6).alias("jaccard"))
     )
@@ -187,37 +202,43 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", n_hashes: int = N_
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_band_candidates(
-    df: DataFrame, text_col: str = "text", max_band_freq: int | None = None
-) -> DataFrame:
-    """LSH banding over the 6-hash signature (2 bands x 3 rows): candidate
-    pairs agree on ALL hashes of at least one band.  The band join is an
-    equi-join on the concatenated band key — the bucket-join scale path.
-
-    Hot-bucket caveat (same class as the n-gram stop-shingle blowup): an
-    EXACT-duplicate cluster of n docs shares every band, so its bucket
-    emits O(n²) pairs.  The standard pipeline order is exact_dedup FIRST
-    (collapsing identical docs to one canonical id), after which band
-    buckets hold only near-dups and stay small.  ``max_band_freq`` is the
-    belt-and-braces cap for corpora where that ordering can't be assumed:
-    buckets with more than that many docs are dropped (and should be
-    routed to exact dedup instead) — mirror any cap in the oracle."""
+def _band_blocks(df: DataFrame, text_col: str) -> DataFrame:
+    """LSH band blocks over the 6-hash signature (2 bands x 3 rows): one
+    ``(doc_id, bk)`` member row per doc and band.  The key carries its band
+    tag (``"0|…"``, ``"1|…"``) so that equal hash triples in DIFFERENT
+    bands never share a block."""
     sig = minhash_signatures(df, text_col)
-    bands = [("band0", ["mh0", "mh1", "mh2"]), ("band1", ["mh3", "mh4", "mh5"])]
-    outs = []
-    for name, cols in bands:
-        keyed = sig.select("doc_id", F.concat_ws("|", *cols).alias("bk"))
-        if max_band_freq is not None:
-            freq = keyed.groupBy("bk").agg(F.count(F.lit(1)).alias("__bf"))
-            keyed = keyed.join(
-                freq.filter(F.col("__bf") <= max_band_freq).select("bk"), "bk"
-            )
-        l = keyed.select(F.col("doc_id").alias("doc_id_a"), "bk")
-        r = keyed.select(F.col("doc_id").alias("doc_id_b"), "bk")
-        outs.append(
-            l.join(r, "bk").filter(F.col("doc_id_a") < F.col("doc_id_b")).select("doc_id_a", "doc_id_b")
-        )
-    return outs[0].unionByName(outs[1]).distinct()
+    bands = [["mh0", "mh1", "mh2"], ["mh3", "mh4", "mh5"]]
+    keys = F.array(
+        *[F.concat_ws("|", F.lit(str(i)), *cols) for i, cols in enumerate(bands)]
+    )
+    return _blocks(sig.select("doc_id", F.explode(keys).alias("bk")), "doc_id", "bk")
+
+
+def minhash_band_candidates(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """LSH banding over the 6-hash signature (2 bands x 3 rows): candidate
+    pairs agree on ALL hashes of at least one band.  One self equi-join
+    over the band-tagged block keys — the bucket-join scale path; a pair
+    agreeing on both bands is emitted once.
+
+    An EXACT-duplicate cluster of n docs shares every band, so it emits
+    n(n-1)/2 pairs.  Callers that need real pairs (exact verification,
+    Jaccard estimates, leakage audits) pay that; callers that only need
+    the duplicate clusters read ``minhash_band_edges`` instead."""
+    pairs = _block_pairs(_band_blocks(df, text_col), "doc_id", "bk", "doc_id_a", "doc_id_b")
+    return pairs.select("doc_id_a", "doc_id_b")
+
+
+def minhash_band_edges(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Star edges ``(doc_id_a, doc_id_b)`` of the same LSH band blocks as
+    ``minhash_band_candidates``: each block's least doc id joined to every
+    other member, distinct across the two bands.  Their connected
+    components equal the candidate pairs' (a block's star and its clique
+    connect the same docs), so ``dedup_survivors`` /
+    ``dedup_survivors_by_score`` give the same survivors from either — but
+    an exact-duplicate cluster of n docs is n - 1 edges here, not
+    n(n-1)/2 pairs, and no self-join runs."""
+    return _block_star(_band_blocks(df, text_col), "doc_id", "doc_id_a", "doc_id_b").distinct()
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -527,28 +548,10 @@ def ngram_containment_pairs(
     is of the SMALL (capped-set) side in the big one — the direction that
     detects inclusion; ties in size keep doc_id_small < doc_id_big.
 
-    Same plan skeleton and stop-shingle cap semantics as
-    ``ngram_jaccard_pairs`` (ONE df pass fusing cap + singleton prune,
-    shingle equi-join, size join back); the cap applies to both the
-    intersection and the denominators, documented not silent."""
-    sh = shingles(df, text_col)
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    if max_shingle_freq is not None:
-        freq = freq.filter(F.col("__df") <= max_shingle_freq)
-    shj = sh.join(freq, "shingle")
-    sizes = shj.groupBy("doc_id").agg(F.count(F.lit(1)).alias("s"))
-    core = shj.filter(F.col("__df") >= 2).select("doc_id", "shingle")
-    a = core.select(F.col("doc_id").alias("doc_id_a"), "shingle")
-    b = core.select(F.col("doc_id").alias("doc_id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-        .groupBy("doc_id_a", "doc_id_b")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_id_a"), F.col("s").alias("sa"))
-    sb = sizes.select(F.col("doc_id").alias("doc_id_b"), F.col("s").alias("sb"))
-    j = inter.join(sa, "doc_id_a").join(sb, "doc_id_b")
+    Same ``_shingle_overlap`` and stop-shingle cap semantics as
+    ``ngram_jaccard_pairs``: the cap applies to both the intersection and
+    the denominators, documented not silent."""
+    j = _shingle_overlap(df, text_col, max_shingle_freq)
     small_is_a = (F.col("sa") < F.col("sb")) | (
         (F.col("sa") == F.col("sb")) & (F.col("doc_id_a") < F.col("doc_id_b"))
     )

@@ -41,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from esa_pfa_spark.operators.dedup import _block_pairs, _blocks
 from esa_pfa_spark.operators.dictionary import global_cumsum
 
 DEFAULT_VOCAB = 32768
@@ -437,7 +438,6 @@ def dup_ngram_summary(
     min_count: int = 2,
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
-    skew_safe: bool = True,
 ) -> DataFrame:
     """Cross-document duplicated-substring detection at token n-gram
     granularity (the exact-substring training-data dedup pass, approximated
@@ -452,45 +452,21 @@ def dup_ngram_summary(
     Plan shape (100 TB): window fingerprints are one explode (xn_tok rows)
     -> corpus-frequency filter -> per-doc span merge via a doc_id-
     partitioned window (gaps-and-islands).  No all-pairs comparison
-    anywhere.  ``skew_safe`` (default True) computes the frequency filter
-    as groupBy(fp) partial-agg + equi-join back: a boilerplate fingerprint
-    duplicated 10^7x (license headers are exactly this) is counted
-    map-side and streams through the AQE-skew-splittable join probe.
-    ``skew_safe=False`` uses a partition-by-fp window count instead —
-    halves scans/shuffles (3 Exchanges/2 scans -> 2/1, 7.2s -> 4.2s cold
-    at sf0.1) but sorts each fingerprint's rows in ONE window task; only
-    for corpora with known-bounded duplication.  Measured trade-off on a
-    hot-fingerprint spam corpus: BENCH/SKEW_TOKENS.md (the skew-safe form
-    is worst-case insurance — AQE-splittable straggler — not a local
-    speedup)."""
+    anywhere.  The frequency filter is groupBy(fp) partial-agg + equi-join
+    back: a boilerplate fingerprint duplicated 10^7x (license headers are
+    exactly this) is counted map-side and streams through the
+    AQE-skew-splittable join probe, where a partition-by-fp window count
+    would sort it in ONE task (BENCH/SKEW_TOKENS.md)."""
     wins = ngram_fps(df, n=n, tokens_col=tokens_col, id_col=id_col)
-    from pyspark.sql import Window as W
+    dup_fp = (
+        wins.groupBy("fp")
+        .agg(F.count(F.lit(1)).alias("occ"))
+        .filter(F.col("occ") >= min_count)
+        .select("fp")
+    )
+    dw = wins.join(dup_fp, "fp").select(id_col, "__n_tok", "s")
 
-    if skew_safe:
-        # groupBy(fp) + equi-join back: two shuffles / two source scans, but
-        # the join is AQE-skew-split — use when one fingerprint can dominate
-        # (boilerplate / license-header 8-grams duplicated millions of times,
-        # which would pile into a single window task below).
-        dup_fp = (
-            wins.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("occ"))
-            .filter(F.col("occ") >= min_count)
-            .select("fp")
-        )
-        dw = wins.join(dup_fp, "fp").select(id_col, "__n_tok", "s")
-    else:
-        # Corpus-frequency filter as a partition-by-fp window count: ONE
-        # shuffle of the window set and ONE source scan, vs the skew_safe
-        # form's two of each (measured 3 Exchanges / 2 scans -> 2 / 1 and
-        # 7.2s -> 4.2s at sf0.1).  Hot-fp caveat documented above.
-        occ = F.count(F.lit(1)).over(W.partitionBy("fp"))
-        dw = (
-            wins.withColumn("__occ", occ)
-            .filter(F.col("__occ") >= min_count)
-            .select(id_col, "__n_tok", "s")
-        )
-
-    byd = W.partitionBy(id_col).orderBy("s")
+    byd = Window.partitionBy(id_col).orderBy("s")
     spans = (
         dw.withColumn("__prev", F.lag("s").over(byd))
         .withColumn(
@@ -1670,8 +1646,9 @@ def winnow_dup_pairs(
     from ~2/(w+1) of the gram stream.
 
     Plan shape (100 TB): per-doc selection is in-row (no shuffle); the
-    match is fp -> groupBy partial-agg -> self-equi-join INSIDE fingerprint
-    buckets — never all-pairs.  ``max_fp_freq`` drops stop-fingerprints
+    match is the blocking primitive of ``dedup`` over fingerprints (fp ->
+    groupBy partial-agg -> self-equi-join INSIDE fingerprint buckets) —
+    never all-pairs.  ``max_fp_freq`` drops stop-fingerprints
     (ubiquitous boilerplate grams) before the join, the same skew guard as
     ``ngram_jaccard_pairs``; at the default 50 the worst bucket joins
     50x50, and dropped-fp counts are observable via ``winnow_selected_fps``
@@ -1680,22 +1657,9 @@ def winnow_dup_pairs(
     Output: ``doc_a, doc_b, n_shared`` (doc_a < doc_b).
     """
     fps = winnow_selected_fps(df, k=k, w=w, tokens_col=tokens_col, id_col=id_col)
-    keep = (
-        fps.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("__occ"))
-        .filter((F.col("__occ") >= 2) & (F.col("__occ") <= max_fp_freq))
-        .select("fp")
-    )
-    fk = fps.join(keep, "fp")
-    a = fk.select("fp", F.col(id_col).alias("doc_a"))
-    b = fk.select("fp", F.col(id_col).alias("doc_b"))
-    return (
-        a.join(b, "fp")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
+    return _block_pairs(
+        _blocks(fps, id_col, "fp", max_fp_freq), id_col, "fp", "doc_a", "doc_b"
+    ).filter(F.col("n_shared") >= min_shared)
 
 
 def token_rank_drift(

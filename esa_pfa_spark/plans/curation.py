@@ -12,9 +12,11 @@ entirely from this engine's operators:
 
 Order matters at scale and is the production order: the quality gate
 prunes before any join; exact dedup collapses identical docs BEFORE the
-shingle self-join so duplicate clusters cannot blow up near-dup buckets
-(see dedup.minhash_band_candidates' hot-bucket caveat); decontamination —
+shingle self-join, whose pairs are quadratic inside a shingle block, so
+duplicate clusters cannot blow up near-dup buckets; decontamination —
 the most token-expensive stage — runs LAST, over only the survivors.
+(``curate_documents_v2`` needs no exact-dedup stage: it reads clusters
+from ``dedup.minhash_band_edges``, linear in cluster size.)
 
 Every stage is a hash-partitioned groupBy/join — no global windows, no
 driver-side loops; the whole pipeline is one lazy DataFrame program.
@@ -114,8 +116,9 @@ def curate_documents_v2(
          domain isn't wholly condemned.  Vocab-bounded broadcast + tiny
          edge agg.
       3. `dedup.dedup_survivors_by_score(score=n_chars)` over
-         `minhash_band_candidates`: duplicate clusters keep the longest
-         member, not the lowest id.
+         `minhash_band_edges`: duplicate clusters keep the longest
+         member, not the lowest id.  Star edges make an exact-duplicate
+         cluster of n docs n - 1 edges, not n(n-1)/2 candidate pairs.
       4. `dataset.temperature_mixture_sample(alpha, keep_frac)` by source:
          the final corpus mix flattened toward p^alpha.
 
@@ -140,7 +143,7 @@ def curate_documents_v2(
     )
     surv = tiered.join(
         DD.dedup_survivors_by_score(
-            tiered, DD.minhash_band_candidates(tiered), score="n_chars"
+            tiered, DD.minhash_band_edges(tiered), score="n_chars"
         )
         .filter(F.col("survives"))
         .select("doc_id"),

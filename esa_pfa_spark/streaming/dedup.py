@@ -128,10 +128,10 @@ def make_bucket_pairs_fn(tolerance=None, max_per_bucket: int = 100):
                 if did in ids:
                     continue
                 if len(ids) >= max_per_bucket:
-                    # hot-bucket cap (documented, mirrors the batch
-                    # max_band_freq): a saturated bucket stops emitting —
-                    # route exact-duplicate floods to stream_exact_dedup
-                    # upstream, the same pipeline order as batch
+                    # hot-bucket cap (documented; the batch pair builder
+                    # runs uncapped and batch survivors read star edges):
+                    # a saturated bucket stops emitting — route
+                    # exact-duplicate floods to stream_exact_dedup upstream
                     continue
                 for e in ids:
                     a, b = (e, did) if e < did else (did, e)
@@ -171,8 +171,9 @@ def stream_neardup_candidates(
     ``dropDuplicatesWithinWatermark`` or in the sink.
 
     State: O(member ids per live bucket), bounded by ``max_per_bucket``
-    (saturated buckets stop emitting — the batch ``max_band_freq``
-    analog) and, with ``tolerance`` set, evicted by EventTimeTimeout once
+    (saturated buckets stop emitting; the batch operator has no cap —
+    its survivor path reads ``minhash_band_edges``, n - 1 star edges per
+    bucket, instead) and, with ``tolerance`` set, evicted by EventTimeTimeout once
     the watermark passes the bucket's last activity + tolerance (idle
     buckets hold no state; pairs then form only within the tolerance
     horizon — the same windowed-semantics division of labor as

@@ -73,3 +73,62 @@ def test_curation_v3_chain_properties(spark):
     ranked = sorted(out, key=lambda r: r["rank"])
     scores = [r["export_score"] for r in ranked]
     assert scores == sorted(scores, reverse=True)
+
+
+def test_curation_v2_matches_duckdb_on_planted_duplicate_cluster(spark, tmp_path, monkeypatch):
+    """A synthetic corpus with 300 exact copies of one gated document:
+    curate_documents_v2 equals SQL_CURATION_V2 row for row, and the
+    301-doc cluster (the copies and their original) reaches survivor
+    selection as 300 star edges, not 45,150 pairs."""
+    import re
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from __spark_entry__ import SQL_CURATION_V2
+    from esa_pfa_spark.operators import dedup as DD
+    from esa_pfa_spark.plans.curation import curate_documents_v2
+    from perfbench import gen
+
+    t = gen.curate_corpus(11, 300, 40, [2, 3, 4, 5] * 3, (30, 72), 1, 0.05)
+    n, k = t.num_rows, 300
+    base = next(r for r in t.to_pylist()
+                if len(r["text"].split(" ")) >= 30 and "#" not in r["text"]
+                and "1024" not in r["text"])
+    planted = pa.table({
+        "doc_id": pa.array(range(n, n + k), pa.int64()),
+        "text": [base["text"]] * k,
+        "lang": ["en"] * k,
+        "source": [f"src{i % 4}" for i in range(k)],
+        "n_chars": pa.array([base["n_chars"]] * k, pa.int64()),
+    })
+    path = str(tmp_path / "docs.parquet")
+    pq.write_table(pa.concat_tables([t, planted]), path)
+
+    seen = []
+    components = DD.graph_components
+
+    def spy(edge_list, *args, **kwargs):
+        seen.append(edge_list.filter(edge_list["doc_id_b"] >= n).count())
+        return components(edge_list, *args, **kwargs)
+
+    monkeypatch.setattr(DD, "graph_components", spy)
+    got = sorted(
+        (r["doc_id"], r["source"], r["ppl_bucket"], r["rate"])
+        for r in curate_documents_v2(spark.read.parquet(path)).collect()
+    )
+    assert seen == [k]  # star edges from the original to each copy
+
+    # DuckDB inlines every CTE reference; materializing each once keeps
+    # the recursive component CTE's plan small (as perfbench's reference)
+    sql = re.sub(r"^(\w+) AS \(", r"\1 AS MATERIALIZED (", SQL_CURATION_V2, flags=re.M)
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+        want = sorted(map(tuple, con.execute(sql).fetchall()))
+    finally:
+        con.close()
+    assert [r[:3] for r in got] == [r[:3] for r in want] and len(got) > 0
+    assert sum(r[0] == base["doc_id"] or r[0] >= n for r in got) <= 1
+    assert all(abs(g[3] - w[3]) < 1e-9 for g, w in zip(got, want))

@@ -36,36 +36,87 @@ def test_ngram_cap_excludes_hot_shingle_from_sizes(spark):
     assert capped == []
 
 
-def test_ngram_jaccard_skew_paths_identical(spark):
-    """The skew-safe (groupBy+join) and window-count doc-frequency paths
-    produce identical pairs, capped and uncapped."""
+def _jaccard_reference(texts, cap, threshold):
+    """Pure-Python n-gram Jaccard over capped 3-shingle sets: shingles in
+    more than ``cap`` docs leave both the intersection and the sizes."""
+    sets = {}
+    for i, t in enumerate(texts):
+        ws = t.split(" ")
+        sets[f"d{i}"] = {" ".join(ws[j:j + 3]) for j in range(len(ws) - 2)}
+    df = {}
+    for s in sets.values():
+        for sh in s:
+            df[sh] = df.get(sh, 0) + 1
+    if cap is not None:
+        sets = {d: {sh for sh in s if df[sh] <= cap} for d, s in sets.items()}
+    out = {}
+    for a in sets:
+        for b in sets:
+            i = len(sets[a] & sets[b])
+            if a < b and i and i / len(sets[a] | sets[b]) >= threshold:
+                out[(a, b)] = i / len(sets[a] | sets[b])
+    return out
+
+
+def test_ngram_jaccard_matches_python_reference(spark):
+    """The blocking-primitive plan equals a pure-Python Jaccard over the
+    same capped shingle sets, capped and uncapped."""
     texts = [
         "a b c d e f", "a b c d x y", "a b c z w v",
         "q r s t u v", "q r s t u w",
     ]
     for cap in (None, 2):
-        a = sorted(
-            map(tuple, DD.ngram_jaccard_pairs(
-                _docs(spark, texts), threshold=0.05, max_shingle_freq=cap,
-                skew_safe=True).collect())
-        )
-        b = sorted(
-            map(tuple, DD.ngram_jaccard_pairs(
-                _docs(spark, texts), threshold=0.05, max_shingle_freq=cap,
-                skew_safe=False).collect())
-        )
-        assert a == b and len(a) > 0
+        got = {
+            (r["doc_id_a"], r["doc_id_b"]): r["jaccard"]
+            for r in DD.ngram_jaccard_pairs(
+                _docs(spark, texts), threshold=0.05, max_shingle_freq=cap
+            ).collect()
+        }
+        want = _jaccard_reference(texts, cap, 0.05)
+        assert got.keys() == want.keys() and len(got) > 0
+        assert all(abs(got[k] - want[k]) < 1e-6 for k in want)
 
 
-def test_minhash_band_cap_drops_duplicate_cluster(spark):
-    """An exact-duplicate cluster shares every band; max_band_freq routes
-    it out of the band join (pipeline order: exact_dedup first)."""
-    dup = "the same exact document text here"
-    texts = [dup, dup, dup, "another quite different document body text"]
-    plain = DD.minhash_band_candidates(_docs(spark, texts)).collect()
-    assert len(plain) == 3  # the 3 duplicate pairs
-    capped = DD.minhash_band_candidates(_docs(spark, texts), max_band_freq=2).collect()
-    assert capped == []
+def test_minhash_band_edges_linear_in_cluster(spark, monkeypatch):
+    """An exact-duplicate cluster of 400 docs plus one distinct doc: the
+    bands emit 79,800 candidate pairs but 399 star edges, and every
+    survivor selection (min id, best score, the curation v2 chain) gives
+    the same rows from either."""
+    from esa_pfa_spark.plans import curation as CU
+
+    words = ("lorem ipsum dolor amet consectetur adipiscing elit sed eiusmod "
+             "tempor incididunt labore dolore magna aliqua enim minim veniam "
+             "quis nostrud exercitation ullamco laboris nisi aliquip").split()
+    dup = " ".join(words)
+    other = " ".join(reversed(words)) + " extra"
+    rows = [(i, dup, "s0", i % 7) for i in range(400)] + [(400, other, "s1", 3)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, source string, n_chars long")
+
+    edges = DD.minhash_band_edges(docs)
+    pairs = DD.minhash_band_candidates(docs)
+    assert edges.count() == 399
+    assert pairs.count() == 400 * 399 // 2
+    assert sorted(map(tuple, DD.dedup_survivors(docs, edges).collect())) == sorted(
+        map(tuple, DD.dedup_survivors(docs, pairs).collect())
+    )
+    best = DD.dedup_survivors_by_score
+    by_edges = sorted(map(tuple, best(docs, edges, score="n_chars").collect()))
+    assert by_edges == sorted(map(tuple, best(docs, pairs, score="n_chars").collect()))
+    assert [r[0] for r in by_edges if r[3]] == [6, 400]  # max n_chars, min id
+
+    seen = []
+    components = DD.graph_components
+
+    def spy(edge_list, *args, **kwargs):
+        seen.append(edge_list.count())
+        return components(edge_list, *args, **kwargs)
+
+    monkeypatch.setattr(DD, "graph_components", spy)
+    after = sorted(map(tuple, CU.curate_documents_v2(docs).collect()))
+    monkeypatch.setattr(DD, "minhash_band_edges", DD.minhash_band_candidates)
+    before = sorted(map(tuple, CU.curate_documents_v2(docs).collect()))
+    assert seen == [399, 79_800]
+    assert after == before
 
 
 def _uf_components(edges):

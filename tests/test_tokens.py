@@ -238,15 +238,37 @@ def test_dup_ngram_merges_overlapping_windows(spark):
     assert got["dup_frac"] == 1.0
 
 
-def test_dup_ngram_skew_safe_path_identical(spark):
+def _dup_ngram_reference(rows, n):
+    """Pure-Python dup_ngram_summary: windows occurring >= 2 times in the
+    corpus, merged per doc into spans (a gap > n starts a new span)."""
+    occ = {}
+    for _, t in rows:
+        for s in range(len(t) - n + 1):
+            occ[tuple(t[s:s + n])] = occ.get(tuple(t[s:s + n]), 0) + 1
+    out = []
+    for d, t in rows:
+        starts = [s for s in range(len(t) - n + 1) if occ[tuple(t[s:s + n])] >= 2]
+        if not starts:
+            continue
+        spans = [[starts[0], starts[0]]]
+        for s in starts[1:]:
+            if s - spans[-1][1] > n:
+                spans.append([s, s])
+            else:
+                spans[-1][1] = s
+        dup = sum(hi + n - lo for lo, hi in spans)
+        out.append((d, len(t), len(starts), len(spans), dup, round(dup / len(t), 6)))
+    return sorted(out)
+
+
+def test_dup_ngram_summary_matches_python_reference(spark):
     rng = np.random.default_rng(3)
     rows = [
         (f"d{i}", [int(x) for x in rng.integers(0, 6, size=30)]) for i in range(25)
     ]
     df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
-    a = sorted(map(tuple, TK.dup_ngram_summary(df, n=4, skew_safe=False).collect()))
-    b = sorted(map(tuple, TK.dup_ngram_summary(df, n=4, skew_safe=True).collect()))
-    assert a == b and len(a) > 0
+    got = sorted(map(tuple, TK.dup_ngram_summary(df, n=4).collect()))
+    assert got == _dup_ngram_reference(rows, 4) and len(got) > 0
 
 
 def test_chunking_plan_is_map_only(spark):
