@@ -92,6 +92,14 @@ def _sql_percentile(vs: str, q: str) -> str:
             f"ELSE (ceil({pos}) - {pos}) * {lo} + ({pos} - floor({pos})) * {hi} END")
 
 
+def _sql_edges(vs: str, n_bins: int) -> str:
+    """``encode.quantile_bins``' n_bins - 1 interior edges as a DuckDB list,
+    one ``_sql_percentile`` per edge at the operator's double fraction."""
+    return "[" + ", ".join(
+        _sql_percentile(vs, f"{i / n_bins!r}::DOUBLE") for i in range(1, n_bins)
+    ) + "]"
+
+
 # ---------------------------------------------------------------------------
 # Core engine semantics on the events table
 # ---------------------------------------------------------------------------
@@ -125,6 +133,9 @@ WITH c AS (SELECT event_id, user_id, ts AS query_ts FROM events WHERE event_type
 SELECT m.event_id, m.user_id, m.query_ts, m.matched_ts,
        round(p.value, 6) AS purchase_value
 FROM m LEFT JOIN p ON p.user_id=m.user_id AND p.ts=m.matched_ts
+-- purchases tied on ts: one row, the greatest value (NULL lowest), asof.py's rule
+QUALIFY row_number() OVER (PARTITION BY m.event_id
+                           ORDER BY p.ts DESC, p.value DESC NULLS LAST) = 1
 """
 
 
@@ -181,6 +192,8 @@ WITH c AS (SELECT event_id, user_id, ts AS query_ts FROM events WHERE event_type
 SELECT m.event_id, m.user_id, m.query_ts, m.matched_ts,
        round(p.value, 6) AS purchase_value
 FROM m LEFT JOIN p ON p.user_id=m.user_id AND p.ts=m.matched_ts
+QUALIFY row_number() OVER (PARTITION BY m.event_id
+                           ORDER BY p.ts DESC, p.value DESC NULLS LAST) = 1
 """
 
 
@@ -238,6 +251,9 @@ SELECT m.event_id, m.user_id, m.query_ts,
 FROM m
 LEFT JOIN p ON p.user_id=m.user_id AND p.ts=m.purchase_matched_ts
 LEFT JOIN er ON er.user_id=m.user_id AND er.ts=m.error_matched_ts
+QUALIFY row_number() OVER (PARTITION BY m.event_id
+                           ORDER BY p.ts DESC, p.value DESC NULLS LAST,
+                                    er.ts DESC, er.value DESC NULLS LAST) = 1
 """
 
 
@@ -301,6 +317,8 @@ WITH c AS (SELECT event_id, user_id, ts AS query_ts FROM events WHERE event_type
 SELECT m.event_id, m.user_id, m.query_ts, m.matched_ts,
        round(p.value, 6) AS error_value
 FROM m LEFT JOIN p ON p.user_id=m.user_id AND p.ts=m.matched_ts
+QUALIFY row_number() OVER (PARTITION BY m.event_id
+                           ORDER BY p.ts DESC, p.value DESC NULLS LAST) = 1
 """
 
 
@@ -1908,6 +1926,8 @@ SELECT m.event_id, m.user_id, m.event_type, m.query_ts, m.matched_ts,
        round(p.value, 6) AS prev_value
 FROM m LEFT JOIN p
   ON p.user_id = m.user_id AND p.event_type = m.event_type AND p.ts = m.matched_ts
+QUALIFY row_number() OVER (PARTITION BY m.event_id
+                           ORDER BY p.ts DESC, p.value DESC NULLS LAST) = 1
 """
 
 
@@ -4001,9 +4021,10 @@ def q_quantile_bins(spark, sf_dir):
     return out.select("event_id", _r6(F.col("value")).alias("value"), "bin")
 
 
-SQL_QUANTILE_BINS = """
+SQL_QUANTILE_BINS = f"""
 WITH p AS (SELECT event_id, value FROM events WHERE event_type='purchase'),
-e AS (SELECT quantile_cont(value, [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]) AS edges FROM p)
+e AS (SELECT {_sql_edges("vs", 10)} AS edges
+      FROM (SELECT list_sort(list(value) FILTER (WHERE value IS NOT NULL)) AS vs FROM p))
 SELECT p.event_id, round(p.value, 6) AS value,
        CAST(len(list_filter(e.edges, x -> p.value >= x)) AS INT) AS bin
 FROM p, e
@@ -5490,9 +5511,11 @@ def q_curriculum_order(spark, sf_dir):
     )
 
 
-SQL_CURRICULUM_ORDER = """
-WITH e AS (SELECT quantile_cont(CAST(n_chars AS DOUBLE), [0.25, 0.5, 0.75]) AS ed
-           FROM documents),
+SQL_CURRICULUM_ORDER = f"""
+WITH e AS (SELECT {_sql_edges("vs", 4)} AS ed
+           FROM (SELECT list_sort(list(CAST(n_chars AS DOUBLE))
+                                  FILTER (WHERE n_chars IS NOT NULL)) AS vs
+                 FROM documents)),
 s AS (SELECT d.doc_id, d.n_chars,
              CAST(len(list_filter(e.ed, x -> CAST(d.n_chars AS DOUBLE) >= x)) AS INT) AS stage,
              md5('cur0:' || CAST(d.doc_id AS VARCHAR)) AS sort_key
@@ -6560,7 +6583,7 @@ def q_rfm_scores(spark, sf_dir):
     return rfm_scores(_ld(spark, sf_dir, "events"))
 
 
-SQL_RFM_SCORES = """
+SQL_RFM_SCORES = f"""
 WITH per AS (SELECT user_id AS key, max(epoch_us(ts)) AS last_us,
                     count(*) AS frequency,
                     sum(CAST(value AS DECIMAL(18,6))) AS monetary
@@ -6571,9 +6594,12 @@ m AS (SELECT key,
              CAST(frequency AS BIGINT) AS frequency,
              round(CAST(monetary AS DOUBLE), 6) AS monetary
       FROM per, ref),
-er AS (SELECT quantile_cont(recency_days, [0.2,0.4,0.6,0.8]) AS e FROM m),
-ef AS (SELECT quantile_cont(frequency, [0.2,0.4,0.6,0.8]) AS e FROM m),
-em AS (SELECT quantile_cont(monetary, [0.2,0.4,0.6,0.8]) AS e FROM m)
+er AS (SELECT {_sql_edges("vs", 5)} AS e
+       FROM (SELECT list_sort(list(recency_days)) AS vs FROM m)),
+ef AS (SELECT {_sql_edges("vs", 5)} AS e
+       FROM (SELECT list_sort(list(CAST(frequency AS DOUBLE))) AS vs FROM m)),
+em AS (SELECT {_sql_edges("vs", 5)} AS e
+       FROM (SELECT list_sort(list(monetary)) AS vs FROM m))
 SELECT m.key AS user_id, m.recency_days, m.frequency, m.monetary,
        CAST(5 - len(list_filter(er.e, x -> m.recency_days >= x)) AS INT) AS r_score,
        CAST(len(list_filter(ef.e, x -> m.frequency >= x)) + 1 AS INT) AS f_score,

@@ -1,27 +1,22 @@
-"""Point-in-time (as-of) join: backward/forward, tolerance-bounded, zero
-temporal leakage.
+"""Point-in-time (as-of) join: backward/forward/nearest, tolerance-bounded,
+zero temporal leakage.
 
 Semantic parity target: the reference's tolerance-bounded sorted-merge
 pairing (pfa-bitemp-fex/.../FindPatchPairs.java:57-76) generalized to the
 probe-table form ("latest observation at or before each query timestamp,
 within tolerance").  OSS Spark has no asof-join operator, so the engine
-ships two interchangeable physical strategies:
+plans one: a tagged union.  Observation rows (tag 0) carry their payload
+as one struct, probe rows (tag 1) carry their own columns as another;
+the union is hash-partitioned on the key and each probe reads its match
+off a window over ``(key order by ts, tag)``.  One Exchange, whole-stage
+codegen, no Python — at 10^12 rows a single hash-partitioned sort per
+side, the shape a native asof operator would plan.  ``asof_join``,
+``asof_join_bitemporal`` and ``asof_lagk_join`` all read this one union.
 
-1. ``asof_join`` — pure-JVM union+window plan.  Tag observation rows 0 and
-   probe rows 1, union them, and take ``last(payload, ignorenulls=True)``
-   over ``(partition by key order by ts, tag) rows unbounded preceding``.
-   One shuffle, whole-stage codegen, no Python.  This is the default/scale
-   path: at 10^12 rows it is a single hash-partitioned sort per side,
-   identical in shape to what a native asof operator would plan.
-
-2. ``asof_join_pandas`` — cogrouped ``applyInPandas`` with a vectorized
-   ``np.searchsorted`` merge per entity.  Used for (a) oracle-parity
-   verification, (b) hot-key splitting: with ``chunk`` set, each entity's
-   timeline is sliced into fixed windows and observations are replicated
-   into the following chunk within ``tolerance`` of the boundary, so a
-   pathologically hot entity becomes many bounded tasks instead of one
-   straggler (the reference never needed this — its grid keys are uniform
-   by construction, PatchCS.java:57-61).
+Tie rule: among observations tied on (key, ts) the match is the one with
+the greatest payload struct ``(matched_ts, payload...)`` in every
+direction, so the result never depends on input order.  A payload
+holding a map cannot be ordered and is refused before any job runs.
 
 Leakage invariant (tested): backward matches satisfy
 ``matched_ts <= query_ts`` (ties inclusive), forward matches
@@ -36,19 +31,134 @@ from __future__ import annotations
 
 from typing import Iterable
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from esa_pfa_spark.functions.time import epoch_s, seconds, ts_diff_us
+from esa_pfa_spark.functions.time import seconds, ts_diff_us
 from esa_pfa_spark.operators.windows import next_non_null
-from esa_pfa_spark.skew import route_hot_keys
 
 _TAG = "__asof_tag"
 _TS = "__asof_ts"
+_PAY = "__asof_pay"
+_PRB = "__asof_probe"
 _MATCH = "matched_ts"
+
+
+def _has_map(t: T.DataType) -> bool:
+    if isinstance(t, T.MapType):
+        return True
+    if isinstance(t, T.ArrayType):
+        return _has_map(t.elementType)
+    return isinstance(t, T.StructType) and any(_has_map(f.dataType) for f in t.fields)
+
+
+def _tagged_union(
+    probes: DataFrame,
+    observations: DataFrame,
+    keys: list[str],
+    probe_ts: str,
+    obs_sort: Column,
+    fields: list[Column],
+) -> tuple[DataFrame, list[str], list[str]]:
+    """The one as-of input.  Observation rows (tag 0) sit at ``obs_sort``
+    and carry ``struct(fields)`` as ``_PAY``; probe rows (tag 1) sit at
+    ``probe_ts`` and carry their other columns as ``_PRB``.  The whole
+    observation row is ONE struct: a payload column may be null on its
+    matched row, so filling columns one by one would leak older values.
+    Returns the union, the probe column names and the payload field names."""
+    pay = F.struct(*fields).alias(_PAY)
+    pay_type = observations.select(pay).schema[_PAY].dataType
+    maps = [f.name for f in pay_type.fields if _has_map(f.dataType)]
+    if maps:
+        raise ValueError(
+            f"as-of payload {maps} holds a map: tied observations resolve by "
+            "ordering the payload, and Spark cannot order maps; drop them "
+            "from the payload or convert them (map_entries)"
+        )
+    probe_cols = [c for c in probes.columns if c not in keys + [probe_ts]]
+    prb = F.struct(*probe_cols).alias(_PRB)
+    prb_type = probes.select(prb).schema[_PRB].dataType
+    obs_side = observations.select(
+        *keys, obs_sort.alias(_TS), F.lit(0).alias(_TAG), pay,
+        F.lit(None).cast(prb_type).alias(_PRB),
+    )
+    probe_side = probes.select(
+        *keys, F.col(probe_ts).alias(_TS), F.lit(1).alias(_TAG),
+        F.lit(None).cast(pay_type).alias(_PAY), prb,
+    )
+    return obs_side.unionByName(probe_side), probe_cols, pay_type.fieldNames()
+
+
+def _running(keys: list[str]) -> Window:
+    """Every row at or before the current one; an observation (tag 0)
+    sorts before an equal-ts probe, so ties match inclusively."""
+    return (
+        Window.partitionBy(*keys)
+        .orderBy(F.col(_TS).asc(), F.col(_TAG).asc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+
+
+def _fill(
+    probes: DataFrame,
+    observations: DataFrame,
+    keys: list[str],
+    probe_ts: str,
+    obs_sort: Column,
+    fields: list[Column],
+    direction: str,
+    tolerance,
+) -> DataFrame:
+    """The one as-of fill: tagged union, one window pass per direction,
+    then the probe rows as output columns — keys, probe columns,
+    ``probe_ts``, the matched struct's fields (``fields`` start with
+    ``_MATCH``), null where there is no match or it lies further than
+    ``tolerance`` from the probe (probe rows are never dropped)."""
+    unioned, probe_cols, names = _tagged_union(
+        probes, observations, keys, probe_ts, obs_sort, fields
+    )
+    # backward: the greatest struct so far is the latest ts, ties broken by
+    # payload (aggregates skip the null probe structs)
+    back = F.max(_PAY).over(_running(keys))
+    # forward: the next struct after the row, as a linear lead (a (current
+    # row, unbounded following) frame is quadratic on a hot key); a probe
+    # sorts before its tied observations, the greatest payload first
+    fwd = next_non_null(_PAY).over(
+        Window.partitionBy(*keys)
+        .orderBy(F.col(_TS).asc(), F.col(_TAG).desc(), F.col(_PAY).desc())
+    )
+    cols = [*keys, _TS, _TAG, _PRB]
+    tol_us = None if tolerance is None else F.lit(int(seconds(tolerance) * 1e6))
+    if direction == "nearest":
+        # both fills over the same union: one Exchange, two window passes.
+        # Tolerance gates each side BEFORE the pick (a closer but
+        # out-of-tolerance side must not mask a valid one); |dt| ties
+        # resolve to the backward match.
+        both = unioned.select(*cols, back.alias("__b"), fwd.alias("__f"))
+        d_b = ts_diff_us(_TS, f"__b.{_MATCH}")
+        d_f = ts_diff_us(f"__f.{_MATCH}", _TS)
+        ok_b, ok_f = F.col("__b").isNotNull(), F.col("__f").isNotNull()
+        if tol_us is not None:
+            ok_b, ok_f = ok_b & (d_b <= tol_us), ok_f & (d_f <= tol_us)
+        pick = (
+            F.when(ok_b & ok_f & (d_f < d_b), F.col("__f"))
+            .when(ok_b, F.col("__b"))
+            .when(ok_f, F.col("__f"))
+        )
+        filled = both.select(*cols, pick.alias(_PAY))
+    else:
+        fill = back if direction == "backward" else fwd
+        filled = unioned.select(*cols, fill.alias(_PAY))
+    m = F.col(_PAY)
+    if tol_us is not None:
+        m = F.when(F.abs(ts_diff_us(_TS, f"{_PAY}.{_MATCH}")) <= tol_us, m)
+    return filled.filter(F.col(_TAG) == 1).select(
+        *keys,
+        *[F.col(_PRB)[c].alias(c) for c in probe_cols],
+        F.col(_TS).alias(probe_ts),
+        *[m[f].alias(f) for f in names],
+    )
 
 
 def asof_join(
@@ -61,10 +171,10 @@ def asof_join(
     direction: str = "backward",
     tolerance=None,
 ) -> DataFrame:
-    """Pure-DataFrame as-of join (union + window).  Returns the probe rows
-    plus ``matched_ts`` and the requested observation ``payload`` columns
-    (null where no in-tolerance match exists — probe rows are never dropped).
-    """
+    """As-of join over the tagged union.  Returns the probe rows plus
+    ``matched_ts`` and the requested observation ``payload`` columns
+    (null where no in-tolerance match exists — probe rows are never
+    dropped).  Ties on (key, ts) resolve to the greatest payload."""
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(
             f"direction must be backward|forward|nearest, got {direction}"
@@ -73,306 +183,10 @@ def asof_join(
     payload = list(payload) if payload is not None else [
         c for c in observations.columns if c not in keys + [obs_ts]
     ]
-    probe_cols = [c for c in probes.columns if c not in keys + [probe_ts]]
-
-    # The whole observation row is packed into ONE struct: a payload column
-    # may legitimately be null on its matched row (e.g. lead_1 of the last
-    # observation), so filling columns independently with ignorenulls would
-    # leak older values.  The struct is non-null exactly on obs rows, so
-    # last/first(struct, ignorenulls) selects the matched ROW atomically.
-    _PAY = "__asof_payload"
-    obs_side = observations.select(
-        *keys,
-        F.col(obs_ts).alias(_TS),
-        F.lit(0).alias(_TAG),
-        F.struct(F.col(obs_ts).alias(_MATCH), *[F.col(c) for c in payload]).alias(_PAY),
-        *[F.lit(None).cast(probes.schema[c].dataType).alias(f"__p_{c}") for c in probe_cols],
-    )
-    pay_type = obs_side.schema[_PAY].dataType
-    probe_side = probes.select(
-        *keys,
-        F.col(probe_ts).alias(_TS),
-        F.lit(1).alias(_TAG),
-        F.lit(None).cast(pay_type).alias(_PAY),
-        *[F.col(c).alias(f"__p_{c}") for c in probe_cols],
-    )
-    unioned = obs_side.unionByName(probe_side)
-
-    # obs tag 0 sorts before an equal-ts probe -> inclusive tie match
-    w_back = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col(_TS).asc(), F.col(_TAG).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # forward: the first payload at or after the row, as a linear lead
-    # (a (current row, unbounded following) frame is quadratic on a hot key)
-    w_fwd = Window.partitionBy(*keys).orderBy(F.col(_TS).asc(), F.col(_TAG).desc())
-    fwd_fill = F.coalesce(F.col(_PAY), next_non_null(_PAY).over(w_fwd))
-    tol_s = None if tolerance is None else seconds(tolerance)
-
-    if direction == "nearest":
-        # BOTH directional fills over the same union: one Exchange, two
-        # in-partition window passes.  Tolerance gates each side BEFORE the
-        # pick (a closer-but-out-of-tolerance side must not mask a valid
-        # one); |dt| ties resolve to the backward match.
-        back = F.last(_PAY, ignorenulls=True).over(w_back)
-        both = unioned.select(
-            *keys,
-            F.col(_TS),
-            F.col(_TAG),
-            back.alias("__b"),
-            fwd_fill.alias("__f"),
-            *[F.col(f"__p_{c}") for c in probe_cols],
-        ).filter(F.col(_TAG) == 1)
-        both = both.withColumn("__bm", F.col("__b")[_MATCH]).withColumn(
-            "__fm", F.col("__f")[_MATCH]
-        )
-        d_b = ts_diff_us(_TS, "__bm")
-        d_f = ts_diff_us("__fm", _TS)
-        valid_b = F.col("__b").isNotNull()
-        valid_f = F.col("__f").isNotNull()
-        if tol_s is not None:
-            tol_us = F.lit(int(tol_s * 1e6))
-            valid_b = valid_b & (d_b <= tol_us)
-            valid_f = valid_f & (d_f <= tol_us)
-        pick = (
-            F.when(valid_b & valid_f,
-                   F.when(d_f < d_b, F.col("__f")).otherwise(F.col("__b")))
-            .when(valid_b, F.col("__b"))
-            .when(valid_f, F.col("__f"))
-        )
-        filled = both.select(
-            *keys,
-            F.col(_TS),
-            pick.alias(_PAY),
-            *[F.col(f"__p_{c}") for c in probe_cols],
-        )
-        filled = filled.select(
-            *keys,
-            F.col(_TS),
-            F.col(_PAY)[_MATCH].alias(_MATCH),
-            *[F.col(_PAY)[c].alias(c) for c in payload],
-            *[F.col(f"__p_{c}") for c in probe_cols],
-        )
-    else:
-        if direction == "backward":
-            fill = F.last(_PAY, ignorenulls=True).over(w_back)
-        else:
-            fill = fwd_fill
-
-        filled = unioned.select(
-            *keys,
-            F.col(_TS),
-            F.col(_TAG),
-            fill.alias(_PAY),
-            *[F.col(f"__p_{c}") for c in probe_cols],
-        ).filter(F.col(_TAG) == 1)
-        filled = filled.select(
-            *keys,
-            F.col(_TS),
-            F.col(_PAY)[_MATCH].alias(_MATCH),
-            *[F.col(_PAY)[c].alias(c) for c in payload],
-            *[F.col(f"__p_{c}") for c in probe_cols],
-        )
-
-        if tol_s is not None:
-            delta_us = F.abs(ts_diff_us(_TS, _MATCH))
-            in_tol = F.col(_MATCH).isNotNull() & (delta_us <= F.lit(int(tol_s * 1e6)))
-            filled = filled.select(
-                *keys,
-                F.col(_TS),
-                F.when(in_tol, F.col(_MATCH)).alias(_MATCH),
-                *[F.when(in_tol, F.col(c)).alias(c) for c in payload],
-                *[F.col(f"__p_{c}") for c in probe_cols],
-            )
-    out = filled.withColumnRenamed(_TS, probe_ts)
-    for c in probe_cols:
-        out = out.withColumnRenamed(f"__p_{c}", c)
-    return out.select(*keys, *probe_cols, probe_ts, _MATCH, *payload)
-
-
-def asof_join_pandas(
-    probes: DataFrame,
-    observations: DataFrame,
-    on: str = "entity_id",
-    probe_ts: str = "query_ts",
-    obs_ts: str = "ts",
-    payload: Iterable[str] | None = None,
-    direction: str = "backward",
-    tolerance=None,
-    chunk=None,
-) -> DataFrame:
-    """Cogrouped-``applyInPandas`` as-of join (vectorized searchsorted merge).
-
-    With ``chunk`` (timedelta/seconds) set, groups become ``(key, time-chunk)``
-    instead of ``(key)``: probes are assigned to their chunk; observations are
-    replicated into every chunk they can serve given ``tolerance`` — the
-    hot-entity path.  Requires ``tolerance`` when chunking (otherwise a match
-    could come from arbitrarily far back).
-    """
-    if direction not in ("backward", "forward", "nearest"):
-        raise ValueError(
-            f"direction must be backward|forward|nearest, got {direction}"
-        )
-    tol_s = None if tolerance is None else seconds(tolerance)
-    chunk_s = None if chunk is None else seconds(chunk)
-    if chunk_s is not None and tol_s is None:
-        raise ValueError("chunked asof join requires a tolerance bound")
-
-    payload = list(payload) if payload is not None else [
-        c for c in observations.columns if c not in [on, obs_ts]
-    ]
-    probe_cols = [c for c in probes.columns if c != on]  # probe_ts stays in output
-    obs_proj = observations.select(on, obs_ts, *payload)
-
-    out_fields = (
-        [probes.schema[on], *[probes.schema[c] for c in probe_cols]]
-        + [T.StructField(_MATCH, obs_proj.schema[obs_ts].dataType, True)]
-        + [T.StructField(c, obs_proj.schema[c].dataType, True) for c in payload]
-    )
-    out_schema = T.StructType(out_fields)
-    sign = 1 if direction == "backward" else -1
-
-    def merge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return pd.DataFrame(columns=[f.name for f in out_fields])
-        res = left[[on, *probe_cols]].copy()
-        if len(right) == 0:
-            res[_MATCH] = pd.NaT
-            for c in payload:
-                res[c] = None
-            return res
-        right = right.sort_values(obs_ts, kind="mergesort").reset_index(drop=True)
-        ots = right[obs_ts].to_numpy(dtype="datetime64[us]").astype("int64")
-        qts = left[probe_ts].to_numpy(dtype="datetime64[us]").astype("int64")
-        if direction == "backward":
-            idx = np.searchsorted(ots, qts, side="right") - 1
-            valid = idx >= 0
-        elif direction == "forward":
-            idx = np.searchsorted(ots, qts, side="left")
-            valid = idx < len(ots)
-        else:  # nearest: both candidates, closer wins, |dt| tie -> backward
-            ib = np.searchsorted(ots, qts, side="right") - 1
-            if_ = np.searchsorted(ots, qts, side="left")
-            vb = ib >= 0
-            vf = if_ < len(ots)
-            d_b = qts - ots[np.clip(ib, 0, len(ots) - 1)]
-            d_f = ots[np.clip(if_, 0, len(ots) - 1)] - qts
-            if tol_s is not None:
-                tol_us = tol_s * 1_000_000
-                vb &= d_b <= tol_us
-                vf &= d_f <= tol_us
-            use_f = vf & (~vb | (d_f < d_b))
-            idx = np.where(use_f, if_, ib)
-            valid = vb | vf
-        safe = np.clip(idx, 0, len(ots) - 1)
-        if tol_s is not None and direction != "nearest":
-            delta = sign * (qts - ots[safe])
-            valid &= delta <= tol_s * 1_000_000
-        matched = right.iloc[safe].reset_index(drop=True)
-        res[_MATCH] = matched[obs_ts].where(valid, pd.NaT)
-        for c in payload:
-            vals = matched[c]
-            res[c] = vals.where(pd.Series(valid, index=vals.index), None)
-        return res
-
-    if chunk_s is None:
-        cg = probes.groupBy(on).cogroup(obs_proj.groupBy(on))
-        return cg.applyInPandas(lambda l, r: merge(l, r), schema=out_schema)
-
-    # hot-key path: (key, chunk) groups with tolerance-width obs replication
-    chunk_sec = int(chunk_s)
-    pch = probes.withColumn("__chunk", F.floor(epoch_s(F.col(probe_ts)) / chunk_sec))
-    base = F.floor(epoch_s(F.col(obs_ts)) / chunk_sec)
-    spread = int(np.ceil(tol_s / chunk_s))
-    if direction == "backward":
-        # an obs at the tail of chunk k can serve probes in chunks k..k+ceil(tol/chunk)
-        offsets = list(range(0, spread + 1))
-    elif direction == "forward":
-        offsets = list(range(-spread, 1))
-    else:  # nearest can match either side of the chunk boundary
-        offsets = list(range(-spread, spread + 1))
-    och = obs_proj.withColumn(
-        "__chunk", F.explode(F.array(*[base + F.lit(o) for o in offsets]))
-    )
-    cg = pch.groupBy(on, "__chunk").cogroup(och.groupBy(on, "__chunk"))
-
-    def merge2(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        return merge(left.drop(columns=["__chunk"]), right.drop(columns=["__chunk"]))
-
-    return cg.applyInPandas(merge2, schema=out_schema)
-
-
-def asof_join_auto(
-    probes: DataFrame,
-    observations: DataFrame,
-    on: str = "entity_id",
-    probe_ts: str = "query_ts",
-    obs_ts: str = "ts",
-    payload: Iterable[str] | None = None,
-    direction: str = "backward",
-    tolerance=None,
-    hot_rows: int = 5_000_000,
-    chunk=None,
-    key_counts: DataFrame | None = None,
-    census_sample: float | None = None,
-    census_safety: float = 2.0,
-) -> DataFrame:
-    """As-of join with AUTOMATIC hot-key dispatch.
-
-    The JVM union+window plan sorts each key's whole timeline in one task,
-    and AQE skew handling never applies to window sorts — so one
-    pathological entity (a Zipf head key at 100x scale) is one straggler
-    task, invisible to every runtime remedy.  This wrapper is
-    ``skew.route_hot_keys`` over two as-of plans:
-
-      * keys with more than ``hot_rows`` observations -> the chunked
-        cogrouped path (``asof_join_pandas(chunk=...)``): the hot timeline
-        becomes ceil(span/chunk) bounded tasks, exact by tolerance-width
-        replication (chunk defaults to the tolerance);
-      * every other key, NULL keys included -> the JVM plan unchanged;
-      * results are unioned by name — row-identical to ``asof_join`` on
-        the whole input (tested in tests/test_asof.py).
-
-    ``tolerance`` is required only when a hot key actually exists (the
-    chunked path needs the replication bound).  Single join key (the
-    chunked path's contract).
-
-    Default ``hot_rows`` sizing: 5M rows of (ts + payload) is roughly a
-    1-2 GB sort in one task — the point where a window-sort task becomes
-    the stage straggler and spills; tune per payload width.
-
-    The census is amortizable (``route_hot_keys``): ``key_counts`` — a
-    precomputed (key, count) table, e.g. the manifest's per-key row
-    counts — skips it, ``census_sample`` counts a sample.  Without either,
-    one partial-agg pass over ``observations`` runs per call — fine once,
-    wasteful in a loop.
-
-    Reference analog: PatchCS assumes uniform grid keys
-    (pfa-bitemp-fex/.../PatchCS.java:57-61); real entity keys are Zipfian,
-    so the engine dispatches instead of assuming."""
-    kw = dict(
-        on=on, probe_ts=probe_ts, obs_ts=obs_ts, payload=payload,
-        direction=direction, tolerance=tolerance,
-    )
-
-    def chunked(p: DataFrame, o: DataFrame) -> DataFrame:
-        if tolerance is None:
-            raise ValueError(
-                "asof_join_auto found hot keys but the chunked path needs a "
-                "tolerance bound; pass tolerance="
-            )
-        return asof_join_pandas(
-            p, o, chunk=chunk if chunk is not None else tolerance, **kw
-        )
-
-    return route_hot_keys(
-        probes, observations, on, hot_rows,
-        cold=lambda p, o: asof_join(p, o, **kw),
-        hot=chunked,
-        key_counts=key_counts,
-        census_sample=census_sample,
-        census_safety=census_safety,
+    return _fill(
+        probes, observations, keys, probe_ts, F.col(obs_ts),
+        [F.col(obs_ts).alias(_MATCH), *[F.col(c) for c in payload]],
+        direction, tolerance,
     )
 
 
@@ -431,9 +245,9 @@ def asof_lagk_join(
       1. rank observations per key: ``rn = row_number() over (key, ts,
          tiebreak)`` — one Exchange+sort on the key.
       2. each probe's as-of RANK ``r`` = count of observations at-or-before
-         it: the same union-fill the plain as-of uses (obs rows carry 1,
-         a running sum is read off at probe rows) — reuses the step-1
-         partitioning, no new Exchange.
+         it: a running count over the plain as-of's tagged union, read
+         off at probe rows — reuses the step-1 partitioning, no new
+         Exchange.
       3. explode each probe into j = 1..k target ranks ``r - j + 1`` (>= 1)
          and equi-join on (key, rank): exactly ``k`` rows per probe enter
          the join, so the shuffle carries k x |probes| rows regardless of
@@ -448,8 +262,6 @@ def asof_lagk_join(
     if k < 1:
         raise ValueError("k must be >= 1")
     keys = [on] if isinstance(on, str) else list(on)
-    probe_cols = [c for c in probes.columns if c not in keys + [probe_ts]]
-    tol_s = None if tolerance is None else seconds(tolerance)
 
     order = [F.col(obs_ts).asc()] + (
         [F.col(tiebreak).asc()] if tiebreak else [F.col(value).asc()]
@@ -460,40 +272,22 @@ def asof_lagk_join(
         F.row_number().over(w_rank).alias("__rn"),
     )
 
-    # probe as-of rank: union fill, obs sort before equal-ts probes (tag)
-    obs_side = obs_ranked.select(
-        *keys, F.col(obs_ts).alias("__ts"), F.lit(0).alias("__tag"),
-        F.lit(1).cast("long").alias("__one"),
-        *[F.lit(None).cast(probes.schema[c].dataType).alias(f"__p_{c}")
-          for c in probe_cols],
-        F.lit(None).cast(probes.schema[probe_ts].dataType).alias("__qts"),
+    # probe as-of rank: the observations at or before it, counted over the
+    # tagged union (count skips the null probe structs)
+    unioned, probe_cols, _ = _tagged_union(
+        probes, obs_ranked, keys, probe_ts, F.col(obs_ts), [F.col("__rn")]
     )
-    probe_side = probes.select(
-        *keys, F.col(probe_ts).alias("__ts"), F.lit(1).alias("__tag"),
-        F.lit(0).cast("long").alias("__one"),
-        *[F.col(c).alias(f"__p_{c}") for c in probe_cols],
-        F.col(probe_ts).alias("__qts"),
-    )
-    w_cum = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("__ts").asc(), F.col("__tag").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ranked_probes = (
-        obs_side.unionByName(probe_side)
-        .select(
-            *keys, "__qts", "__tag",
-            F.sum("__one").over(w_cum).alias("__r"),
-            *[F.col(f"__p_{c}") for c in probe_cols],
+    exploded = (
+        unioned.select(
+            *keys, _TS, _TAG, _PRB, F.count(_PAY).over(_running(keys)).alias("__r")
         )
-        .filter(F.col("__tag") == 1)
+        .filter(F.col(_TAG) == 1)
+        .select(
+            *keys, _TS, _PRB, "__r",
+            F.explode(F.sequence(F.lit(1), F.lit(k))).alias("__j"),
+        )
+        .withColumn("__want", F.col("__r") - F.col("__j") + 1)
     )
-
-    exploded = ranked_probes.select(
-        *keys, "__qts", "__r",
-        *[F.col(f"__p_{c}") for c in probe_cols],
-        F.explode(F.sequence(F.lit(1), F.lit(k))).alias("__j"),
-    ).withColumn("__want", F.col("__r") - F.col("__j") + 1)
 
     jcond = F.col("__want") == F.col("__orn")
     o2 = obs_ranked.select(
@@ -504,10 +298,8 @@ def asof_lagk_join(
     for kcol in keys:
         jcond = jcond & (F.col(kcol) == F.col(f"__o_{kcol}"))
     j = exploded.join(o2, jcond, "left")
-    if tol_s is not None:
-        from esa_pfa_spark.functions.time import ts_diff_us
-
-        in_tol = ts_diff_us("__qts", "__ots") <= int(tol_s * 1e6)
+    if tolerance is not None:
+        in_tol = ts_diff_us(_TS, "__ots") <= int(seconds(tolerance) * 1e6)
         j = j.withColumn("__ots", F.when(in_tol, F.col("__ots"))).withColumn(
             "__ov", F.when(in_tol, F.col("__ov"))
         )
@@ -521,10 +313,10 @@ def asof_lagk_join(
             F.max(F.when(F.col("__j") == i, F.col("__ots"))).alias(f"lag{i}_ts")
         )
     return (
-        j.groupBy(*keys, F.col("__qts").alias(probe_ts),
-                  *[F.col(f"__p_{c}").alias(c) for c in probe_cols])
+        j.groupBy(*keys, _TS, _PRB)
         .agg(*lag_cols)
-        .select(*keys, *probe_cols, probe_ts,
+        .select(*keys, *[F.col(_PRB)[c].alias(c) for c in probe_cols],
+                F.col(_TS).alias(probe_ts),
                 *[c for i in range(1, k + 1)
                   for c in (f"lag{i}_val", f"lag{i}_ts")])
     )
@@ -630,69 +422,10 @@ def asof_join_bitemporal(
     payload = list(payload) if payload is not None else [
         c for c in observations.columns if c not in keys + [obs_ts, knowledge_ts]
     ]
-    probe_cols = [c for c in probes.columns if c not in keys + [probe_ts]]
-    _PAY = "__bt_payload"
-    _KTS = "matched_knowledge_ts"
-
-    eff_k = F.greatest(F.col(knowledge_ts), F.col(obs_ts))
-    obs_side = observations.select(
-        *keys,
-        eff_k.alias(_TS),
-        F.lit(0).alias(_TAG),
-        F.struct(
-            F.col(obs_ts).alias(_MATCH),
-            F.col(knowledge_ts).alias(_KTS),
-            *[F.col(c) for c in payload],
-        ).alias(_PAY),
-        *[
-            F.lit(None).cast(probes.schema[c].dataType).alias(f"__p_{c}")
-            for c in probe_cols
-        ],
+    return _fill(
+        probes, observations, keys, probe_ts,
+        F.greatest(F.col(knowledge_ts), F.col(obs_ts)),
+        [F.col(obs_ts).alias(_MATCH), F.col(knowledge_ts).alias("matched_knowledge_ts"),
+         *[F.col(c) for c in payload]],
+        "backward", tolerance,
     )
-    pay_type = obs_side.schema[_PAY].dataType
-    probe_side = probes.select(
-        *keys,
-        F.col(probe_ts).alias(_TS),
-        F.lit(1).alias(_TAG),
-        F.lit(None).cast(pay_type).alias(_PAY),
-        *[F.col(c).alias(f"__p_{c}") for c in probe_cols],
-    )
-    unioned = obs_side.unionByName(probe_side)
-    # obs (tag 0) sorts before an equal-time probe -> a fact published
-    # exactly at query_ts is known (inclusive), matching asof_join's tie rule
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col(_TS).asc(), F.col(_TAG).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = unioned.select(
-        *keys,
-        F.col(_TS),
-        F.col(_TAG),
-        F.max(_PAY).over(w).alias(_PAY),
-        *[F.col(f"__p_{c}") for c in probe_cols],
-    ).filter(F.col(_TAG) == 1)
-    filled = filled.select(
-        *keys,
-        F.col(_TS),
-        F.col(_PAY)[_MATCH].alias(_MATCH),
-        F.col(_PAY)[_KTS].alias(_KTS),
-        *[F.col(_PAY)[c].alias(c) for c in payload],
-        *[F.col(f"__p_{c}") for c in probe_cols],
-    )
-    tol_s = None if tolerance is None else seconds(tolerance)
-    if tol_s is not None:
-        delta_us = ts_diff_us(_TS, _MATCH)
-        in_tol = F.col(_MATCH).isNotNull() & (delta_us <= F.lit(int(tol_s * 1e6)))
-        filled = filled.select(
-            *keys,
-            F.col(_TS),
-            F.when(in_tol, F.col(_MATCH)).alias(_MATCH),
-            F.when(in_tol, F.col(_KTS)).alias(_KTS),
-            *[F.when(in_tol, F.col(c)).alias(c) for c in payload],
-            *[F.col(f"__p_{c}") for c in probe_cols],
-        )
-    out = filled.withColumnRenamed(_TS, probe_ts)
-    for c in probe_cols:
-        out = out.withColumnRenamed(f"__p_{c}", c)
-    return out.select(*keys, *probe_cols, probe_ts, _MATCH, _KTS, *payload)

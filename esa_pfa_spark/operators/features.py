@@ -397,8 +397,8 @@ def rfm_scores(
 
     Exactness: recency comes from exact integer microsecond differences;
     monetary is a decimal(18,6) sum; percentile edges are Spark's exact
-    interpolated percentiles == DuckDB quantile_cont (the established
-    quantile_bins parity).  R inverts its bin (recent = small recency =
+    interpolated percentiles (the oracle mirrors them edge by edge, since
+    DuckDB quantile_cont can land an ulp off a tied value).  R inverts its bin (recent = small recency =
     high score): r = n_bins - bin(recency).
     """
     from esa_pfa_spark.operators.encode import quantile_bins

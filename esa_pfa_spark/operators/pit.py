@@ -568,8 +568,8 @@ def decayed_pit_auto(
     hot_rows: int = 1_000_000,
     key_counts: DataFrame | None = None,
 ) -> DataFrame:
-    """Decayed PIT aggregates with AUTOMATIC hot-key dispatch (the decay
-    analog of ``asof_join_auto``): ``skew.route_hot_keys`` over two plans.
+    """Decayed PIT aggregates with AUTOMATIC hot-key dispatch:
+    ``skew.route_hot_keys`` over two plans.
     One partial-agg census over ``observations`` (or a precomputed
     ``key_counts`` table — no job over ``observations``) finds keys with
     more than ``hot_rows`` observations; hot keys route through

@@ -11,14 +11,16 @@ engine ships explicit remedies (SURVEY.md §4 custom-work item 2):
   n_salt bounded ones.  Supported: count/sum/min/max/avg.
 * AQE skew-join splitting is enabled session-wide in session.py
   (spark.sql.adaptive.skewJoin.enabled) for join-side skew.
-* For order-sensitive per-key scans (as-of, pairing) salting is invalid;
-  those use time-slicing instead (asof_join_pandas(chunk=...),
-  find_pairs(chunk="session")).
+* For order-sensitive per-key scans (pairing) salting is invalid; the
+  non-reuse pairing slices time instead (find_pairs(chunk="session")).
+  The as-of join keeps one JVM window plan for every key: its
+  time-sliced pandas variant lost to it on a 2M-row hot key at
+  local[4] (BENCH/SKEW_ASOF.md).
 * ``route_hot_keys`` — the one hot-key router: a per-key census (or a
   precomputed count table) picks the keys above a row threshold, the
   input splits null-safely into hot and cold halves, each half runs its
-  own plan, and the results union by name.  ``asof_join_auto`` and
-  ``decayed_pit_auto`` are this router over their cold/hot operator pairs.
+  own plan, and the results union by name.  ``decayed_pit_auto`` is
+  this router over its cold/hot operator pair.
 """
 
 from __future__ import annotations

@@ -1,13 +1,14 @@
 """As-of join: hand-computed goldens (reference test style —
 FindPatchPairsTest.java:28-38: tiny inputs, exact expected values),
-leakage invariants, and SQL-path vs pandas-path agreement."""
+leakage invariants, agreement with independent pandas oracles, and the
+tie rule (tied observations resolve by payload, never by input order)."""
 
 import datetime as dt
 
 import pandas as pd
 import pytest
 
-from esa_pfa_spark.operators.asof import asof_join, asof_join_pandas
+from esa_pfa_spark.operators.asof import asof_join
 
 T0 = dt.datetime(2024, 1, 1)
 
@@ -85,29 +86,6 @@ def test_asof_window_golden(spark, direction, expected):
     assert _collect(out) == expected
 
 
-@pytest.mark.parametrize("direction,expected", [
-    ("backward", EXPECTED_BACKWARD_7D),
-    ("forward", EXPECTED_FORWARD_7D),
-])
-def test_asof_pandas_golden(spark, direction, expected):
-    out = asof_join_pandas(
-        _probes(spark), _obs(spark), payload=["value"],
-        direction=direction, tolerance=dt.timedelta(days=7),
-    )
-    assert _collect(out) == expected
-
-
-@pytest.mark.parametrize("direction", ["backward", "forward"])
-def test_asof_chunked_matches_unchunked(spark, direction):
-    out = asof_join_pandas(
-        _probes(spark), _obs(spark), payload=["value"],
-        direction=direction, tolerance=dt.timedelta(days=7),
-        chunk=dt.timedelta(days=7),
-    )
-    expected = EXPECTED_BACKWARD_7D if direction == "backward" else EXPECTED_FORWARD_7D
-    assert _collect(out) == expected
-
-
 def test_no_tolerance_means_unbounded(spark):
     out = asof_join(_probes(spark), _obs(spark), payload=["value"], direction="backward")
     got = _collect(out)
@@ -133,14 +111,23 @@ def test_zero_leakage_invariant(spark):
 
 
 def test_sql_and_pandas_paths_agree(spark):
+    """The backward fill equals the pandas oracle's explicit per-probe
+    scan (``oracle.pandas_oracle.oracle_asof_backward``) on synth data."""
     from esa_pfa_spark import synth
+    from esa_pfa_spark.oracle.pandas_oracle import oracle_asof_backward
 
     obs = synth.observations_df(spark, seed=5, n_entities=10, mean_obs=15, mean_tok=8)
     probes = synth.queries_df(spark, seed=5, n_entities=10, mean_obs=15)
-    kw = dict(payload=["doc_id", "n_tok"], direction="backward", tolerance=dt.timedelta(days=7))
-    a = asof_join(probes, obs, **kw).orderBy("entity_id", "query_ts").toPandas()
-    b = asof_join_pandas(probes, obs, **kw).orderBy("entity_id", "query_ts").toPandas()
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
+    tol, payload = dt.timedelta(days=7), ["doc_id", "n_tok"]
+    a = (
+        asof_join(probes, obs, payload=payload, direction="backward", tolerance=tol)
+        .orderBy("entity_id", "query_ts").toPandas()
+    )
+    b = oracle_asof_backward(
+        probes.toPandas(), obs.select("entity_id", "ts", *payload).toPandas(), tol, payload
+    ).sort_values(["entity_id", "query_ts"], kind="mergesort").reset_index(drop=True)
+    assert a["matched_ts"].notna().sum() > 0
+    pd.testing.assert_frame_equal(a[b.columns], b, check_dtype=False)
 
 
 EXPECTED_NEAREST_7D = {
@@ -179,180 +166,95 @@ def test_asof_nearest_single_exchange(spark):
     assert n == 1, f"expected 1 exchange, got {n}:\n{plan}"
 
 
-def test_asof_nearest_pandas_golden(spark):
-    out = asof_join_pandas(
-        _probes(spark), _obs(spark), payload=["value"],
-        direction="nearest", tolerance=dt.timedelta(days=7),
-    )
-    assert _collect(out) == EXPECTED_NEAREST_7D
-
-
-def test_asof_nearest_chunked_matches_unchunked(spark):
-    out = asof_join_pandas(
-        _probes(spark), _obs(spark), payload=["value"],
-        direction="nearest", tolerance=dt.timedelta(days=7),
-        chunk=dt.timedelta(days=7),
-    )
-    assert _collect(out) == EXPECTED_NEAREST_7D
-
-
 def test_sql_and_pandas_paths_agree_nearest(spark):
+    """Nearest on synth data equals a pandas scan of every in-tolerance
+    observation (closest first, |dt| ties to the earlier)."""
     from esa_pfa_spark import synth
 
     obs = synth.observations_df(spark, seed=5, n_entities=10, mean_obs=15, mean_tok=8)
     probes = synth.queries_df(spark, seed=5, n_entities=10, mean_obs=15)
-    kw = dict(payload=["doc_id", "n_tok"], direction="nearest",
-              tolerance=dt.timedelta(days=7))
-    a = asof_join(probes, obs, **kw).orderBy("entity_id", "query_ts").toPandas()
-    b = asof_join_pandas(probes, obs, **kw).orderBy("entity_id", "query_ts").toPandas()
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
+    tol = dt.timedelta(days=7)
+    got = {
+        (r["entity_id"], r["query_ts"]): (r["matched_ts"], r["doc_id"])
+        for r in asof_join(probes, obs, payload=["doc_id"], direction="nearest",
+                           tolerance=tol).collect()
+    }
+    o = obs.select("entity_id", "ts", "doc_id").toPandas()
+    for ent, qts in probes.select("entity_id", "query_ts").toPandas().itertuples(index=False):
+        g = o[(o.entity_id == ent) & ((o.ts - qts).abs() <= tol)]
+        want = (None, None)
+        if len(g):
+            g = g.assign(d=(g.ts - qts).abs()).sort_values(
+                ["d", "ts", "doc_id"], ascending=[True, True, False], kind="mergesort")
+            want = (g.ts.iloc[0].to_pydatetime(), g.doc_id.iloc[0])
+        assert got[(ent, qts)] == want, (ent, qts)
 
 
-def _skewed(spark):
-    """One hot entity (60 obs in 3 bursts) + 20 cold entities (3 obs)
-    + NULL-key rows (isin() is three-valued: a bare isin/~isin branch
-    pair silently drops them — the auto dispatcher must not)."""
-    rows, probes = [], []
-    for i in range(60):
-        burst, j = divmod(i, 20)
-        rows.append(("hot", T0 + dt.timedelta(days=30 * burst, minutes=j), float(i)))
-    for e in range(20):
-        for j in range(3):
-            rows.append((f"c{e}", T0 + dt.timedelta(hours=6 * j + e), float(100 + e + j)))
-    rows.append((None, T0 + dt.timedelta(hours=1), 999.0))
-    for i in range(12):
-        probes.append(("hot", T0 + dt.timedelta(days=30 * (i % 3), minutes=40 + i)))
-    for e in range(20):
-        probes.append((f"c{e}", T0 + dt.timedelta(hours=7 + e)))
-    probes.append(("nokey", T0))
-    probes.append((None, T0 + dt.timedelta(hours=2)))
-    obs = spark.createDataFrame(rows, "entity_id string, ts timestamp, value double")
-    prb = spark.createDataFrame(probes, "entity_id string, query_ts timestamp")
-    return obs, prb
+def _tied(spark, reverse: bool):
+    """Docs 1 and 2 share (entity, ts); doc 3 is a day later.  One input
+    partition per side, so the rows reach the window in input order."""
+    rows = [("a", T0, 1), ("a", T0, 2), ("a", T0 + dt.timedelta(days=1), 3)]
+    probes = [
+        (0, "a", T0),                              # exactly at the tie
+        (1, "a", T0 + dt.timedelta(hours=1)),      # backward / nearest -> tie
+        (2, "a", T0 - dt.timedelta(hours=1)),      # forward / nearest -> tie
+    ]
+    if reverse:
+        rows, probes = rows[::-1], probes[::-1]
+    obs = spark.createDataFrame(rows, "entity_id string, ts timestamp, doc_id long")
+    prb = spark.createDataFrame(probes, "pid long, entity_id string, query_ts timestamp")
+    return prb.coalesce(1), obs.coalesce(1)
 
 
-@pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
-def test_asof_auto_dispatch_row_identical(spark, direction):
-    """asof_join_auto with a hot key must equal the plain JVM path row for
-    row — the hot entity goes through the chunked cogrouped branch (plan-
-    checked), cold keys through the window branch."""
-    from esa_pfa_spark.operators.asof import asof_join_auto
-
-    obs, prb = _skewed(spark)
-    tol = dt.timedelta(days=2)
-    auto = asof_join_auto(
-        prb, obs, direction=direction, tolerance=tol, hot_rows=30
-    )
-    plain = asof_join(prb, obs, direction=direction, tolerance=tol)
-    assert "FlatMapCoGroupsInPandas" in auto._jdf.queryExecution().executedPlan().toString()
-    key = lambda r: (r["entity_id"] or "", r["query_ts"])
-    got = sorted(auto.collect(), key=key)
-    want = sorted(plain.select(*auto.columns).collect(), key=key)
-    assert got == want
-    assert len(got) == prb.count()  # null-key probe survives dispatch
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
 
 
-def test_asof_auto_no_hot_key_uses_window_plan(spark):
-    from esa_pfa_spark.operators.asof import asof_join_auto
-
-    obs, prb = _skewed(spark)
-    out = asof_join_auto(
-        prb, obs, tolerance=dt.timedelta(days=2), hot_rows=10_000
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" not in plan  # pure JVM plan
-    plain = asof_join(prb, obs, tolerance=dt.timedelta(days=2))
-    key = lambda r: (r["entity_id"] or "", r["query_ts"])
-    assert sorted(out.collect(), key=key) == sorted(
-        plain.select(*out.columns).collect(), key=key
-    )
-
-
-def test_asof_auto_hot_without_tolerance_raises(spark):
-    from esa_pfa_spark.operators.asof import asof_join_auto
-
-    obs, prb = _skewed(spark)
-    with pytest.raises(ValueError, match="tolerance"):
-        asof_join_auto(prb, obs, tolerance=None, hot_rows=30)
+@pytest.mark.parametrize("direction,expected", [
+    ("backward", [2, 2, None]),
+    ("forward", [2, 3, 2]),
+    ("nearest", [2, 2, 2]),
+])
+def test_tied_observations_ignore_input_order(spark, direction, expected):
+    """Among observations tied on (key, ts) the match is the greatest
+    payload struct, whatever the input order: doc 2, never doc 1."""
+    outs = []
+    for reverse in (False, True):
+        prb, obs = _tied(spark, reverse)
+        outs.append(_rows(asof_join(prb, obs, payload=["doc_id"], direction=direction)))
+    assert outs[0] == outs[1]
+    assert [r[-1] for r in outs[0]] == expected
 
 
-def test_asof_auto_key_counts_skips_census(spark):
-    """With key_counts supplied, NO job may touch observations at plan
-    time.  Proven with a tripwire: observations carries a Python-UDF
-    filter that raises on execution — building the dispatched plan must
-    not fire it (the same call without key_counts does, via the census
-    collect)."""
+def test_tied_observations_bitemporal_and_lagk(spark):
+    """The bitemporal join resolves the same tie the same way in both
+    input orders, and lag-k's lag1 is asof_join's backward match."""
     from pyspark.sql import functions as F
-    from esa_pfa_spark.operators.asof import asof_join_auto
 
-    obs, prb = _skewed(spark)
+    from esa_pfa_spark.operators.asof import asof_join_bitemporal, asof_lagk_join
 
-    @F.udf("boolean")
-    def _boom(v):
-        raise RuntimeError("census scanned observations")
-
-    trapped = obs.filter(_boom("value"))
-    kc = spark.createDataFrame(
-        [("hot", 60)] + [(f"c{e}", 3) for e in range(20)],
-        "entity_id string, n_rows long",
-    )
-    out = asof_join_auto(
-        prb, trapped, tolerance=dt.timedelta(days=2), hot_rows=30,
-        key_counts=kc,
-    )  # no exception: stats table consulted, observations untouched
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in plan  # hot key found via stats
-    with pytest.raises(Exception, match="census scanned observations"):
-        asof_join_auto(
-            prb, trapped, tolerance=dt.timedelta(days=2), hot_rows=30
+    outs = []
+    for reverse in (False, True):
+        prb, obs = _tied(spark, reverse)
+        bt = asof_join_bitemporal(
+            prb, obs.withColumn("knowledge_ts", F.col("ts")), payload=["doc_id"]
         )
+        outs.append(_rows(bt))
+        back = {r["pid"]: r["doc_id"] for r in asof_join(prb, obs, payload=["doc_id"]).collect()}
+        lag = asof_lagk_join(prb, obs, k=1, value="doc_id").collect()
+        assert {r["pid"]: r["lag1_val"] for r in lag} == back
+    assert outs[0] == outs[1]
+    assert [r[-1] for r in outs[0]] == [2, 2, None]
 
 
-def test_asof_auto_key_counts_row_identical(spark):
-    from esa_pfa_spark.operators.asof import asof_join, asof_join_auto
-
-    obs, prb = _skewed(spark)
-    kc = obs.groupBy("entity_id").count()
-    tol = dt.timedelta(days=2)
-    auto = asof_join_auto(prb, obs, tolerance=tol, hot_rows=30, key_counts=kc)
-    plain = asof_join(prb, obs, tolerance=tol)
-    key = lambda r: (r["entity_id"] or "", r["query_ts"])
-    assert sorted(auto.collect(), key=key) == sorted(
-        plain.select(*auto.columns).collect(), key=key
+def test_map_payload_refused_at_plan_time(spark):
+    """A map cannot be ordered, so it cannot take part in the tie rule:
+    the join refuses it while the plan is built, before any job."""
+    obs = spark.createDataFrame(
+        [("a", T0, {"k": 1})], "entity_id string, ts timestamp, m map<string,int>"
     )
-
-
-def test_asof_auto_sampled_census_row_identical(spark):
-    """census_sample counts a fraction with a lowered threshold: the
-    60-obs hot key clears 30*0.5/2.0=7.5 sampled rows with huge margin;
-    3-obs cold keys cannot reach it even if fully sampled."""
-    from esa_pfa_spark.operators.asof import asof_join, asof_join_auto
-
-    obs, prb = _skewed(spark)
-    tol = dt.timedelta(days=2)
-    auto = asof_join_auto(
-        prb, obs, tolerance=tol, hot_rows=30, census_sample=0.5
-    )
-    assert "FlatMapCoGroupsInPandas" in (
-        auto._jdf.queryExecution().executedPlan().toString()
-    )
-    plain = asof_join(prb, obs, tolerance=tol)
-    key = lambda r: (r["entity_id"] or "", r["query_ts"])
-    assert sorted(auto.collect(), key=key) == sorted(
-        plain.select(*auto.columns).collect(), key=key
-    )
-
-
-def test_asof_auto_bad_key_counts_raises(spark):
-    from esa_pfa_spark.operators.asof import asof_join_auto
-
-    obs, prb = _skewed(spark)
-    bad = obs.select("entity_id", "ts", "value")  # two non-key columns
-    with pytest.raises(ValueError, match="key_counts"):
-        asof_join_auto(
-            prb, obs, tolerance=dt.timedelta(days=2), hot_rows=30,
-            key_counts=bad,
-        )
+    with pytest.raises(ValueError, match="map"):
+        asof_join(_probes(spark), obs, payload=["m"])
 
 
 # ---------------------------------------------------------------------------

@@ -164,3 +164,57 @@ def test_no_vacuous_oracles(ddb):
         if len(ddb.execute(sql).fetchall()) == 0
     ]
     assert not empty, f"vacuous (0-row) oracles: {empty}"
+
+
+def _mirror(spark, tmp_path, events: pd.DataFrame, names: list[str]) -> None:
+    """Write ``events`` as the only table and check each named query
+    against its oracle the way ``test_query_matches_oracle`` does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pq.read_schema(Path(SF_DIR) / "events.parquet").remove_metadata()
+    pq.write_table(pa.Table.from_pandas(events, schema=schema, preserve_index=False),
+                   tmp_path / "events.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{tmp_path / 'events.parquet'}'")
+    try:
+        for name in names:
+            got = QUERIES[name](spark, str(tmp_path)).toPandas()
+            want = con.execute(ORACLES[name]).df()
+            assert len(got) == len(want), f"{name}: rows {len(got)} != {len(want)}"
+            assert _canon(got) == _canon(want), name
+    finally:
+        con.close()
+
+
+def _events(rows) -> pd.DataFrame:
+    t0 = pd.Timestamp("2024-01-10")
+    return pd.DataFrame(
+        [(i, t0 + pd.Timedelta(hours=h), u, et, v, "")
+         for i, (h, u, et, v) in enumerate(rows)],
+        columns=["event_id", "ts", "user_id", "event_type", "value", "props"],
+    )
+
+
+def test_asof_oracles_agree_on_planted_tie(spark, tmp_path):
+    """Observations tied on (user, ts): Spark and every oracle give one
+    row per click, the greatest value (NULL lowest)."""
+    rows = [
+        (0, 1, "purchase", 5.0), (0, 1, "purchase", 9.0), (0, 1, "purchase", None),
+        (2, 1, "error", 3.0), (2, 1, "error", 7.0),
+        (0, 1, "click", 0.0), (1, 1, "click", 0.0), (-1, 1, "click", 0.0),
+        (0, 2, "purchase", None), (0, 2, "purchase", 1.5), (3, 2, "click", 0.0),
+    ]
+    _mirror(spark, tmp_path, _events(rows),
+            ["asof_backward_7d", "asof_forward_1d", "asof_nearest_12h"])
+
+
+def test_percentile_oracles_tie_block_at_edge(spark, tmp_path):
+    """Four purchases tie on the value at the 0.8 decile/quintile edge,
+    where DuckDB's quantile_cont lands an ulp above the tied value
+    (99.98000000000002) and would drop the block a bin; the oracles read
+    Spark's exact percentile instead."""
+    vals = [99.98, 99.98, 99.98, 99.98, 5.3, 58.83, 17.39, 76.78,
+            93.76, 53.83, 0.9, 6.43]
+    rows = [(i, 100 + i, "purchase", v) for i, v in enumerate(vals)]
+    _mirror(spark, tmp_path, _events(rows), ["quantile_bins_10", "rfm_scores_5"])

@@ -491,17 +491,8 @@ def test_decayed_pandas_boundaries_and_nulls(spark):
     _cmp_decay(got, want)
 
 
-def test_decayed_auto_dispatch_and_null_cold_branch(spark):
-    """hot_rows below one key's count -> that key rides the prefix-sum
-    path, the rest (including NULL keys, which isin() would three-value
-    out of both branches) ride the exact band join; the union agrees with
-    the plain band join on everything.  Supplying key_counts gives the
-    identical result without a census over observations."""
-    from esa_pfa_spark.operators.pit import (
-        decayed_pit_auto,
-        decayed_pit_features,
-    )
-
+def _hot_cold(spark):
+    """300 observations under "hot", 30 under "cold", a NULL-key probe."""
     rng = np.random.default_rng(5)
     obs = (
         [("hot", T0 + dt.timedelta(seconds=int(rng.integers(0, 7200))),
@@ -523,13 +514,35 @@ def test_decayed_auto_dispatch_and_null_cold_branch(spark):
     o = spark.createDataFrame(
         pd.DataFrame(obs, columns=["k", "ts", "value", "oid"])
     )
-    kw = dict(on="k", probe_ts="query_ts", obs_ts="ts", value="value",
-              tau=dt.timedelta(minutes=30), cutoff=4.0)
-    want = {r["pid"]: r.asDict()
-            for r in decayed_pit_features(p, o, **kw).collect()}
-    want[999] = {"pid": 999, "n_win": 0, "decay_sum": None,
-                 "decay_wt": None, "decay_mean": None, "k": None,
-                 "query_ts": T0}
+    return p, o
+
+
+_AUTO_KW = dict(on="k", probe_ts="query_ts", obs_ts="ts", value="value",
+                tau=dt.timedelta(minutes=30), cutoff=4.0)
+
+
+def _exact_want(p, o):
+    """The exact band join's rows by pid, plus the NULL-key probe's
+    empty row (the band join's equi-join drops that probe)."""
+    from esa_pfa_spark.operators.pit import decayed_pit_features
+
+    want = {r["pid"]: r.asDict() for r in decayed_pit_features(p, o, **_AUTO_KW).collect()}
+    want[999] = {"pid": 999, "n_win": 0, "decay_sum": None, "decay_wt": None,
+                 "decay_mean": None, "k": None, "query_ts": T0}
+    return want
+
+
+def test_decayed_auto_dispatch_and_null_cold_branch(spark):
+    """hot_rows below one key's count -> that key rides the prefix-sum
+    path, the rest (including NULL keys, which isin() would three-value
+    out of both branches) ride the exact band join; the union agrees with
+    the plain band join on everything.  Supplying key_counts gives the
+    identical result without a census over observations."""
+    from esa_pfa_spark.operators.pit import decayed_pit_auto
+
+    p, o = _hot_cold(spark)
+    kw = _AUTO_KW
+    want = _exact_want(p, o)
     got = {r["pid"]: r.asDict()
            for r in decayed_pit_auto(p, o, hot_rows=100, **kw).collect()}
     assert 999 in got and got[999]["n_win"] == 0        # not dropped
@@ -545,6 +558,34 @@ def test_decayed_auto_dispatch_and_null_cold_branch(spark):
             for r in decayed_pit_auto(
                 p, o, hot_rows=10**9, **kw).collect()}
     assert got3 == want
+
+
+def test_route_hot_keys_sampled_census_decay_pair(spark):
+    """The router's sampled census over the decay pair: census_sample
+    counts half the rows against hot_rows * 0.5 / 2.0 = 50, which the
+    300-row key clears (~150 sampled) and the 30-row key never reaches;
+    the routed result agrees with the exact band join."""
+    from esa_pfa_spark.operators.pit import decayed_pit_features, decayed_pit_pandas
+    from esa_pfa_spark.skew import route_hot_keys
+
+    p, o = _hot_cold(spark)
+    out = route_hot_keys(
+        p, o, "k", 200,
+        cold=lambda a, b: decayed_pit_features(a, b, **_AUTO_KW),
+        hot=lambda a, b: decayed_pit_pandas(a, b, **_AUTO_KW),
+        census_sample=0.5,
+    )
+    assert "FlatMapCoGroupsInPandas" in out._jdf.queryExecution().executedPlan().toString()
+    _cmp_decay({r["pid"]: r.asDict() for r in out.collect()}, _exact_want(p, o))
+
+
+def test_decayed_auto_bad_key_counts_raises(spark):
+    from esa_pfa_spark.operators.pit import decayed_pit_auto
+
+    p, o = _hot_cold(spark)
+    bad = o.select("k", "ts", "value")  # two non-key columns
+    with pytest.raises(ValueError, match="key_counts"):
+        decayed_pit_auto(p, o, hot_rows=100, key_counts=bad, **_AUTO_KW)
 
 
 # ---------------------------------------------------------------------------
@@ -627,10 +668,9 @@ def test_decayed_multi_rejects_zero_horizon(spark):
 
 def test_decayed_auto_key_counts_skips_census(spark):
     """With key_counts supplied, NO job may touch observations at plan
-    time (the decay twin of test_asof_auto_key_counts_skips_census): a
-    Python-UDF filter on observations raises if executed; building the
-    dispatched plan must not fire it, and the same call without
-    key_counts does, via the census collect."""
+    time: a Python-UDF filter on observations raises if executed;
+    building the dispatched plan must not fire it, and the same call
+    without key_counts does, via the census collect."""
     from esa_pfa_spark.operators.pit import decayed_pit_auto
 
     obs = [("hot", T0 + dt.timedelta(minutes=i), float(i), i) for i in range(40)]

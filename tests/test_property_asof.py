@@ -19,7 +19,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from esa_pfa_spark.operators.asof import asof_join, asof_join_pandas
+from esa_pfa_spark.operators.asof import asof_join
 
 BASE = dt.datetime(2024, 1, 1)
 
@@ -59,30 +59,36 @@ def _frames(spark, obs_rows, probe_rows):
     )
 
 
-def _oracle_backward(obs, probes, tol_s):
+def _oracle(obs, probes, tol_s, direction):
+    """Brute force per probe: the in-tolerance observations on the
+    direction's side, closest first (nearest: |dt| ties to the earlier),
+    observations tied on ts to the greatest value."""
     rows = []
     for _, pr in probes.iterrows():
-        g = obs[(obs.entity_id == pr.entity_id) & (obs.ts <= pr.query_ts)]
-        match_ts, match_val = pd.NaT, None
-        if len(g):
-            cand = g.sort_values(["ts"], kind="mergesort").iloc[-1]
-            if (pr.query_ts - cand.ts).total_seconds() <= tol_s:
-                match_ts, match_val = cand.ts, cand.val
+        g = obs[obs.entity_id == pr.entity_id]
+        lag = (pr.query_ts - pd.to_datetime(g.ts)).dt.total_seconds()  # > 0: before
+        keep = lag.abs() <= tol_s
+        if direction == "backward":
+            keep &= lag >= 0
+        elif direction == "forward":
+            keep &= lag <= 0
+        g = g[keep].assign(dist=lag[keep].abs()).sort_values(
+            ["dist", "ts", "val"], ascending=[True, True, False], kind="mergesort"
+        )
+        match_ts, match_val = (g.ts.iloc[0], g.val.iloc[0]) if len(g) else (pd.NaT, None)
         rows.append((pr.pid, match_ts, match_val))
     return rows
 
 
-@given(obs_rows=timeline, probe_rows=timeline, tol=st.integers(min_value=0, max_value=600))
-@settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
-def test_asof_backward_matches_bruteforce_oracle(spark, obs_rows, probe_rows, tol):
+def _check_against_oracle(spark, obs_rows, probe_rows, tol, direction):
     sobs, sprobes, obs, probes = _frames(spark, obs_rows, probe_rows)
     out = asof_join(
         sprobes, sobs, on="entity_id", probe_ts="query_ts", obs_ts="ts",
-        payload=["val"], direction="backward", tolerance=dt.timedelta(seconds=tol),
+        payload=["val"], direction=direction, tolerance=dt.timedelta(seconds=tol),
     ).toPandas()
     assert len(out) == len(probes)  # probes never dropped
     got = {r.pid: (r.matched_ts, r.val) for r in out.itertuples()}
-    for pid, want_ts, want_val in _oracle_backward(obs, probes, tol):
+    for pid, want_ts, want_val in _oracle(obs, probes, tol, direction):
         gts, gval = got[pid]
         if pd.isna(want_ts):
             assert pd.isna(gts), f"pid {pid}: expected no match, got {gts}"
@@ -91,21 +97,22 @@ def test_asof_backward_matches_bruteforce_oracle(spark, obs_rows, probe_rows, to
             assert gval == want_val
 
 
-@given(obs_rows=timeline, probe_rows=timeline, tol=st.integers(min_value=1, max_value=300))
+@given(obs_rows=timeline, probe_rows=timeline, tol=st.integers(min_value=0, max_value=600))
+@settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
+def test_asof_backward_matches_bruteforce_oracle(spark, obs_rows, probe_rows, tol):
+    _check_against_oracle(spark, obs_rows, probe_rows, tol, "backward")
+
+
+@given(obs_rows=timeline, probe_rows=timeline, tol=st.integers(min_value=0, max_value=600))
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-def test_asof_pandas_chunked_equals_unchunked(spark, obs_rows, probe_rows, tol):
-    """Hot-key time-slicing must be invisible in the result."""
-    sobs, sprobes, _, probes = _frames(spark, obs_rows, probe_rows)
-    kw = dict(
-        on="entity_id", probe_ts="query_ts", obs_ts="ts",
-        payload=["val"], direction="backward", tolerance=dt.timedelta(seconds=tol),
-    )
-    plain = asof_join_pandas(sprobes, sobs, **kw).toPandas()
-    chunked = asof_join_pandas(sprobes, sobs, chunk=dt.timedelta(seconds=max(tol // 3, 1)), **kw).toPandas()
-    key = ["pid"]
-    a = plain.sort_values(key, kind="mergesort").reset_index(drop=True)
-    b = chunked.sort_values(key, kind="mergesort").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a[sorted(a.columns)], b[sorted(b.columns)])
+def test_asof_forward_matches_bruteforce_oracle(spark, obs_rows, probe_rows, tol):
+    _check_against_oracle(spark, obs_rows, probe_rows, tol, "forward")
+
+
+@given(obs_rows=timeline, probe_rows=timeline, tol=st.integers(min_value=0, max_value=600))
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+def test_asof_nearest_matches_bruteforce_oracle(spark, obs_rows, probe_rows, tol):
+    _check_against_oracle(spark, obs_rows, probe_rows, tol, "nearest")
 
 
 @given(obs_rows=timeline, probe_rows=timeline, tol=st.integers(min_value=0, max_value=600))
